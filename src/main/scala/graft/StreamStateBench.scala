@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
-import graft.model.LogRecord
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming state-at-scale bench: the dedup operator's RocksDB state
   * path under a key population two orders of magnitude beyond what the
@@ -9,16 +8,17 @@ import graft.model.LogRecord
   * ids; 100 TB streaming is STATE-bound, not record-bound).
   *
   * Protocol: N distinct exception ids (default 10⁷) stream through
-  * [[graft.streaming.DedupStreamTWS]] — the Spark-4 `transformWithState`
-  * window store with event-time retention timers — from a parquet file
-  * source at one file per micro-batch (the recoverable-source pattern
-  * from CupedStreamSpec), all event times inside one retention window so
-  * every key stays LIVE. Recorded per batch from StreamingQueryProgress:
-  * trigger wall time, state rows, update/commit times, state memory, and
-  * the RocksDB SST footprint; then the query STOPS and a fresh query
-  * restarts from the checkpoint — the restore figure is the wall time to
-  * load 10⁷-key RocksDB state and process one more batch. Output: ONE
-  * JSON line.
+  * [[graft.streaming.Pipelines.dedupPipeline]] — the T2
+  * `flatMapGroupsWithState` window store with an event-time retention
+  * timeout — as Kafka-shaped frames (`key`, JSON `value`, `timestamp`)
+  * from a parquet file source at one file per micro-batch (the
+  * recoverable-source pattern from CupedStreamSpec), all event times
+  * inside one retention window so every key stays LIVE. Recorded per
+  * batch from StreamingQueryProgress: trigger wall time, state rows,
+  * update/commit times, state memory, and the RocksDB SST footprint;
+  * then the query STOPS and a fresh query restarts from the checkpoint —
+  * the restore figure is the wall time to load 10⁷-key RocksDB state and
+  * process one more batch. Output: ONE JSON line.
   *
   * Field semantics (every duration from StreamingQueryProgress):
   * `batch_ms_*` = triggerExecution WALL time per micro-batch;
@@ -37,7 +37,7 @@ import graft.model.LogRecord
   * advance. 0 keeps every key inside one retention window (pure-growth
   * run); setting it to a fraction of the 600 s retention makes the
   * watermark CROSS retention boundaries as batches progress, so
-  * expiry timers actually fire and the run measures eviction cost at
+  * state timeouts actually fire and the run measures eviction cost at
   * scale (state plateaus at ~retention/spread batches' worth of keys).
   */
 object StreamStateBench {
@@ -69,7 +69,6 @@ object StreamStateBench {
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
-    import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("graft_statebench").toString
     val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
@@ -80,7 +79,7 @@ object StreamStateBench {
     // array); all ids distinct -> every key becomes live dedup state;
     // spreadUs = 0 keeps all event times within one retention window
     // (nothing expires); spreadUs > 0 advances event time per batch so
-    // old keys cross their retention timers and evict
+    // old keys cross their retention timeouts and evict
     def writeBatch(b: Long): Unit =
       spark.range(b * perBatch, (b + 1) * perBatch)
         .selectExpr(
@@ -98,15 +97,17 @@ object StreamStateBench {
             |  'level', 'ERROR',
             |  'logger_name', CAST(NULL AS STRING)) AS event""".stripMargin,
           s"$baseUs + $b * ${spreadUs}L + id % 1000 AS event_time_us")
+        .selectExpr("key", "to_json(event) AS value",
+          "timestamp_micros(event_time_us) AS timestamp")
         .coalesce(1)
         .write.mode("append").parquet(src)
 
     def startQuery() =
-      graft.streaming.DedupStreamTWS.dedupLogRecords(
-          spark.readStream.schema(Encoders.product[LogRecord].schema)
-            .option("maxFilesPerTrigger", "1").parquet(src).as[LogRecord])
+      graft.streaming.Pipelines.dedupPipeline(
+          spark.readStream.schema("key STRING, value STRING, timestamp TIMESTAMP")
+            .option("maxFilesPerTrigger", "1").parquet(src))
         .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[LogRecord], _: Long) =>
+        .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.format("noop").mode("overwrite").save(): Unit
         }
         .option("checkpointLocation", ckpt).outputMode("append").start()

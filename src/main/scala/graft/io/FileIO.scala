@@ -140,7 +140,7 @@ object FileIO {
     */
   def zorderWriteQuantile(df: DataFrame, path: String, numFiles: Int,
                           cols: Seq[String], buckets: Int = 256): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col, expr, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, expr}
     graft.functions.ZValue.register(df.sparkSession)
     val qs = (1 until buckets).map(_.toDouble / buckets)
     val aggs = cols.map(c =>

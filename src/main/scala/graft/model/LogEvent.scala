@@ -40,10 +40,3 @@ object LogEvent {
     StructField("level", StringType, nullable = true),
     StructField("logger_name", StringType, nullable = true)))
 }
-
-/** A keyed, timestamped envelope around LogEvent — the Spark analogue of
-  * the reference's `KStream<String, LogEvent>` record (key, value,
-  * record-timestamp). `event_time_us` is epoch-micros (the Kafka source's
-  * `timestamp` column cast down).
-  */
-case class LogRecord(key: Option[String], event: Option[LogEvent], event_time_us: Long)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{CacheScope, Tables}
-import graft.functions.{CosineSimilarity, TextFns}
+import graft.functions.CosineSimilarity
 import graft.functions.TextFns.h32Sql
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column).

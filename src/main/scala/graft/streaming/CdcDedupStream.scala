@@ -18,7 +18,7 @@ import graft.operators.DedupOps
   * Output mode Complete (the spec) or Update (production, emit only
   * touched digests). State is one row per DISTINCT chunk — unbounded
   * like the batch table it mirrors; a long-lived deployment ages it
-  * with a TTL-keyed `transformWithState` (the [[DedupStreamTWS]]
+  * with an event-time state timeout (the [[DedupStream]] retention
   * recipe) or periodic compaction to the batch table.
   *
   * The combinator is batch/stream agnostic (narrow HOFs + one keyed

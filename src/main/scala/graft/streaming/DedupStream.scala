@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.model.LogRecord
+import org.apache.spark.sql.types.{StructField, StructType}
+import graft.model.LogEvent
+import graft.serde.JsonCodec
 
 /** Exact windowed deduplication — the Spark-native re-implementation of the
   * reference's `DeduplicationTransformer` (SURVEY.md §2.4; reference
@@ -28,48 +30,49 @@ import graft.model.LogRecord
   * `spark.sql.shuffle.partitions` instead of fixed topic partitions. At
   * 100 TB / high key cardinality, state per executor = |live ids| / shards ×
   * 8 bytes, checkpointed incrementally (RocksDB provider recommended —
-  * `spark.sql.streaming.stateStore.providerClass`).
+  * [[StateStores.useRocksDB]]).
   *
   * Watermark honesty (documented divergence, SURVEY.md §2.5): rows later
   * than the watermark are dropped by Spark before reaching the operator,
   * whereas Kafka Streams processes arbitrarily late records. Within the
   * watermark the two-sided probe is reproduced by comparing |t_stored − t|.
   */
-/** Slim carrier for the high-throughput frame path: raw payload forwarded
-  * verbatim, only the dedup id and event time materialized.
+/** Slim carrier for the frame path: raw payload forwarded verbatim, only
+  * the dedup id and event time materialized.
   */
 case class SlimFrame(key: String, value: String, id: String, ts_us: Long)
-
-/** Carrier for the hot-key pre-suppression path: event time rides as a
-  * typed field so the watermark can be (re)applied after the
-  * `mapPartitions` boundary (typed maps drop column metadata).
-  */
-case class MarkedFrame(key: String, value: String, id: String, ts_us: Long,
-                       timestamp: java.sql.Timestamp)
 
 object DedupStream {
 
   val DefaultWindowUs: Long = 10L * 60 * 1000000 // 10 min, reference :135
   val DefaultRetentionUs: Long = 10L * 60 * 1000000
 
-  private def idOf(r: LogRecord): String =
-    r.event.flatMap(_.exception).flatMap(_.exception_class).orNull
-
-  /** Per-key, per-micro-batch transition function (generic in the carrier
-    * type; `tsOf` extracts event-time µs). Events in a batch are processed
-    * in event-time order (the reference sees them in offset order; for
-    * in-order streams these agree — out-of-order records within a batch
-    * are handled deterministically by the sort).
+  /** Hand-pruned parse schema: only the dedup-id path. Catalyst's
+    * OptimizeJsonExprs would prune `from_json(...).getField` chains
+    * automatically, but ONLY when the parse has no options — threading
+    * the FAILFAST mode through the optimizer-pruned form silently
+    * re-parsed the full payload per record (measured: 24k → 16k rec/s).
+    * FAILFAST over the pruned schema still fails malformed JSON
+    * (Jackson-parity); type errors confined to never-read fields pass —
+    * documented divergence, and the price of not decoding bytes nobody
+    * reads.
     */
-  private def transition[T](windowUs: Long, retentionUs: Long, tsOf: T => Long,
-                            streamTime: Boolean = false)(
-      id: String, rows: Iterator[T],
-      state: GroupState[Long]): Iterator[T] = {
+  private val IdSchema: StructType = StructType(Seq(StructField("exception",
+    StructType(LogEvent.exceptionSchema.fields.filter(_.name == "exception_class")))))
+
+  /** Per-key, per-micro-batch transition function. Events in a batch are
+    * processed in event-time order (the reference sees them in offset
+    * order; for in-order streams these agree — out-of-order records within
+    * a batch are handled deterministically by the sort).
+    */
+  private def transition(windowUs: Long, retentionUs: Long, streamTime: Boolean)(
+      id: String, rows: Iterator[SlimFrame],
+      state: GroupState[Long]): Iterator[SlimFrame] = {
     if (state.hasTimedOut) {
       state.remove()
       Iterator.empty
     } else {
-      val sorted = rows.toSeq.sortBy(tsOf)
+      val sorted = rows.toSeq.sortBy(_.ts_us)
       var last: Option[Long] = state.getOption
       // T2' stream-time axis: max timestamp observed so far for this key.
       // Scoped per key (the natural unit in a key-partitioned engine; the
@@ -82,8 +85,8 @@ object DedupStream {
         // T2 (record time, reference KStreamDistinct.java:87) uses the
         // record's own timestamp; T2' (stream time, _example.java:65) uses
         // the max timestamp observed so far
-        maxSeen = math.max(maxSeen, tsOf(r))
-        val t = if (streamTime) maxSeen else tsOf(r)
+        maxSeen = math.max(maxSeen, r.ts_us)
+        val t = if (streamTime) maxSeen else r.ts_us
         val isDup = last.exists(l => math.abs(t - l) <= windowUs / 2)
         last = Some(t) // store/refresh in both branches (:77, :80)
         !isDup
@@ -100,9 +103,15 @@ object DedupStream {
     }
   }
 
-  /** Dedup a LogRecord stream (or batch Dataset — same code path, state
-    * machinery inert). Null-id records bypass the stateful operator
-    * entirely (no shuffle for them beyond the union).
+  /** Frame-level dedup, streaming or batch (same code path; the state
+    * machinery is inert on a batch DataFrame). The payload is forwarded
+    * verbatim (the reference's dedup never transforms values), so only the
+    * dedup id is parsed out of the JSON and nothing is re-encoded. Null-id
+    * records bypass the stateful operator entirely (no shuffle for them
+    * beyond the union).
+    *
+    * Input: a Kafka-shaped frame (`key`, `value`, `timestamp`); output the
+    * same two columns, duplicates dropped.
     *
     * `streamTime = false` is T2 (record time, reference
     * `KStreamDistinct.java:87`); `streamTime = true` is T2' (stream time =
@@ -111,133 +120,35 @@ object DedupStream {
     * modes disagree (a late record is compared/stored at stream time, not
     * its own time).
     */
-  def dedupLogRecords(ds: Dataset[LogRecord],
-                      windowUs: Long = DefaultWindowUs,
-                      retentionUs: Long = DefaultRetentionUs,
-                      streamTime: Boolean = false): Dataset[LogRecord] = {
-    import ds.sparkSession.implicits._
-    val withTs = ds
-      .withColumn("__ts", timestamp_micros(col("event_time_us")))
-      .withWatermark("__ts", "10 minutes")
-    val hasId = withTs
-      .filter(col("event.exception.exception_class").isNotNull)
-      .as[LogRecord]
-    val noId = withTs
-      .filter(col("event.exception.exception_class").isNull)
-      .drop("__ts") // union partner must match the operator's clean schema
-      .as[LogRecord]
-    val deduped = hasId
-      .groupByKey(idOf)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        transition[LogRecord](windowUs, retentionUs, _.event_time_us, streamTime))
-    deduped.union(noId)
-  }
-
-  /** High-throughput frame-level dedup: the payload is forwarded verbatim
-    * (the reference's dedup never transforms values), so only the dedup id
-    * is parsed out of the JSON — Catalyst's `OptimizeJsonExprs` prunes the
-    * `from_json` to that single nested field — and nothing is re-encoded.
-    * Input: a Kafka-shaped frame (`key`, `value`, `timestamp`); output the
-    * same two columns, duplicates dropped.
-    */
-  def dedupFrames(frames: DataFrame, schema: org.apache.spark.sql.types.StructType,
+  def dedupFrames(frames: DataFrame,
                   windowUs: Long = DefaultWindowUs,
                   retentionUs: Long = DefaultRetentionUs,
                   streamTime: Boolean = false,
-                  mode: graft.serde.JsonCodec.Mode = graft.serde.JsonCodec.FailFast,
-                  preSuppress: Boolean = false): DataFrame = {
+                  mode: JsonCodec.Mode = JsonCodec.FailFast): DataFrame = {
     val spark = frames.sparkSession
     import spark.implicits._
-    // Hand-pruned parse schema: only the dedup-id path. Catalyst's
-    // OptimizeJsonExprs would prune `from_json(...).getField` chains
-    // automatically, but ONLY when the parse has no options — threading
-    // the FAILFAST mode through the optimizer-pruned form silently
-    // re-parsed the full payload per record (measured: 24k → 16k rec/s).
-    // FAILFAST over the pruned schema still fails malformed JSON
-    // (Jackson-parity); type errors confined to never-read fields pass —
-    // documented divergence, and the price of not decoding bytes nobody
-    // reads.
-    val prunedSchema = {
-      import org.apache.spark.sql.types.{StructField, StructType}
-      schema.fields.find(_.name == "exception").map(_.dataType) match {
-        case Some(ex: StructType) =>
-          StructType(Seq(StructField("exception", StructType(
-            ex.fields.filter(_.name == "exception_class")))))
-        case _ => schema // no exception struct: parse as declared
-      }
-    }
     val decoded = frames
       .select(
         col("key").cast("string").as("key"),
         col("value").cast("string").as("value"),
-        from_json(col("value").cast("string"), prunedSchema,
+        from_json(col("value").cast("string"), IdSchema,
           Map("mode" -> mode.sparkMode))
           .getField("exception").getField("exception_class").as("id"),
         unix_micros(col("timestamp")).as("ts_us"),
         col("timestamp"))
     val noId = decoded.filter(col("id").isNull)
       .select(col("key"), col("value"))
-    val deduped =
-      if (preSuppress) {
-        // Hot-key path: the dedup id is low-cardinality (the reference keys
-        // on exception_class), so the stateful shuffle concentrates hot ids
-        // on single tasks. Records that are provably duplicates already
-        // within their input partition forward as payload-free REFRESH
-        // MARKERS (value = null): their timestamp must still reach the
-        // state (suppressed duplicates extend the window — rocking-horse),
-        // but their payload bytes — the bulk of the shuffle — need not.
-        // See SCALE.md §dedup-skew for why outright dropping them would be
-        // incorrect.
-        decoded.filter(col("id").isNotNull)
-          .select(col("key"), col("value"), col("id"), col("ts_us"), col("timestamp"))
-          .as[MarkedFrame]
-          .mapPartitions(markLocalDups(windowUs / 2))
-          .withWatermark("timestamp", "10 minutes")
-          .groupByKey(_.id)
-          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-            transition[MarkedFrame](windowUs, retentionUs, _.ts_us, streamTime))
-          .select(col("key"), col("value"))
-          // markers can only surface if their strictly-earlier witness was
-          // dropped as late data; in reference semantics (no watermark)
-          // they are duplicates, so suppress them here too
-          .filter(col("value").isNotNull)
-      } else {
-        decoded.filter(col("id").isNotNull)
-          .withWatermark("timestamp", "10 minutes")
-          // keep `timestamp` physically present so the watermark column
-          // reaches the stateful operator (the typed view ignores it)
-          .select(col("key"), col("value"), col("id"), col("ts_us"), col("timestamp"))
-          .as[SlimFrame]
-          .groupByKey(_.id)
-          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-            transition[SlimFrame](windowUs, retentionUs, _.ts_us, streamTime))
-          .select(col("key"), col("value"))
-      }
+    val deduped = decoded.filter(col("id").isNotNull)
+      .withWatermark("timestamp", "10 minutes")
+      // keep `timestamp` physically present so the watermark column
+      // reaches the stateful operator (the typed view ignores it)
+      .select(col("key"), col("value"), col("id"), col("ts_us"), col("timestamp"))
+      .as[SlimFrame]
+      .groupByKey(_.id)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        transition(windowUs, retentionUs, streamTime))
+      .select(col("key"), col("value"))
     deduped.unionByName(noId)
-  }
-
-  /** Per-input-partition pre-suppression (map-side "combine" for dedup):
-    * a record with a strictly-earlier same-id record within window/2 IN
-    * THE SAME PARTITION is a duplicate under any global interleaving (its
-    * global predecessor can only be closer), so its payload is elided —
-    * value = null — while its timestamp is forwarded as a refresh marker.
-    * Records are NOT dropped: refresh-on-duplicate makes suppression
-    * non-associative (a dropped duplicate loses its window extension).
-    * Tracking one max-timestamp per id bounds memory at |live ids per
-    * partition| and catches the in-order duplicate floods that cause the
-    * skew; out-of-order records simply pass unmarked (correctness never
-    * depends on marking).
-    */
-  private def markLocalDups(halfWindowUs: Long)(
-      it: Iterator[MarkedFrame]): Iterator[MarkedFrame] = {
-    val maxSeen = scala.collection.mutable.HashMap.empty[String, Long]
-    it.map { f =>
-      val prior = maxSeen.get(f.id)
-      if (prior.forall(_ < f.ts_us)) maxSeen.update(f.id, f.ts_us)
-      if (prior.exists(q => q < f.ts_us && f.ts_us - q <= halfWindowUs))
-        f.copy(value = null)
-      else f
-    }
   }
 
   /** Tier-1 approximate dedup for arbitrary DataFrames: built-in

@@ -25,7 +25,7 @@ case class FunnelUpdate(user_id: Long, times: Array[Long])
   * with ts > times(i-1), and never changes once set.
   *
   * Within a micro-batch, events are sorted by event time before the fold
-  * (same discipline as [[DedupProcessor]]); across batches the machine
+  * (same discipline as [[DedupStream]]); across batches the machine
   * applies events in arrival order, so the result equals the batch funnel
   * whenever each user's events arrive in event-time order across batches
   * (in-batch disorder is always repaired). A stage-changing late event is
@@ -69,8 +69,9 @@ class FunnelProcessor(stages: Seq[String], ttl: TTLConfig = TTLConfig.NONE)
 object FunnelStream {
 
   /** n-stage funnel over a stream of [[FunnelEvent]]s; emits a
-    * [[FunnelUpdate]] whenever a user's funnel advances. Requires (and
-    * sets) the RocksDB state store provider, like [[DedupStreamTWS]].
+    * [[FunnelUpdate]] whenever a user's funnel advances. Requires the
+    * RocksDB state store provider; callers opt in with
+    * [[StateStores.useRocksDB]].
     */
   def funnel(ds: Dataset[FunnelEvent], stages: Seq[String]): Dataset[FunnelUpdate] = {
     val spark = ds.sparkSession

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.model.{LogEvent, LogRecord}
+import graft.model.LogEvent
 import graft.serde.JsonCodec
 
 /** The reference's two topologies as source-agnostic `DataFrame =>
@@ -37,11 +37,9 @@ object Pipelines {
                     mode: JsonCodec.Mode = JsonCodec.FailFast,
                     streamTime: Boolean = false): DataFrame =
     // frame-level path: payloads forwarded verbatim, only the dedup id is
-    // parsed (single-field JSON prune); the typed Dataset[LogRecord] path
-    // remains available via DedupStream.dedupLogRecords. streamTime=true
-    // selects the T2' axis (reference KStreamDistinct_example.java:65).
-    DedupStream.dedupFrames(frames, LogEvent.schema, windowUs, retentionUs,
-        streamTime, mode)
+    // parsed (single-field JSON prune). streamTime=true selects the T2'
+    // axis (reference KStreamDistinct_example.java:65).
+    DedupStream.dedupFrames(frames, windowUs, retentionUs, streamTime, mode)
       .select(col("key").cast("binary").as("key"),
         col("value").cast("binary").as("value"))
 }
@@ -113,10 +111,8 @@ object DedupApp {
   def main(args: Array[String]): Unit = {
     val props = KafkaIO.loadProperties(args(0))
     graft.io.KafkaAdmin.createTopics(props) // S6 parity (reference :200, :155-170)
-    val spark = SparkSession.builder().appName("graft-dedup")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
+    val spark = SparkSession.builder().appName("graft-dedup").getOrCreate()
+    StateStores.useRocksDB(spark)
     val out = Pipelines.dedupPipeline(
       KafkaIO.source(spark, props.getProperty("bootstrap.servers"),
         props.getProperty("input.topic.name")))

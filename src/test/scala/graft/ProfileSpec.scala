@@ -28,8 +28,6 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("profile is a single job over the input (no per-column scans)") {
-    val s = spark
-    import s.implicits._
     val df = spark.range(0, 1000).selectExpr("id", "id % 7 AS k", "CAST(id AS STRING) AS s")
     val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     val rows = Relational.profile(df).collect()

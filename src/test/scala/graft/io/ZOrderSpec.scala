@@ -1,6 +1,5 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.ZValue
@@ -46,8 +45,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("quantile z-order keeps pruning a heavy-tailed dimension where min/max scaling collapses") {
-    val s = spark
-    import s.implicits._
     // dim x: dense mass in [0, 1000] with a 10^9 outlier tail -> min/max
     // scaling puts ~all rows in one x-bucket; dim y: uniform
     val src = spark.range(0, 60000).select(

@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSpec
-import graft.model.{ExceptionInfo, LogEvent, LogRecord}
+import graft.model.{ExceptionInfo, LogEvent}
 
-/** Property tests (SURVEY.md §5.2.4): the distributed operator must agree
-  * with a single-threaded Scala transcription of the reference algorithm
-  * (`KStreamDistinct.java:69-103`) on arbitrary in-order event sequences.
+/** Property tests (SURVEY.md §5.2.4): the distributed operator — the
+  * shipped [[Pipelines.dedupPipeline]] over Kafka-shaped frames — must
+  * agree with a single-threaded Scala transcription of the reference
+  * algorithm (`KStreamDistinct.java:69-103`) on arbitrary event sequences.
   */
 class DedupPropertySpec extends SparkSpec {
 
@@ -53,17 +53,13 @@ class DedupPropertySpec extends SparkSpec {
     ids.zip(times).map { case (id, t) => rec(id, t) }
   }
 
+  private def idAndTime(r: LogRecord): (String, Long) =
+    (r.event.flatMap(_.exception).flatMap(_.exception_class).getOrElse(""), r.event_time_us)
+
   test("distributed dedup == reference model on arbitrary in-order sequences") {
-    val s = spark
-    import s.implicits._
     checkProp(Prop.forAll(genEvents) { events =>
-      val expect = referenceModel(events)
-        .map(r => (r.event.flatMap(_.exception).flatMap(_.exception_class), r.event_time_us))
-        .sorted(Ordering.by((x: (Option[String], Long)) => (x._1.getOrElse(""), x._2)))
-      val got = DedupStream.dedupLogRecords(spark.createDataset(events))
-        .collect().toSeq
-        .map(r => (r.event.flatMap(_.exception).flatMap(_.exception_class), r.event_time_us))
-        .sorted(Ordering.by((x: (Option[String], Long)) => (x._1.getOrElse(""), x._2)))
+      val expect = referenceModel(events).map(idAndTime).sorted
+      val got = DedupFrames.dedupBatch(spark, events).map(idAndTime).sorted
       got == expect
     })
   }
@@ -91,9 +87,6 @@ class DedupPropertySpec extends SparkSpec {
   }
 
   test("streaming T2'/T2 match their reference models on seeded out-of-order multi-batch input") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val Base = 86400L * 1000000 // past the epoch-0 initial watermark
     val Min = 60L * 1000000
     val rnd = new scala.util.Random(42)
@@ -115,27 +108,35 @@ class DedupPropertySpec extends SparkSpec {
       }
     }
 
-    def runStreaming(batches: Seq[Seq[LogRecord]], streamTime: Boolean): Seq[Long] = {
-      val input = MemoryStream[LogRecord]
-      val out = DedupStream.dedupLogRecords(input.toDS(), streamTime = streamTime)
-      val qn = s"prop_st_${System.nanoTime()}"
-      val q = out.toDF().writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        batches.foreach { b => input.addData(b); q.processAllAvailable() }
-        spark.table(qn).selectExpr("event_time_us").collect().map(_.getLong(0)).toSeq.sorted
-      } finally q.stop()
+    // Hot-key scenario: 120 distinct timestamps 15 s apart, shuffled within
+    // 75 s blocks (out of order inside a batch but never watermark-late),
+    // ~70% on hot id "H", streamed in 40-record batches.
+    val hotKey = {
+      val rnd = new scala.util.Random(7)
+      val perm = (0 until 120).map(k => Base + k * 15000000L)
+        .grouped(5).flatMap(g => rnd.shuffle(g)).toSeq
+      perm.map { ts =>
+        val id = if (rnd.nextInt(10) < 7) "H" else s"C${rnd.nextInt(3)}"
+        rec(Some(id), ts)
+      }.grouped(40).toSeq
     }
 
-    scenarios.foreach { batches =>
+    def runStreaming(batches: Seq[Seq[LogRecord]], streamTime: Boolean): Seq[(String, Long)] =
+      DedupFrames.dedupStreaming(spark, batches, streamTime = streamTime)
+        .map(idAndTime).sorted
+
+    (scenarios :+ hotKey).foreach { batches =>
       // processing order inside the operator = event-time sort per batch —
       // feed the single-threaded models the same order
       val arrival = batches.flatMap(_.sortBy(_.event_time_us))
-      val expectT2 = referenceModel(arrival).map(_.event_time_us).sorted
-      val expectT2p = referenceModelStreamTime(arrival).map(_.event_time_us).sorted
+      val expectT2 = referenceModel(arrival).map(idAndTime).sorted
+      val expectT2p = referenceModelStreamTime(arrival).map(idAndTime).sorted
       assert(runStreaming(batches, streamTime = false) == expectT2, s"T2 mismatch: $batches")
       assert(runStreaming(batches, streamTime = true) == expectT2p, s"T2' mismatch: $batches")
     }
+    val hotExpect = referenceModel(hotKey.flatMap(_.sortBy(_.event_time_us)))
+    assert(hotExpect.nonEmpty && hotExpect.size < hotKey.flatten.size,
+      "the hot-key scenario must actually suppress")
   }
 
   test("batch dedup twin (EventOps.dedupWindowed) agrees on single-key in-order input") {

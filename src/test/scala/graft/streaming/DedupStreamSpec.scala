@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
-import graft.model.{ExceptionInfo, LogEvent, LogRecord}
+import graft.model.{ExceptionInfo, LogEvent}
 
 /** Exact D1 semantics (SURVEY.md §2.4) — the judge-facing correctness
-  * target of the reference's only non-trivial logic.
+  * target of the reference's only non-trivial logic — checked on the
+  * shipped T2 path, [[Pipelines.dedupPipeline]], over Kafka-shaped frames.
   */
 class DedupStreamSpec extends SparkSpec {
 
@@ -23,25 +23,15 @@ class DedupStreamSpec extends SparkSpec {
         logger_name = Some("l"))),
       Base + tUs)
 
+  private def idAndTime(r: LogRecord): (String, Long) =
+    (r.event.flatMap(_.exception).flatMap(_.exception_class).orNull, r.event_time_us)
+
   private def runStreaming(batches: Seq[Seq[LogRecord]],
-                           streamTime: Boolean = false): Seq[(String, Long)] = {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[LogRecord]
-    val out = DedupStream.dedupLogRecords(input.toDS(), streamTime = streamTime).toDF()
-    val qname = s"dedup_out_${System.nanoTime()}"
-    val query = out.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => input.addData(b); query.processAllAvailable() }
-      spark.table(qname)
-        .selectExpr("event.exception.exception_class", "event_time_us")
-        .collect()
-        .map(r => (Option(r.getString(0)).orNull, r.getLong(1)))
-        .toSeq
-    } finally query.stop()
-  }
+                           streamTime: Boolean = false,
+                           windowUs: Long = DedupStream.DefaultWindowUs,
+                           retentionUs: Long = DedupStream.DefaultRetentionUs): Seq[(String, Long)] =
+    DedupFrames.dedupStreaming(spark, batches, windowUs, retentionUs, streamTime)
+      .map(idAndTime)
 
   test("novel ids emit; duplicates within ±window/2 suppress") {
     val got = runStreaming(Seq(Seq(
@@ -99,11 +89,43 @@ class DedupStreamSpec extends SparkSpec {
   }
 
   test("batch Dataset runs through the same operator") {
-    val s = spark
-    import s.implicits._
-    val ds = spark.createDataset(Seq(
+    val got = DedupFrames.dedupBatch(spark, Seq(
       rec("A", 0), rec("A", 2 * Min), rec("B", 0), rec(null, 0)))
-    val got = DedupStream.dedupLogRecords(ds).collect()
     assert(got.length == 3) // A@0, B@0, null passthrough
+  }
+
+  test("RocksDB state store: novel/dup/refresh/null-id semantics across micro-batches") {
+    val got = DedupFrames.withRocksDB(spark) {
+      runStreaming(Seq(
+        Seq(rec("A", 0), rec("A", 4 * Min), rec("A", 8 * Min), // refresh chain
+          rec("B", 0), rec(null, 0), rec(null, 1000)),
+        Seq(rec("A", 14 * Min)))) // 6 min past refreshed 8 min → emits
+    }
+    assert(got.count(_._1 == null) == 2)
+    assert(got.filter(_._1 == "A").map(_._2).toSet == Set(Base, Base + 14 * Min))
+    assert(got.count(_._1 == "B") == 1)
+  }
+
+  test("RocksDB state store: retention expiry drops state, id re-emits after quiescence (reference :135-141)") {
+    // window = 40 min (±20 suppression), retention = 10 min — so expiry is
+    // OBSERVABLE inside the suppression window: without the event-time
+    // timeout dropping state, A@20min (|20−0| ≤ 20) would be suppressed.
+    val got = DedupFrames.withRocksDB(spark) {
+      runStreaming(Seq(
+        Seq(rec("A", 0), rec("C", 0)), // both novel → emit
+        // C refreshes its state (watermark still low, no timeout yet);
+        // B advances the watermark to 25−10 = 15 min > A's 10-min expiry
+        Seq(rec("C", 15 * Min), rec("B", 25 * Min)),
+        Seq(rec("D", 26 * Min)), // A times out; C (refreshed) survives
+        // A re-emits (state dropped after quiescence); C stays suppressed
+        // (|20−15| = 5 ≤ 20 against its refreshed, still-live state)
+        Seq(rec("A", 20 * Min), rec("C", 20 * Min))),
+        windowUs = 40 * Min, retentionUs = 10 * Min)
+    }
+    assert(got.filter(_._1 == "A").map(_._2).toSet == Set(Base, Base + 20 * Min),
+      s"A must re-emit after retention quiescence: $got")
+    assert(got.filter(_._1 == "C").map(_._2) == Seq(Base),
+      s"refreshed C must stay suppressed: $got")
+    assert(got.count(_._1 == "B") == 1 && got.count(_._1 == "D") == 1)
   }
 }

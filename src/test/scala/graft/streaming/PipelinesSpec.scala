@@ -115,42 +115,6 @@ class PipelinesSpec extends SparkSpec {
     assert(vals.count(_.contains("E1")) == 1 && vals.count(_.contains("E3")) == 1)
   }
 
-  test("hot-key pre-suppression (payload-elision markers) is output-identical to the plain path") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rnd = new scala.util.Random(7)
-    val Base = 86400L * 1000L
-    def boom(id: String, i: Int) =
-      s"""{"exception":{"exception_class":"$id","exception_message":"x","stacktrace":"s$i"},"version":1,"level":"ERROR"}"""
-    // 120 distinct timestamps 15 s apart, shuffled within 75 s blocks
-    // (out of order but never watermark-late); ~70% land on hot id "H"
-    val perm = (0 until 120).map(k => Base + k * 15000L)
-      .grouped(5).flatMap(g => rnd.shuffle(g)).toSeq
-    val frames = perm.zipWithIndex.map { case (ts, i) =>
-      val id = if (rnd.nextInt(10) < 7) "H" else s"C${rnd.nextInt(3)}"
-      Frame(s"k$i", boom(id, i), new Timestamp(ts))
-    }
-    val batches = frames.grouped(40).toSeq
-
-    def run(pre: Boolean): Seq[String] = {
-      val input = MemoryStream[Frame]
-      val out = DedupStream.dedupFrames(input.toDF(), LogEvent.schema, preSuppress = pre)
-      val qn = s"presup_${pre}_${System.nanoTime()}"
-      val q = out.writeStream.format("memory").queryName(qn).outputMode("append").start()
-      try {
-        batches.foreach { b => input.addData(b); q.processAllAvailable() }
-        spark.table(qn).select(col("value").cast("string")).collect()
-          .map(_.getString(0)).toSeq.sorted
-      } finally q.stop()
-    }
-
-    val plain = run(pre = false)
-    val marked = run(pre = true)
-    assert(plain.nonEmpty && plain.size < frames.size, "dedup must actually suppress")
-    assert(marked == plain)
-  }
-
   test("JSON codec: null payload → null struct; malformed → null in PERMISSIVE") {
     val s = spark
     import s.implicits._
