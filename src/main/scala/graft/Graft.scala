@@ -7,10 +7,11 @@ import graft.functions.{BloomFns, CharEntropyQ, CosineSimilarity, EditWithin1, J
   * the native codegen'd expressions (`cosine_sim`, `jaccard_sorted`,
   * `intersect_count_sorted`, `bitmap_and_count`, `winnow_fp`, `l2_sq`,
   * `bloom_might_contain`, `ed_within_1`, `z_value`, `simhash32`),
-  * the typed UDAF (`weighted_avg`), and the parquet nanos setting the
-  * `events` table requires. Individual operators also self-register what
-  * they use, so calling this is convenience, not a correctness
-  * prerequisite.
+  * the typed UDAF (`weighted_avg`), the parquet nanos setting the
+  * `events` table requires, and the fork-free `file:` filesystem for
+  * streaming checkpoints ([[graft.io.SpawnFreeLocalFs]]). Individual
+  * operators also self-register what they use, so calling this is
+  * convenience, not a correctness prerequisite.
   */
 object Graft {
 
@@ -32,6 +33,7 @@ object Graft {
       spark.udf.register("weighted_avg",
         org.apache.spark.sql.functions.udaf(graft.functions.WeightedAvg))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.io.SpawnFreeLocalFs.register(spark)
     spark
   }
 }

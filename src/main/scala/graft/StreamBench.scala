@@ -28,9 +28,12 @@ object StreamBench {
       // skip watermark-only micro-batches: throughput runs don't need the
       // extra empty batch per trigger
       .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      // keep every batch's progress: the RocksDB commit sums cover the run
+      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    Graft.init(spark)
     // the transformWithState pipelines (funnel, ab_seq monitor) need the
     // RocksDB provider; deliberate session-wide opt-in (see StateStores)
     graft.streaming.StateStores.useRocksDB(spark)
@@ -57,15 +60,22 @@ object StreamBench {
         timestamp_micros(expr("ts div 1000")).cast("timestamp").as("timestamp"))
       .as[Frame].collect()
 
-    def run(name: String, pipeline: DataFrame => DataFrame): (String, Double, Long, Long) = {
-      val input = MemoryStream[Frame]
+    // the commit's own RocksDB timings, summed over every batch and state
+    // operator of a run, so a commit regression explains itself
+    val commitMetrics = Seq("rocksdbCommitFileSyncLatencyMs",
+      "rocksdbChangeLogWriterCommitLatencyMs", "rocksdbSaveZipFilesLatencyMs")
+    def runTyped[T: org.apache.spark.sql.Encoder](
+        name: String, data: Array[T],
+        pipeline: org.apache.spark.sql.Dataset[T] => DataFrame,
+        mode: String): (String, Double, Long, Long, Seq[Long]) = {
+      val input = MemoryStream[T]
       val qn = s"sb_$name"
-      val q = pipeline(input.toDF()).writeStream.format("memory")
-        .queryName(qn).outputMode("append").start()
+      val q = pipeline(input.toDS()).writeStream.format("memory")
+        .queryName(qn).outputMode(mode).start()
       // warm-up batch
-      input.addData(frames.take(1000).toSeq); q.processAllAvailable()
+      input.addData(data.take(1000).toSeq); q.processAllAvailable()
       val t0 = System.nanoTime()
-      frames.drop(1000).grouped(49500).foreach { chunk =>
+      data.drop(1000).grouped(49500).foreach { chunk =>
         input.addData(chunk.toSeq); q.processAllAvailable()
       }
       val secs = (System.nanoTime() - t0) / 1e9
@@ -78,12 +88,18 @@ object StreamBench {
         .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
         .sorted
       val p50 = if (lat.isEmpty) -1L else lat(lat.size / 2)
+      val ops = q.recentProgress.toSeq.flatMap(_.stateOperators)
+      val commit = commitMetrics.map(k =>
+        ops.flatMap(o => Option(o.customMetrics.get(k)).map(_.toLong)).sum)
       q.stop()
-      (name, (frames.length - 1000) / secs, outRows, p50)
+      (name, (data.length - 1000) / secs, outRows, p50, commit)
     }
-
-    val t1 = run("t1_filter", df => Pipelines.filterPipeline(df))
-    val t2 = run("t2_dedup", df => Pipelines.dedupPipeline(df))
+    val t1 = runTyped("t1_filter", frames,
+      (ds: org.apache.spark.sql.Dataset[Frame]) => Pipelines.filterPipeline(ds.toDF()),
+      "append")
+    val t2 = runTyped("t2_dedup", frames,
+      (ds: org.apache.spark.sql.Dataset[Frame]) => Pipelines.dedupPipeline(ds.toDF()),
+      "append")
 
     // Stateful extension ops on the same replay: n-stage funnel
     // (transformWithState) and global Misra-Gries heavy hitters over the
@@ -91,28 +107,6 @@ object StreamBench {
     val events = Tables.events(spark, sfDir)
       .selectExpr("user_id", "ts div 1000 AS ts_us", "event_type")
       .as[graft.streaming.FunnelEvent].collect()
-    def runTyped[T: org.apache.spark.sql.Encoder](
-        name: String, data: Array[T],
-        pipeline: org.apache.spark.sql.Dataset[T] => DataFrame,
-        mode: String): (String, Double, Long, Long) = {
-      val input = MemoryStream[T]
-      val qn = s"sb_$name"
-      val q = pipeline(input.toDS()).writeStream.format("memory")
-        .queryName(qn).outputMode(mode).start()
-      input.addData(data.take(1000).toSeq); q.processAllAvailable()
-      val t0 = System.nanoTime()
-      data.drop(1000).grouped(49500).foreach { chunk =>
-        input.addData(chunk.toSeq); q.processAllAvailable()
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val outRows = spark.table(qn).count()
-      val lat = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-        .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
-        .sorted
-      val p50 = if (lat.isEmpty) -1L else lat(lat.size / 2)
-      q.stop()
-      (name, (data.length - 1000) / secs, outRows, p50)
-    }
     val fun = runTyped("funnel", events,
       (ds: org.apache.spark.sql.Dataset[graft.streaming.FunnelEvent]) =>
         graft.streaming.FunnelStream.funnel(ds,
@@ -136,8 +130,9 @@ object StreamBench {
       (ds: org.apache.spark.sql.Dataset[graft.streaming.AbEvent]) =>
         graft.streaming.SeqTestStream.readouts(ds).toDF(), "update")
 
-    val qs = Seq(t1, t2, fun, topk, span, abSeq).map { case (n, rps, rows, p50) =>
-      s""""$n":{"records_per_sec":${rps.round},"out_rows":$rows,"batch_ms_p50":$p50}"""
+    val qs = Seq(t1, t2, fun, topk, span, abSeq).map { case (n, rps, rows, p50, commit) =>
+      val rocks = commitMetrics.zip(commit).map { case (k, v) => s""","$k":$v""" }.mkString
+      s""""$n":{"records_per_sec":${rps.round},"out_rows":$rows,"batch_ms_p50":$p50$rocks}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"stream_throughput","unit":"records/sec","pipelines":$qs,"n_records":${frames.length},"sf":"$sfDir"}""")
     spark.stop()

@@ -59,16 +59,8 @@ object StreamStateBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    Graft.init(spark)
     graft.streaming.StateStores.useRocksDB(spark)
-    // Changelog checkpointing is the production configuration for
-    // large-state RocksDB streams: per-batch the checkpoint uploads a
-    // changelog instead of re-snapshotting sst files, which both bounds
-    // commit time under 10^7 live keys and avoids the full-snapshot
-    // maintenance file churn (a background-compaction stat() race on
-    // the snapshot working dir segfaulted the 10^7 full-snapshot run).
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
 
     val base = java.nio.file.Files.createTempDirectory("graft_statebench").toString
     val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")

@@ -95,6 +95,7 @@ object FilterApp {
   def main(args: Array[String]): Unit = {
     val props = KafkaIO.loadProperties(args(0))
     val spark = SparkSession.builder().appName("graft-filter").getOrCreate()
+    graft.Graft.init(spark)
     val out = Pipelines.filterPipeline(
       KafkaIO.source(spark, props.getProperty("bootstrap.servers"),
         props.getProperty("input.topic.name")))
@@ -112,6 +113,7 @@ object DedupApp {
     val props = KafkaIO.loadProperties(args(0))
     graft.io.KafkaAdmin.createTopics(props) // S6 parity (reference :200, :155-170)
     val spark = SparkSession.builder().appName("graft-dedup").getOrCreate()
+    graft.Graft.init(spark)
     StateStores.useRocksDB(spark)
     val out = Pipelines.dedupPipeline(
       KafkaIO.source(spark, props.getProperty("bootstrap.servers"),

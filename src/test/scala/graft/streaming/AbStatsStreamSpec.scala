@@ -11,15 +11,6 @@ import graft.operators.EventOps
   */
 class AbStatsStreamSpec extends SparkSpec {
 
-  private def withRestoredProvider[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try { StateStores.useRocksDB(spark); body }
-    finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   private val rnd = new scala.util.Random(7)
   private val events: Seq[AbEvent] = (1L to 600L).map { i =>
     val et = Seq("view", "click", "purchase")((i % 3).toInt)
@@ -30,7 +21,7 @@ class AbStatsStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       val batch = EventOps.evAbStatsOf(
           events.toDF("event_type", "user_id", "value"))
         .collect().map { r =>

@@ -8,20 +8,11 @@ import graft.SparkSpec
   */
 class AnomalyStreamSpec extends SparkSpec {
 
-  private def withRestoredProvider[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try { StateStores.useRocksDB(spark); body }
-    finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("streaming flags == online reference model, fed across 4 batches") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       val rnd = new scala.util.Random(11)
       // 3 users with ~N(10, 1) noise and planted 8-sigma spikes
       val events = (1L to 240L).map { i =>

@@ -12,20 +12,11 @@ class CepStreamSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def withRestoredProvider[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try { StateStores.useRocksDB(spark); body }
-    finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("streaming CEP == batch ev_cep on the same events, fed across 3 batches") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       val evs = graft.Tables.events(spark, sf)
         .selectExpr("user_id", "event_id", "ts div 1000 AS ts_us", "event_type")
         .orderBy($"ts_us", $"event_id")
@@ -57,7 +48,7 @@ class CepStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       val input = MemoryStream[CepEvent]
       val out = CepStream.cep(input.toDS())
       val qn = s"cep2_${System.nanoTime()}"

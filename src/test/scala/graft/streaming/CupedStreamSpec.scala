@@ -12,15 +12,6 @@ import graft.operators.EventOps
   */
 class CupedStreamSpec extends SparkSpec {
 
-  private def withRestoredProvider[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try { StateStores.useRocksDB(spark); body }
-    finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   private val CutNs = 1705363200000000L * 1000L // 2024-01-16 UTC, epoch nanos
 
   private val rnd = new scala.util.Random(11)
@@ -34,7 +25,7 @@ class CupedStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       // the same observations as an events-shaped frame (ts nanos around
       // the batch operator's pre/post cutoff)
       val asEvents = events.map { e =>
@@ -75,7 +66,7 @@ class CupedStreamSpec extends SparkSpec {
   test("checkpoint restart: MapState covariates and moments survive a new query") {
     val s = spark
     import s.implicits._
-    withRestoredProvider {
+    withRocksDB {
       val base = java.nio.file.Files.createTempDirectory("graft_cuped_ckpt").toString
       val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
       val schema = "event_type STRING, user_id BIGINT, value DOUBLE, pre BOOLEAN"
@@ -128,7 +119,7 @@ class CupedStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       // users 0..5 each observed twice in SEPARATE batches; n_a/n_b must
       // count each user once and the moments must reflect summed values
       val obs = (0L to 5L).map(u => CupedEvent("m", u, 10.0 + u, pre = false))

@@ -62,18 +62,4 @@ object DedupFrames {
       survivors(spark.table(qn), batches.flatten.toIndexedSeq)
     } finally q.stop()
   }
-
-  /** Runs `body` on the RocksDB state store provider — as `DedupApp` and
-    * the t2_dedup benchmark deploy — and restores the session's provider.
-    */
-  def withRocksDB[A](spark: SparkSession)(body: => A): A = {
-    val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
-    StateStores.useRocksDB(spark)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(conf, p)
-      case None => spark.conf.unset(conf)
-    }
-  }
 }

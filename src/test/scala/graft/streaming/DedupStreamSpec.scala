@@ -95,7 +95,7 @@ class DedupStreamSpec extends SparkSpec {
   }
 
   test("RocksDB state store: novel/dup/refresh/null-id semantics across micro-batches") {
-    val got = DedupFrames.withRocksDB(spark) {
+    val got = withRocksDB {
       runStreaming(Seq(
         Seq(rec("A", 0), rec("A", 4 * Min), rec("A", 8 * Min), // refresh chain
           rec("B", 0), rec(null, 0), rec(null, 1000)),
@@ -110,7 +110,7 @@ class DedupStreamSpec extends SparkSpec {
     // window = 40 min (±20 suppression), retention = 10 min — so expiry is
     // OBSERVABLE inside the suppression window: without the event-time
     // timeout dropping state, A@20min (|20−0| ≤ 20) would be suppressed.
-    val got = DedupFrames.withRocksDB(spark) {
+    val got = withRocksDB {
       runStreaming(Seq(
         Seq(rec("A", 0), rec("C", 0)), // both novel → emit
         // C refreshes its state (watermark still low, no timeout yet);

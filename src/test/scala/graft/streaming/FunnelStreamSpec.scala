@@ -13,20 +13,11 @@ class FunnelStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private val stages = Seq("view", "click", "purchase")
 
-  private def withRestoredProvider[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try { StateStores.useRocksDB(spark); body }
-    finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("streaming funnel == batch ev_funnel on the same events, fed across 3 batches") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       // the real events table, globally event-time ordered so cross-batch
       // arrival matches event-time order per user
       val evs = graft.Tables.events(spark, sf)
@@ -69,7 +60,7 @@ class FunnelStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       val input = MemoryStream[FunnelEvent]
       val out = FunnelStream.funnel(input.toDS(), stages)
       val qn = s"funnel2_${System.nanoTime()}"

@@ -11,15 +11,6 @@ import graft.operators.EventOps
   */
 class SeqTestStreamSpec extends SparkSpec {
 
-  private def withRestoredProvider[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try { StateStores.useRocksDB(spark); body }
-    finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   private val rnd = new scala.util.Random(13)
   private val events: Seq[AbEvent] = (1L to 700L).map { i =>
     val et = Seq("view", "click", "purchase")((i % 3).toInt)
@@ -30,7 +21,7 @@ class SeqTestStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       val batch = EventOps.evAbSeqOf(
           events.toDF("event_type", "user_id", "value"))
         .collect().map { r =>
@@ -86,7 +77,7 @@ class SeqTestStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    withRestoredProvider {
+    withRocksDB {
       val eff = (1L to 400L).map { i =>
         val u = i % 61
         AbEvent("m", u, if (u % 2 == 0) 20.0 + (i % 7) else 10.0 + (i % 7))
