@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
-import graft.functions.{BitmapAndCount, CharEntropyQ, CosineSimilarity, EditWithin1, IntersectCountSorted, JaccardSimilarity, JlProject, L2Distance, MatProject, Md5Head64, SimHash32, WinnowFingerprint, ZValue}
+import graft.functions.Kernels
 
 /** `SparkSessionExtensions` injection point — the config-driven twin of
   * [[Graft.init]]: sessions created with
@@ -12,68 +10,13 @@ import graft.functions.{BitmapAndCount, CharEntropyQ, CosineSimilarity, EditWith
   * spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * get the native expressions as SQL functions without any library call,
-  * which is how a shared cluster (Thrift server, notebook gateway,
-  * spark-submit with `--conf`) picks the engine up. Injected functions
-  * land in the session's own registry at build time — no temp-function
-  * mutation, visible to pure-SQL users.
+  * get every native function in [[graft.functions.Kernels.All]] as a SQL
+  * function without any library call, which is how a shared cluster
+  * (Thrift server, notebook gateway, spark-submit with `--conf`) picks
+  * the engine up. Injected functions land in the session's own registry
+  * at build time — no temp-function mutation, visible to pure-SQL users.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def fn(name: String, clazz: Class[_], usage: String)(
-      builder: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo(clazz.getName, null, name, usage, "", "", "", "", "", "", "built-in"),
-      builder)
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(fn("cosine_sim", classOf[CosineSimilarity],
-      "cosine_sim(a, b) - cosine similarity of two array<double>")(
-      es => CosineSimilarity(es(0), es(1))))
-    ext.injectFunction(fn("l2_sq", classOf[L2Distance],
-      "l2_sq(a, b) - squared L2 distance of two array<double>")(
-      es => L2Distance(es(0), es(1))))
-    ext.injectFunction(fn("jaccard_sorted", classOf[JaccardSimilarity],
-      "jaccard_sorted(a, b) - Jaccard similarity of two SORTED arrays")(
-      es => JaccardSimilarity(es(0), es(1))))
-    ext.injectFunction(fn("winnow_fp", classOf[WinnowFingerprint],
-      "winnow_fp(s) - winnowing fingerprints (Karp-Rabin + window min)")(
-      es => WinnowFingerprint(es.head)))
-    ext.injectFunction(fn("bloom_might_contain", classOf[BloomFilterMightContain],
-      "bloom_might_contain(bloom, v) - probe a serialized bloom filter")(
-      es => BloomFilterMightContain(es(0), es(1))))
-    ext.injectFunction(fn("intersect_count_sorted", classOf[IntersectCountSorted],
-      "intersect_count_sorted(a, b) - |A∩B| of two SORTED arrays")(
-      es => IntersectCountSorted(es(0), es(1))))
-    ext.injectFunction(fn("bitmap_and_count", classOf[BitmapAndCount],
-      "bitmap_and_count(a, b) - popcount of the AND of two long-array bitmaps")(
-      es => BitmapAndCount(es(0), es(1))))
-    ext.injectFunction(fn("ed_within_1", classOf[EditWithin1],
-      "ed_within_1(a, b) - true iff levenshtein(a, b) <= 1")(
-      es => EditWithin1(es(0), es(1))))
-    ext.injectFunction(fn("z_value", classOf[ZValue],
-      "z_value(c1, ..., cn) - Morton (Z-order) interleave of n ints")(
-      es => ZValue(es)))
-    ext.injectFunction(fn("simhash32", classOf[SimHash32],
-      "simhash32(th) - 32-bit majority-vote SimHash of a hashed-token array")(
-      es => SimHash32(es.head)))
-    ext.injectFunction(fn("char_entropy_q", classOf[CharEntropyQ],
-      "char_entropy_q(s) - sum of round(c*ln(c)*1e6) over the char histogram")(
-      es => CharEntropyQ(es.head)))
-    ext.injectFunction(fn("jl_project", classOf[JlProject],
-      "jl_project(v, k) - deterministic ±1 JL projection to k dims")(
-      es => JlProject(es(0), es(1).eval(null).asInstanceOf[Number].intValue())))
-    ext.injectFunction(fn("md5_h64", classOf[Md5Head64],
-      "md5_h64(s) - first 8 md5 bytes of s as a big-endian long")(
-      es => Md5Head64(es.head)))
-    ext.injectFunction(fn("mat_project", classOf[MatProject],
-      "mat_project(v, means, mat) - centered matrix projection of a vector")(
-      es => {
-        import org.apache.spark.sql.catalyst.util.ArrayData
-        val means = es(1).eval(null).asInstanceOf[ArrayData].toDoubleArray.toSeq
-        val m = es(2).eval(null).asInstanceOf[ArrayData]
-        MatProject(es(0), means,
-          (0 until m.numElements()).map(i => m.getArray(i).toDoubleArray.toSeq))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Kernels.All.foreach(k => ext.injectFunction((k.id, k.info, k.build)))
 }

@@ -14,10 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Every batch operator loads its tables here before building any
-    // expression, so this is the one funnel where the fused hash kernel
-    // (TextFns.h32Sql -> md5_h64, r13) is guaranteed registered ahead of
-    // analysis. Idempotent and ~free after the first call.
-    graft.functions.Md5Head64.register(spark)
+    // expression, so this is the one funnel where the native functions
+    // are guaranteed registered ahead of analysis, on any session.
+    // Idempotent and ~free after the first call.
+    graft.functions.Kernels.register(spark)
     spark.read.parquet(s"$sfDir/$name.parquet")
   }
 

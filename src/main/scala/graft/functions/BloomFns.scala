@@ -1,14 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-
-/** SQL-surface registration of Spark's native bloom-filter probe — the
+/** Helper for `bloom_might_contain(<binary bloom>, <long value>)`, the
+  * SQL name of Spark's native bloom-filter probe ([[Kernels.All]]) — the
   * same codegen'd `BloomFilterMightContain` Catalyst expression the
-  * optimizer's own runtime-filter injection uses, exposed as
-  * `bloom_might_contain(<binary bloom>, <long value>)` so operators can
-  * apply a pre-built filter deterministically (InjectRuntimeFilter only
-  * fires above size thresholds a test-scale plan never meets).
+  * optimizer's own runtime-filter injection uses, exposed so operators
+  * can apply a pre-built filter deterministically (InjectRuntimeFilter
+  * only fires above size thresholds a test-scale plan never meets).
   *
   * The bloom argument must be a foldable binary (a literal: the
   * serialized `org.apache.spark.util.sketch.BloomFilter`); the value a
@@ -17,10 +14,6 @@ import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
   * row inside whole-stage codegen.
   */
 object BloomFns {
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "bloom_might_contain")(
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
 
   /** Serialize a sketch bloom filter to the hex form `x'...'` SQL binary
     * literals take.

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -85,9 +84,4 @@ object CdcChunkKernel {
     if (start < n) out.add(UTF8String.fromString(str.substring(start, n)))
     new GenericArrayData(out.toArray().asInstanceOf[Array[Any]])
   }
-
-  /** Register as a SQL function (`cdc_chunks(s)`) on the session. */
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "cdc_chunks")( exprs => CdcChunks(exprs.head))
 }

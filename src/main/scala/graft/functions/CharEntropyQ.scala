@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -67,8 +66,4 @@ object CharEntropyQ {
     }
     out
   }
-
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "char_entropy_q")( exprs => CharEntropyQ(exprs.head))
 }

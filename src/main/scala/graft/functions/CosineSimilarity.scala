@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -101,19 +100,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Register as a SQL function (`cosine_sim(a, b)`) on the session; the
-    * operators call it through `expr(...)`, keeping the public surface
-    * Column-API-only.
-    */
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "cosine_sim")( exprs => CosineSimilarity(exprs(0), exprs(1)))
-
-  /** Register `dot_product(a, b)` (the [[DotProduct]] kernel). */
-  def registerDot(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "dot_product")( exprs => DotProduct(exprs(0), exprs(1)))
 }

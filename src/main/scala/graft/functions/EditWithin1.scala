@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType}
@@ -76,8 +75,4 @@ object EditWithin1 {
       j == n
     }
   }
-
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "ed_within_1")( exprs => EditWithin1(exprs(0), exprs(1)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -63,19 +62,6 @@ case class JaccardSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object JaccardSimilarity {
-  def register(spark: SparkSession): Unit = {
-    Kernels.registerOnce(spark,
-      "jaccard_sorted")( exprs => JaccardSimilarity(exprs(0), exprs(1)))
-    Kernels.registerOnce(spark,
-      "intersect_count_sorted")( exprs => IntersectCountSorted(exprs(0), exprs(1)))
-    Kernels.registerOnce(spark,
-      "intersect_count_sorted_str")( exprs => IntersectCountSortedStr(exprs(0), exprs(1)))
-    Kernels.registerOnce(spark,
-      "bitmap_and_count")( exprs => BitmapAndCount(exprs(0), exprs(1)))
-  }
 }
 
 /** The [[IntersectCountSorted]] merge pass over SORTED, DISTINCT STRING

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -95,16 +94,4 @@ object JlProject {
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "jl_project")(
-      exprs => {
-        val k = if (exprs.length == 2 && exprs(1).foldable) exprs(1).eval(null) else null
-        k match {
-          case n: Number if n.intValue() > 0 => JlProject(exprs.head, n.intValue())
-          case _ => throw new IllegalArgumentException(
-            "jl_project(v, k) requires a positive integer literal k")
-        }
-      })
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -55,11 +54,4 @@ case class L2Distance(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object L2Distance {
-  /** Register as a SQL function (`l2_sq(a, b)`) on the session. */
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "l2_sq")( exprs => L2Distance(exprs(0), exprs(1)))
 }

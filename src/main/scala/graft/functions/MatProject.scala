@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -106,13 +105,4 @@ object MatProject {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark, "mat_project") { es =>
-      val means = es(1).eval(null).asInstanceOf[ArrayData].toDoubleArray.toSeq
-      val m = es(2).eval(null).asInstanceOf[ArrayData]
-      val mat = (0 until m.numElements())
-        .map(i => m.getArray(i).toDoubleArray.toSeq)
-      MatProject(es(0), means, mat)
-    }
 }

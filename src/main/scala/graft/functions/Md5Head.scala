@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DataTypes, LongType}
@@ -76,7 +75,4 @@ object Md5Head64 {
       ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
       ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
   }
-
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark, "md5_h64")(es => Md5Head64(es.head))
 }

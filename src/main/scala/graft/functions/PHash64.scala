@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -81,9 +80,4 @@ object PHash64Kernel {
     }
     h
   }
-
-  /** Register as a SQL function (`phash64(s)`) on the session. */
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "phash64")( exprs => PHash64(exprs.head))
 }

@@ -25,9 +25,11 @@ object TextFns {
     * Since r13 this evaluates through the fused [[Md5Head64]] kernel —
     * the identical integer (first 8 hex chars of the digest) without the
     * hex-string → substring → conv allocation chain; see the kernel's
-    * scaladoc for the bit-range equivalence. `md5_h64` is registered by
-    * [[graft.Tables.table]] (every batch operator's first act), by the
-    * streaming pipelines that hash, and by [[graft.GraftExtensions]].
+    * scaladoc for the bit-range equivalence. `md5_h64` is a
+    * [[Kernels.All]] entry, so any session that registered the table
+    * resolves it; an operator that builds this fragment must be reached
+    * through [[graft.Tables.table]] or a DataFrame entry point that calls
+    * [[Kernels.register]].
     */
   def h32Sql(inner: String): String =
     s"shiftrightunsigned(md5_h64($inner), 32)"

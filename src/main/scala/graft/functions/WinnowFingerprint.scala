@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -79,9 +78,4 @@ object WinnowKernel {
     }
     UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, nOut))
   }
-
-  /** Register as a SQL function (`winnow_fp(s)`) on the session. */
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "winnow_fp")( exprs => WinnowFingerprint(exprs.head))
 }

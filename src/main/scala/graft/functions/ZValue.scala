@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -114,8 +113,4 @@ object ZValue {
     }
     out
   }
-
-  def register(spark: SparkSession): Unit =
-    Kernels.registerOnce(spark,
-      "z_value")( exprs => ZValue(exprs))
 }

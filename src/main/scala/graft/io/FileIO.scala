@@ -106,7 +106,7 @@ object FileIO {
   def zorderWrite(df: DataFrame, path: String, numFiles: Int,
                   cols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col, expr, greatest, lit, max, min}
-    graft.functions.ZValue.register(df.sparkSession)
+    graft.functions.Kernels.register(df.sparkSession)
     val bits = 63 / cols.length
     val width = (1L << math.min(bits, 20)) - 1 // 20 bits/dim resolves 1M ranks
     val aggs = cols.flatMap(c =>
@@ -141,7 +141,7 @@ object FileIO {
   def zorderWriteQuantile(df: DataFrame, path: String, numFiles: Int,
                           cols: Seq[String], buckets: Int = 256): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col, expr}
-    graft.functions.ZValue.register(df.sparkSession)
+    graft.functions.Kernels.register(df.sparkSession)
     val qs = (1 until buckets).map(_.toDouble / buckets)
     val aggs = cols.map(c =>
       expr(s"approx_percentile($c, array(${qs.mkString(", ")}), 10000)")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{CacheScope, Tables}
-import graft.functions.{BloomFns, JaccardSimilarity}
+import graft.functions.BloomFns
 import graft.functions.TextFns._
 
 /** Deduplication family over the `documents` table — the core of a
@@ -59,12 +59,11 @@ object DedupOps {
     * consumed once anyway, so there is nothing to barrier).
     */
   private[graft] def withSignature(df: DataFrame, barrier: Boolean): DataFrame = {
-    // r14 (ADVICE): h32Sql/hashArraySql resolve to the md5_h64 kernel, and
-    // this funnel is reached from public entry points that never pass
-    // through Tables.table (spanDedupStream, admitStream via
-    // incrementBands, corpusBands/corpusShingleSets) — register
-    // defensively so a bare session without GraftExtensions analyzes.
-    graft.functions.Md5Head64.register(df.sparkSession)
+    // h32Sql/hashArraySql resolve to the md5_h64 kernel, and this funnel
+    // is reached from public entry points that never pass through
+    // Tables.table (spanDedupStream, admitStream via incrementBands,
+    // corpusBands/corpusShingleSets), so it registers the kernels itself
+    graft.functions.Kernels.register(df.sparkSession)
     // r13: floor the signature build's parallelism at core count — the
     // single-row-group sf parquet plans a 1-task scan and the fused
     // shingle+digest chain ran serially (Tables.parallelized scaladoc)
@@ -157,7 +156,6 @@ object DedupOps {
     minhashLshPairsOf(Tables.documents(spark, sfDir))
 
   private def minhashLshPairsOf(docs: DataFrame): DataFrame = {
-    JaccardSimilarity.register(docs.sparkSession)
     val sig = withSignature(docs)
     // r13: shingle sets stored SORTED so the verify intersection is one
     // codegen'd merge pass (intersect_count_sorted_str) instead of
@@ -287,7 +285,6 @@ object DedupOps {
     */
   private[graft] def lshRecallTables(spark: SparkSession, sfDir: String,
       sampleN: Int = 10000): (DataFrame, DataFrame, DataFrame) = {
-    JaccardSimilarity.register(spark)
     val docsAll = Tables.documents(spark, sfDir)
     val nDocs = docsAll.count()
     val docs =
@@ -407,7 +404,6 @@ object DedupOps {
     * precomputed hash array).
     */
   def simhashSig(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SimHash32.register(spark)
     Tables.documents(spark, sfDir)
       .withColumn("t", tokens(col("text")))
       .withColumn("th", expr(s"transform(t, s -> ${h32Sql("s")})"))
@@ -436,7 +432,6 @@ object DedupOps {
     * self-join sides (see withSignature).
     */
   def simhashNeardup(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SimHash32.register(spark)
     val sim = Tables.documents(spark, sfDir)
       .withColumn("t", tokens(col("text")))
       .withColumn("th", expr(s"transform(t, s -> ${h32Sql("s")})"))
@@ -467,7 +462,6 @@ object DedupOps {
     * global all-pairs Hamming scan (which is what the DuckDB oracle runs).
     */
   def simhashBanded(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SimHash32.register(spark)
     val sim = Tables.documents(spark, sfDir)
       .withColumn("t", tokens(col("text")))
       .withColumn("th", expr(s"transform(t, s -> ${h32Sql("s")})"))
@@ -514,7 +508,6 @@ object DedupOps {
     // transform) ran its lambdas interpreted and took 3.5 s at sf0.1;
     // the kernel is ~0.2 s with identical values (bit-equal to the
     // DuckDB oracle's polynomial formulation below).
-    graft.functions.WinnowKernel.register(spark)
     Tables.documents(spark, sfDir)
       .withColumn("norm", normText(col("text")))
       .withColumn("fp", expr("winnow_fp(norm)"))
@@ -563,7 +556,6 @@ object DedupOps {
     winnowPairs(spark, sfDir, maxDf = 8)
 
   def winnowPairs(spark: SparkSession, sfDir: String, maxDf: Int): DataFrame = {
-    graft.functions.WinnowKernel.register(spark)
     val posts = Tables.documents(spark, sfDir)
       .withColumn("norm", normText(col("text")))
       .select(col("doc_id"), expr("winnow_fp(norm)").as("fp"))
@@ -888,7 +880,6 @@ object DedupOps {
 
   def ngramJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = {
     requireBoundedCorpus(Tables.documents(spark, sfDir), "ngram_jaccard_pairs")
-    JaccardSimilarity.register(spark)
     val g = Tables.parallelized(Tables.documents(spark, sfDir))
       .withColumn("norm", normText(col("text")))
       .withColumn("lenb", expr("n_chars div 100")) // length-bucket blocking
@@ -986,7 +977,6 @@ object DedupOps {
     */
   private def jaccardGramTables(spark: SparkSession, sfDir: String,
       gramSql: String = charGramsSql("norm", 4)): (DataFrame, DataFrame) = {
-    JaccardSimilarity.register(spark)
     val g = Tables.parallelized(Tables.documents(spark, sfDir))
       .withColumn("norm", normText(col("text")))
       .withColumn("t", split(col("norm"), " "))
@@ -1485,7 +1475,6 @@ object DedupOps {
   def ngramContainmentPairs(spark: SparkSession, sfDir: String): DataFrame = {
     requireBoundedCorpus(Tables.documents(spark, sfDir),
       "ngram_containment_pairs")
-    JaccardSimilarity.register(spark)
     val g = Tables.documents(spark, sfDir)
       .withColumn("norm", normText(col("text")))
       .select(col("doc_id"), col("lang"),
@@ -1505,7 +1494,6 @@ object DedupOps {
     * construction.
     */
   private def containmentBitmapFrom(g: DataFrame): DataFrame = {
-    JaccardSimilarity.register(g.sparkSession)
     val dict = g.select(explode(col("gr")).as("gh")).distinct()
       .withColumn("idx", row_number().over(Window.orderBy(col("gh"))) - 1)
     val nw = dict.agg(((max(col("idx")) / 64) + 1).cast("int").as("nw"))
@@ -1609,7 +1597,6 @@ object DedupOps {
     */
   private def containmentGramTables(spark: SparkSession, sfDir: String,
       gramSql: String = charGramsSql("norm", 4)): (DataFrame, DataFrame) = {
-    JaccardSimilarity.register(spark)
     val g = Tables.parallelized(Tables.documents(spark, sfDir))
       .withColumn("norm", normText(col("text")))
       .withColumn("t", split(col("norm"), " "))
@@ -1950,7 +1937,7 @@ object DedupOps {
     * Streaming-safe: narrow per-row kernel, no persist, no shuffle.
     */
   private[graft] def cdcChunks(docs: DataFrame): DataFrame = {
-    graft.functions.CdcChunkKernel.register(docs.sparkSession)
+    graft.functions.Kernels.register(docs.sparkSession)
     docs
       .select(col("doc_id"), normText(col("text")).as("norm"))
       .withColumn("chunk", explode(expr("cdc_chunks(norm)")))
@@ -2126,7 +2113,7 @@ object DedupOps {
     */
   def decontaminateBloom(train: DataFrame, evalDocs: DataFrame,
                          fpp: Double = 0.01): DataFrame = {
-    BloomFns.register(train.sparkSession)
+    graft.functions.Kernels.register(train.sparkSession)
     val evalGrams = evalDocs.select(explode(col("ghs")).as("gh")).distinct()
       .transform(CacheScope.barrier) // consumed 3x: count, bloom, confirm
     val n = math.max(evalGrams.count(), 1L)
@@ -2287,9 +2274,8 @@ object DedupOps {
     * rank over.
     */
   private[graft] def spanWindows(docs: DataFrame, w: Int): DataFrame = {
-    // r14 (ADVICE): defensive kernel registration — this funnel is reached
-    // from SpanDedupStream on a bare session (see withSignature note)
-    graft.functions.Md5Head64.register(docs.sparkSession)
+    // reached from SpanDedupStream without Tables.table (see withSignature)
+    graft.functions.Kernels.register(docs.sparkSession)
     // r13: the w-shingle digest chain fuses into the docs scan — floor
     // its parallelism (Tables.parallelized scaladoc; measured −0.57 s on
     // doc_span_clean / −0.30 s on doc_span_dedup at sf0.1)
@@ -2381,7 +2367,6 @@ object DedupOps {
     * size.
     */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    JaccardSimilarity.register(spark)
     val docs = Tables.documents(spark, sfDir)
     val sig = withSignature(docs)
     val isInc = col("doc_id") % 13 === 0
@@ -2507,7 +2492,7 @@ object DedupOps {
     * 7.7 s vs 0.9 s for the confirm pass at sf0.1).
     */
   def fuzzyPairs(df: DataFrame, idCol: String, strCol: String): DataFrame = {
-    graft.functions.EditWithin1.register(df.sparkSession)
+    graft.functions.Kernels.register(df.sparkSession)
     val keys = df.select(col(idCol).as("id"), col(strCol).as("s"))
       .select(col("id"), col("s"),
         explode(array_distinct(concat(

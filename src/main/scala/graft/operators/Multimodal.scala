@@ -243,7 +243,7 @@ object Multimodal {
     mmPhashOf(Tables.documents(spark, sfDir))
 
   private def mmPhashOf(docs: DataFrame): DataFrame = {
-    graft.functions.PHash64Kernel.register(docs.sparkSession)
+    graft.functions.Kernels.register(docs.sparkSession)
     docs
       .withColumn("norm", normText(col("text")))
       .select(col("doc_id"), expr("phash64(norm)").as("phash"))

@@ -638,7 +638,6 @@ object TextOps {
     * shuffle at all; the scan reads (doc_id, text) only.
     */
   def docEntropy(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.CharEntropyQ.register(spark)
     Tables.documents(spark, sfDir)
       .withColumn("norm", normText(col("text")))
       .withColumn("n", length(col("norm")))

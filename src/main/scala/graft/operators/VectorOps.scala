@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{CacheScope, Tables}
-import graft.functions.CosineSimilarity
 import graft.functions.TextFns.h32Sql
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column).
@@ -35,7 +34,6 @@ object VectorOps {
 
   /** Brute-force cosine top-5 neighbors for query vectors (vec_id < 10). */
   def embKnn(spark: SparkSession, sfDir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -89,7 +87,6 @@ object VectorOps {
     embNeardupLsh(spark, sfDir, planes = 6)
 
   def embNeardupLsh(spark: SparkSession, sfDir: String, planes: Int): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .withColumn("bucket",
         if (planes == 0) lit(0L) else expr(bucketSql(planes)))
@@ -178,7 +175,6 @@ object VectorOps {
     embNeardupMultiprobe(spark, sfDir, planes = 6)
 
   def embNeardupMultiprobe(spark: SparkSession, sfDir: String, planes: Int): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .withColumn("bucket", expr(bucketSql(planes)))
       .transform(CacheScope.barrier) // sign-bit projections computed once
@@ -218,7 +214,6 @@ object VectorOps {
     * degenerates to exact brute force (asserted in AccuracySpec).
     */
   def embIvfKnn(spark: SparkSession, sfDir: String, cells: Int, nprobe: Int): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
     val piv = e.filter(col("vec_id") < cells)
@@ -341,7 +336,6 @@ object VectorOps {
     * query-surface boundary unexploded.
     */
   def embRp(spark: SparkSession, sfDir: String, rpDims: Int = 16): DataFrame = {
-    graft.functions.JlProject.register(spark)
     val flat = col("vec_id") +:
       (0 until rpDims).map(j => col("proj").getItem(j).as(s"p$j"))
     withVec(Tables.embeddings(spark, sfDir))
@@ -388,8 +382,6 @@ object VectorOps {
     */
   def embRpKnn(spark: SparkSession, sfDir: String,
                rpDims: Int = 32, cand: Int = 100, topK: Int = 5): DataFrame = {
-    CosineSimilarity.register(spark)
-    graft.functions.JlProject.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v"))
       .transform(CacheScope.barrier) // projection pass, queries, re-rank fetch
@@ -534,7 +526,6 @@ object VectorOps {
   }
 
   def embKmeans(spark: SparkSession, sfDir: String, k: Int, iters: Int): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
     val (cent, assign) = lloyd(e, k, iters)
@@ -600,7 +591,6 @@ object VectorOps {
 
   def embIvfTrained(spark: SparkSession, sfDir: String,
                     cells: Int, iters: Int, nprobe: Int): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
     val piv = lloyd(e, cells, iters)._1
@@ -687,7 +677,6 @@ object VectorOps {
 
   def embSemdedup(spark: SparkSession, sfDir: String,
                   cells: Int, iters: Int, thr: Double): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
     val piv = lloyd(e, cells, iters)._1
@@ -886,7 +875,7 @@ object VectorOps {
 
   /** Core over any (vec_id, v: array<double>) frame. */
   def embPqOf(e: DataFrame, m: Int, k: Int, iters: Int, topK: Int): DataFrame = {
-    graft.functions.L2Distance.register(e.sparkSession)
+    graft.functions.Kernels.register(e.sparkSession)
     val sub = pqSub(e, m)
       .transform(CacheScope.barrier) // consumed per iteration + encode + queries
     val cent = pqTrain(sub, k, iters)
@@ -960,8 +949,6 @@ object VectorOps {
 
   def embIvfPq(spark: SparkSession, sfDir: String, cells: Int, m: Int,
                k: Int, iters: Int, nprobe: Int, cand: Int, topK: Int): DataFrame = {
-    CosineSimilarity.register(spark)
-    graft.functions.L2Distance.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
     val piv = lloyd(e, cells, iters)._1
@@ -1196,8 +1183,6 @@ object VectorOps {
 
   private def buildIvfIndex(spark: SparkSession, sfDir: String, dir: String,
                             overwrite: Boolean = false): Unit = {
-    CosineSimilarity.register(spark)
-    graft.functions.L2Distance.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
     // materialize the shared projection ONCE up front — the count is
@@ -1299,8 +1284,6 @@ object VectorOps {
     * corrupt index hash-fails the driver gate.
     */
   def embIvfQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    graft.functions.L2Distance.register(spark)
     val dir = ivfIndexDir(spark, sfDir)
     if (!ivfIndexExists(spark, dir)) buildIvfIndex(spark, sfDir, dir)
     verifyIvfManifest(spark, sfDir, dir)
@@ -1385,7 +1368,6 @@ object VectorOps {
     embSq8Knn(spark, sfDir, cand = 20, topK = 5)
 
   def embSq8Knn(spark: SparkSession, sfDir: String, cand: Int, topK: Int): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v"))
       .transform(CacheScope.barrier) // stats pass, code pass, queries, re-rank fetch
@@ -1501,7 +1483,6 @@ object VectorOps {
     // one LONG holds exactly 64 sign bits; >64 dims needs an array<bigint>
     // packing (and the DuckDB twin's sign-bit branch assumes bit 63 = i 64)
     require(dims <= 64, s"BQ packs sign bits into one BIGINT; dims=$dims > 64")
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v"))
       .transform(CacheScope.barrier) // stats pass, bit pass, queries, re-rank fetch
@@ -1711,7 +1692,6 @@ object VectorOps {
     * against.
     */
   def embMipsKnn(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.CosineSimilarity.registerDot(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -1756,7 +1736,6 @@ object VectorOps {
     embRangeSearch(spark, sfDir, radius = 0.3)
 
   def embRangeSearch(spark: SparkSession, sfDir: String, radius: Double): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -1800,7 +1779,6 @@ object VectorOps {
 
   def embOutlier(spark: SparkSession, sfDir: String,
                  k: Int, iters: Int, maxCos: Double): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
       .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
     val cent = lloyd(e, k, iters)._1
@@ -2121,7 +2099,7 @@ object VectorOps {
     opqRotateOf(Tables.embeddings(spark, sfDir), m)
 
   private[graft] def opqRotateOf(emb: DataFrame, m: Int): DataFrame = {
-    graft.functions.MatProject.register(emb.sparkSession)
+    graft.functions.Kernels.register(emb.sparkSession)
     val (means, vals, vecs0) = pcaFitOf(emb)
     val sd = dims / m
     val order = opqAllocate(vals, m, sd)
@@ -2141,7 +2119,6 @@ object VectorOps {
 
   private def pcaApply(spark: SparkSession, sfDir: String, k: Int,
                        whiten: Boolean): DataFrame = {
-    graft.functions.MatProject.register(spark)
     val (means, vals, vecs) = pcaFit(spark, sfDir)
     def lit9(d: Double) = java.lang.Double.toString(d) + "D"
     val mArr = means.map(lit9).mkString("array(", ", ", ")")
@@ -2195,7 +2172,6 @@ object VectorOps {
 
   def embMmr(spark: SparkSession, sfDir: String, nCand: Int, k: Int)
       : DataFrame = {
-    CosineSimilarity.register(spark)
     val e = withVec(Tables.embeddings(spark, sfDir))
     val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
     val cand = e.filter(col("vec_id") =!= 0)

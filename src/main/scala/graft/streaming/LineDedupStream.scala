@@ -20,7 +20,7 @@ import graft.functions.TextFns._
 object LineDedupStream {
 
   def lineDedupStream(docs: DataFrame, chunkWords: Int = 8): DataFrame = {
-    graft.functions.Md5Head64.register(docs.sparkSession) // h32Sql needs md5_h64
+    graft.functions.Kernels.register(docs.sparkSession)
     docs
       .withColumn("t", tokens(col("text")))
       .withColumn("chunks", expr(chunksSql("t", chunkWords)))

@@ -32,7 +32,6 @@ class MmrSpec extends SparkSpec {
   }
 
   test("emb_mmr: selected set is more diverse than plain top-k") {
-    graft.functions.CosineSimilarity.register(spark)
     def avgPairSim(ids: Seq[Long]): Double = {
       val e = Tables.embeddings(spark, sf)
         .filter(col("vec_id").isin(ids: _*))

@@ -12,7 +12,6 @@ import graft.functions.TextFns._
 class TextFnsSpec extends SparkSpec {
 
   test("shingles and char-grams are empty (not errors) for docs below the n-gram size") {
-    graft.functions.Md5Head64.register(spark) // hashArraySql -> md5_h64
     val df = spark.createDataFrame(Seq(
       (1, ""),                     // empty text → tokens [""] (size 1)
       (2, "ab"),                   // 1 token, 2 chars
@@ -72,7 +71,6 @@ class TextFnsSpec extends SparkSpec {
   test("winnow_fp kernel matches the naive reference model, incl. short-doc edges") {
     val s = spark
     import s.implicits._
-    graft.functions.WinnowKernel.register(spark)
     val texts = Seq(
       "", "ab", "abc", "abcd", "abcdefghij",          // 0..7 grams
       "abcdefghijk",                                   // exactly 8 grams

@@ -27,7 +27,6 @@ class ZOrderSpec extends SparkSpec {
   test("z_value registers and codegens over a DataFrame") {
     val s = spark
     import s.implicits._
-    ZValue.register(spark)
     val got = Seq((3L, 5L)).toDF("a", "b")
       .selectExpr("z_value(a, b)").as[Long].head()
     assert(got == ZValue.interleave(Array(3L, 5L), 31))
