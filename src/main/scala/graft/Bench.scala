@@ -35,9 +35,8 @@ import org.apache.spark.sql.SparkSession
   *     fresh-JVM, judge-measured — a 13× pure-wear artifact). A
   *     no-argument invocation therefore forks one child JVM per
   *     family-sized chunk (≤ [[ChunkMax]] queries), merges the chunk
-  *     records, and prints the same compact line. `SPARK_GRAFT_BENCH_
-  *     NOSPLIT=1` forces the old one-JVM behavior; explicit query-name
-  *     args (the dev loop, tools/sweep.sh) never split.
+  *     records, and prints the same compact line. Explicit query-name
+  *     args (the dev loop, the children, tools/sweep.sh) never split.
   *
   * Each run forces the complete plan through the `noop` sink — a bare
   * `count()` would let Catalyst prune the projections being measured.
@@ -192,11 +191,9 @@ object Bench {
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       val tsv = workDir.resolve(s"part_$i.tsv")
       val cmd = (Seq(javaBin) ++ opens ++ Seq(
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         s"-Xmx$mem", "-XX:ReservedCodeCacheSize=512m",
         "-cp", cp, "graft.Bench") ++ chunk).asJava
       val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_BENCH_NOSPLIT", "1")
       pb.environment().put("SPARK_GRAFT_BENCH_TSV", tsv.toString)
       pb.directory(workDir.toFile)
       pb.redirectOutput(workDir.resolve(s"out_$i.log").toFile)
@@ -230,20 +227,7 @@ object Bench {
   /** One-JVM measurement of an explicit query list (the child/dev path). */
   private def measureInProcess(names: Seq[String]): Seq[(String, Stat)] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A cluster scales partition count with data volume; local sweeps that
-    // hold partitions at 32 while data grows 10× are measuring partition
-    // pressure, not the plan (SCALE.md). Scale experiments override this.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession()
 
     def gcMs(): Long =
       ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -342,7 +326,7 @@ object Bench {
         } finally {
           // Cache hygiene: operators persist() intermediates for the duration
           // of one query; without this, blocks from ~40 earlier queries pile
-          // up in the local[32] JVM and squeeze execution memory for later
+          // up in the bench JVM and squeeze execution memory for later
           // ones (round-2 q7_except went 0.35s -> 2.02s with zero code change).
           // Within a query the warm-up run's barriers stay live (warm-cache
           // protocol, same as rounds 1-2); between queries everything drops.
@@ -382,7 +366,6 @@ object Bench {
     val (skipped, picked) =
       if (scaleTier) picked0.partition(quadraticTwins)
       else (Nil, picked0)
-    val noSplit = sys.env.get("SPARK_GRAFT_BENCH_NOSPLIT").contains("1")
     val fast = sys.env.get("SPARK_GRAFT_BENCH_FAST").contains("1")
     // protocol id v4: v1 = warm-cache single-JVM (rounds ≤6), v2 = r7's
     // cold-cache fast mode, v3 = r8–r12 cold-cache + fork-per-family-
@@ -401,7 +384,7 @@ object Bench {
       else if (fast) "1 warmup + 1 cold-cache timed run"
       else if (gcLevel) "stability-gated warmup, gc level, median-of-3 (best-3-of-6 on spread)"
       else "stability-gated warmup, median-of-3 (best-3-of-6 on spread)"
-    if (wanted.isEmpty && !noSplit)
+    if (wanted.isEmpty)
       runSplit(picked, sfDir, skipped,
         s"v4 fork-per-family-chunk, quadratic twins isolated; $runsDesc")
     else emit(measureInProcess(picked), sfDir, skipped,

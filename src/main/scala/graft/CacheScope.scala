@@ -22,17 +22,6 @@ import org.apache.spark.sql.Dataset
   * connected components) still unpersist locally and never register.
   */
 object CacheScope {
-  // Unpersisting a localCheckpoint block logs "lineage has been truncated
-  // and cannot be recomputed" at WARN — that is the EXPECTED consequence
-  // of the release contract (memoized frames are invalid after release by
-  // design, enforced below), so a bench/Verify run spams one WARN per
-  // tracked checkpoint per release (r13 verdict #5). Silence that logger;
-  // genuine warnings elsewhere stay visible.
-  try org.apache.logging.log4j.core.config.Configurator.setLevel(
-    "org.apache.spark.rdd.MapPartitionsRDD",
-    org.apache.logging.log4j.Level.ERROR)
-  catch { case _: Throwable => () } // logging backend absent: cosmetic only
-
   private val live = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[Dataset[_], java.lang.Boolean]())
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (round 10): print the ngram family's guard probes for a
   * corpus — the quantitative saturation evidence without running the
   * candidate joins the probes exist to predict. For each gram source
@@ -18,14 +16,9 @@ import org.apache.spark.sql.SparkSession
   */
 object NgramProbe {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: NgramProbe <corpusDir> [collapse|r14]")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession()
     if (args.length > 1 && args(1) == "collapse") {
       // round-11 PPJoin+ A/B companion: verify-input sizes of the r10
       // and r11 jaccard banded compositions (box-independent counts)

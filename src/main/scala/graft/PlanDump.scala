@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the executed physical plan of one registered query —
   * the `.explain("formatted")` feedback loop as a one-liner.
   *
@@ -12,29 +10,26 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val outDir = args.sliding(2).collectFirst {
-      case Array("--out", d) => d }
-    val positional = {
-      var rest = args.toSeq
-      val b = Seq.newBuilder[String]
-      while (rest.nonEmpty) rest match {
-        case Seq("--out", _, tail @ _*) => rest = tail
-        case Seq(a, tail @ _*) => if (!a.startsWith("--")) b += a; rest = tail
-      }
-      b.result()
+    def usage(): Nothing = throw new IllegalArgumentException(
+      "usage: PlanDump <query>[,q2,...] [sfDir] [--aqe] [--out dir]")
+    def positional(rest: List[String]): List[String] = rest match {
+      case "--out" :: Nil => usage()
+      case "--out" :: _ :: tail => positional(tail)
+      case a :: tail if a.startsWith("--") => positional(tail)
+      case a :: tail => a :: positional(tail)
+      case Nil => Nil
     }
-    val names = positional.filter(!_.startsWith("/")).flatMap(_.split(","))
-    if (names.isEmpty) sys.error("usage: PlanDump <query>[,q2,...] [sfDir] [--aqe] [--out dir]")
-    val sfDir = positional.find(_.startsWith("/")).getOrElse("/root/testdata/sf0.001")
+    val (paths, queries) = positional(args.toList).partition(_.startsWith("/"))
+    val names = queries.flatMap(_.split(","))
+    if (names.isEmpty) usage()
+    val sfDir = paths.headOption.getOrElse("/root/testdata/sf0.001")
+    val outDir = args.sliding(2).collectFirst { case Array("--out", d) => d }
     val aqe = args.contains("--aqe")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // PlanSpec's geometry: 4 cores, 4 shuffle partitions, AQE off unless
+    // asked for, so the printed plan is the one PlanSpec asserts on
+    val spark = DevSession("spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> aqe.toString)
     names.foreach { name =>
       val df = CacheScope.uncached(SparkEntry.queries(name)(spark, sfDir))
       val formatted = df.queryExecution.explainString(

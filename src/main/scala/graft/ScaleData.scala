@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility: derive an N×-scaled copy of a driver test-data directory
@@ -103,8 +103,11 @@ object ScaleData {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(src, dst, nStr) = args.take(3)
-    val n = nStr.toInt
+    val (src, dst, n) = args.toSeq match {
+      case Seq(from, to, replicas, _*) => (from, to, replicas.toInt)
+      case _ => throw new IllegalArgumentException(
+        "usage: ScaleData <srcDir> <dstDir> <replicas>")
+    }
     // Two per-replica bijection schemes (see `salted` below): Caesar
     // rotations for n <= 10 (bit-compatible with the r8 sf1 artifacts),
     // seeded per-class permutations beyond that — rotations are the
@@ -113,13 +116,7 @@ object ScaleData {
     // artifact the bijection exists to eliminate.
     require(n <= 1000, s"key offset spacing supports n <= 1000 (got $n)")
     val off = 10000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession()
 
     // Tables.events sets the nanosAsLong conf the raw events scan needs;
     // the scaled copy then stores ts as epoch-nano longs, which the same

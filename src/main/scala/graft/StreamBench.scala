@@ -20,19 +20,12 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark: SparkSession = DevSession(
       // skip watermark-only micro-batches: throughput runs don't need the
       // extra empty batch per trigger
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
       // keep every batch's progress: the RocksDB commit sums cover the run
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.streaming.numRecentProgressUpdates" -> "100000")
     Graft.init(spark)
     // the transformWithState pipelines (funnel, ab_seq monitor) need the
     // RocksDB provider; deliberate session-wide opt-in (see StateStores)

@@ -44,21 +44,13 @@ object StreamStateBench {
   def main(args: Array[String]): Unit = {
     val keys = sys.env.getOrElse("SPARK_GRAFT_STATE_KEYS", "10000000").toLong
     val batches = sys.env.getOrElse("SPARK_GRAFT_STATE_BATCHES", "20").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spreadUs = sys.env.getOrElse("SPARK_GRAFT_STATE_SPREAD_US", "0").toLong
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val spark: SparkSession = DevSession(
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
       // default 100 recentProgress entries would silently truncate the
       // p50/max stats when batches > 100 while the JSON claims the full
       // run (r8 ADVICE)
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        (batches + 10).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.streaming.numRecentProgressUpdates" -> (batches + 10).toString)
     Graft.init(spark)
     graft.streaming.StateStores.useRocksDB(spark)
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Row-for-row equality check between two [[SparkEntry.queries]] entries
   * on one corpus — the in-engine harness for "this scale tier must equal
   * that quadratic oracle tier" spot checks at SFs the unit suites don't
@@ -28,13 +26,7 @@ object TwinCheck {
     require(args.length >= 2, "usage: TwinCheck <queryA> <queryB> [sfDir]")
     val (qa, qb) = (args(0), args(1))
     val sf = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().appName("graft-twincheck")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     def run(name: String): (Seq[String], Double) = {
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sf)

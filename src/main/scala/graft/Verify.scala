@@ -1,21 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (Array(sfDir, outDir), rest) = args.splitAt(2)
     // optional extra args = query-name subset (dev loop); driver passes none
-    val wanted = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, outDir, wanted) = args.toSeq match {
+      case Seq(sf, out, rest @ _*) => (sf, out, rest.toSet)
+      case _ => throw new IllegalArgumentException(
+        "usage: Verify <sfDir> <outDir> [query ...]")
+    }
+    val spark = DevSession()
     new java.io.File(outDir).mkdirs()
     val picked =
       if (wanted.isEmpty) SparkEntry.queries

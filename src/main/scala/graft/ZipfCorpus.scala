@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Dev utility: a realistic-vocabulary synthetic document corpus for
@@ -73,13 +73,13 @@ object ZipfCorpus {
     */
   private[graft] def word(r: Int, seed: Long): String = {
     val sb = new StringBuilder(8)
-    var h = mix(seed ^ (r.toLong * 0x9e3779b97f4a7c15L))
+    val h = mix(seed ^ (r.toLong * 0x9e3779b97f4a7c15L))
     var i = 0
     while (i < 3) { sb.append(('a' + ((h >>> (i * 5)) & 31) % 26).toChar); i += 1 }
     var n = r + 1 // bijective base-26: 1->a, 26->z, 27->aa
     val tail = new StringBuilder(4)
     while (n > 0) { val d = (n - 1) % 26; tail.append(('a' + d).toChar); n = (n - 1) / 26 }
-    sb.append(tail.reverseContents()).toString
+    sb.append(tail.reverseInPlace()).toString
   }
 
   private def draw(cdf: Array[Double], u: Double): Int = {
@@ -129,16 +129,11 @@ object ZipfCorpus {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: ZipfCorpus <dstDir> <nDocs> [seed]")
     val dst = args(0)
     val nDocs = args(1).toLong
     val seed = if (args.length > 2) args(2).toLong else 42L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession()
     val cdfB = spark.sparkContext.broadcast(zipfCdf())
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),

@@ -64,6 +64,8 @@ case class ZValue(children: Seq[Expression]) extends Expression {
         case i: Int => i.toLong
         case s: Short => s.toLong
         case b: Byte => b.toLong
+        case other => throw new IllegalArgumentException(
+          s"z_value argument must be integral, got ${other.getClass.getName}")
       }
       j += 1
     }

@@ -1118,9 +1118,10 @@ object VectorOps {
       fail("corpus fingerprint mismatch — the corpus changed under the index")
     // r14: the two row-count probes are independent reads — issue them
     // concurrently (§2.6); same checks, one scheduling wave
-    val Seq(nCentroids, nCodebooks) = inParallel(
+    val counts = inParallel(
       () => spark.read.parquet(s"$dir/centroids.parquet").count(),
       () => spark.read.parquet(s"$dir/codebooks.parquet").count())
+    val (nCentroids, nCodebooks) = (counts(0), counts(1))
     if (nCentroids != num("rows_centroids"))
       fail(s"centroids.parquet has $nCentroids rows, manifest says " +
         s"${num("rows_centroids")}")
@@ -1241,10 +1242,11 @@ object VectorOps {
     // manifest written from READ-BACKS of the temp artifacts (proving
     // each is loadable — the same checks as before, now issued
     // concurrently, §2.6), then the atomic publish
-    val Seq(rowsCentroids, rowsCodebooks, rowsCodes) = inParallel(
+    val rows = inParallel(
       () => spark.read.parquet(s"$tmp/centroids.parquet").count(),
       () => spark.read.parquet(s"$tmp/codebooks.parquet").count(),
       () => spark.read.parquet(s"$tmp/codes.parquet").count())
+    val (rowsCentroids, rowsCodebooks, rowsCodes) = (rows(0), rows(1), rows(2))
     spark.sparkContext.setJobDescription(null)
     val manifest =
       s"""{"params": "$IvfParams",
@@ -1303,7 +1305,7 @@ object VectorOps {
       .select(col("q_id"), col("p_id").as("cell"))
       .transform(CacheScope.barrier) // partition filter + ADC join share it
     val probedCells = probes.select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
+      .collect().map(_.getLong(0)).sorted.toIndexedSeq
     val codes = spark.read.parquet(s"$dir/codes.parquet")
       .filter(col("cell").isin(probedCells: _*))
     val lut = pqSub(q.select(col("q_id").as("vec_id"), col("qv").as("v")), 16)
@@ -1924,7 +1926,7 @@ object VectorOps {
           val theta = (a(qi)(qi) - a(p)(p)) / (2.0 * a(p)(qi))
           val t = math.signum(theta) match {
             case 0.0 => 1.0
-            case s   => s / (math.abs(theta) + math.sqrt(theta * theta + 1.0))
+            case sg  => sg / (math.abs(theta) + math.sqrt(theta * theta + 1.0))
           }
           val c = 1.0 / math.sqrt(t * t + 1.0)
           val s = t * c

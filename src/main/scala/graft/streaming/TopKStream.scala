@@ -46,8 +46,7 @@ object TopKStream {
     * summary per key, same state bound per group.
     */
   def topkByKey[K](items: Dataset[(K, String)], capacity: Int)(
-      implicit ke: org.apache.spark.sql.Encoder[K],
-      oe: org.apache.spark.sql.Encoder[(K, Seq[(String, Long)])]): Dataset[(K, Seq[(String, Long)])] =
+      implicit ke: org.apache.spark.sql.Encoder[K]): Dataset[(K, Seq[(String, Long)])] =
     items.groupByKey(_._1)
       .agg(new KeyedMG[K](capacity).toColumn.name("topk"))
 

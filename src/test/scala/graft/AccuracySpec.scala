@@ -398,7 +398,7 @@ class AccuracySpec extends SparkSpec {
     val (means, vals, vecs) = VectorOps.pcaFit(spark, sf01)
     // eigenvalues: non-negative (covariance is PSD) and sorted descending
     vals.foreach(v => assert(v >= -1e-9, s"negative eigenvalue $v"))
-    vals.sliding(2).foreach { case Array(a, b) =>
+    vals.zip(vals.drop(1)).foreach { case (a, b) =>
       assert(a >= b - 1e-12, s"eigenvalues not descending: $a < $b")
     }
     // eigenvectors: orthonormal rows (W Wᵀ = I)

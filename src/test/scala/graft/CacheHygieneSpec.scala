@@ -31,4 +31,15 @@ class CacheHygieneSpec extends SparkSpec {
     assert(persisted.isEmpty,
       s"leaked cached RDDs: ${persisted.values.map(_.toString).take(10).mkString("; ")}")
   }
+
+  test("using CacheScope leaves the MapPartitionsRDD log level alone") {
+    // silencing the "lineage has been truncated" WARN is a dev-main choice
+    // (DevSession); a user session that merely loads CacheScope keeps its
+    // own logging
+    import org.apache.logging.log4j.LogManager
+    CacheScope.barrier(spark.range(10).toDF()).count()
+    CacheScope.release()
+    assert(LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD").getLevel ==
+      LogManager.getRootLogger.getLevel)
+  }
 }

@@ -18,7 +18,7 @@ class QualityTrainSpec extends SparkSpec {
       assert(names.length == w.length)
       // full-batch GD at a sane lr: every step must improve (or hold) the
       // smooth convex objective
-      losses.sliding(2).foreach { case Seq(a, b) =>
+      losses.zip(losses.drop(1)).foreach { case (a, b) =>
         assert(b <= a + 1e-9, s"loss rose: $a -> $b (trace: $losses)")
       }
       // apply the weights back and score training accuracy vs majority

@@ -21,7 +21,7 @@ class FileIOSpec extends SparkSpec {
     // node carries a non-empty partition-filter list and reads only the
     // name=a directory
     val scans = back.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      case scan: org.apache.spark.sql.execution.FileSourceScanExec => scan
     }
     assert(scans.nonEmpty && scans.head.partitionFilters.nonEmpty,
       s"expected pruned scan:\n${back.queryExecution.executedPlan}")
@@ -92,7 +92,7 @@ class FileIOSpec extends SparkSpec {
       val r = spark.read.parquet(f).agg(min("l_orderkey"), max("l_orderkey")).first()
       (r.getLong(0), r.getLong(1))
     }.sortBy(_._1)
-    ranges.sliding(2).foreach { case Array((_, hi), (lo2, _)) =>
+    ranges.zip(ranges.drop(1)).foreach { case ((_, hi), (lo2, _)) =>
       assert(hi <= lo2, s"overlapping file ranges: ${ranges.mkString(", ")}")
     }
   }

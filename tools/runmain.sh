@@ -15,10 +15,10 @@ done
 # GRAFT_CLASSES overrides the classes dir — sweeps snapshot the compiled
 # classes to a frozen copy so recompiles during a long background sweep
 # can't hand a half-written class file to the next per-query JVM.
+# The mains set their own session settings (graft.DevSession).
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 exec java $OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -XX:ReservedCodeCacheSize=512m \
-  -cp "${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}:/opt/spark/jars/*" \
+  -cp "${GRAFT_CLASSES:-$ROOT/target/scala-2.13/classes}:/opt/spark/jars/*" \
   "$@"
