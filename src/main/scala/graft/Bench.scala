@@ -221,6 +221,9 @@ object Bench {
         merged ++= measureInProcess(chunk)
       }
     }
+    // the chunk logs are kept only to explain a fallback
+    if (fellBack > 0) System.err.println(s"[bench] chunk logs kept in $workDir")
+    else org.apache.commons.io.FileUtils.deleteDirectory(workDir.toFile)
     emit(merged.toSeq.sortBy(_._1), sfDir, skipped, protocol, forked, fellBack)
   }
 

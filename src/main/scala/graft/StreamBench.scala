@@ -60,7 +60,7 @@ object StreamBench {
     def runTyped[T: org.apache.spark.sql.Encoder](
         name: String, data: Array[T],
         pipeline: org.apache.spark.sql.Dataset[T] => DataFrame,
-        mode: String): (String, Double, Long, Long, Seq[Long]) = {
+        mode: String): (String, Option[Double], Long, Long, Seq[Long]) = {
       val input = MemoryStream[T]
       val qn = s"sb_$name"
       val q = pipeline(input.toDS()).writeStream.format("memory")
@@ -85,7 +85,8 @@ object StreamBench {
       val commit = commitMetrics.map(k =>
         ops.flatMap(o => Option(o.customMetrics.get(k)).map(_.toLong)).sum)
       q.stop()
-      (name, (data.length - 1000) / secs, outRows, p50, commit)
+      // no rate when the warm-up batch took every record
+      (name, Option(data.length - 1000).filter(_ > 0).map(_ / secs), outRows, p50, commit)
     }
     val t1 = runTyped("t1_filter", frames,
       (ds: org.apache.spark.sql.Dataset[Frame]) => Pipelines.filterPipeline(ds.toDF()),
@@ -125,7 +126,7 @@ object StreamBench {
 
     val qs = Seq(t1, t2, fun, topk, span, abSeq).map { case (n, rps, rows, p50, commit) =>
       val rocks = commitMetrics.zip(commit).map { case (k, v) => s""","$k":$v""" }.mkString
-      s""""$n":{"records_per_sec":${rps.round},"out_rows":$rows,"batch_ms_p50":$p50$rocks}"""
+      s""""$n":{"records_per_sec":${rps.fold("null")(_.round.toString)},"out_rows":$rows,"batch_ms_p50":$p50$rocks}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"stream_throughput","unit":"records/sec","pipelines":$qs,"n_records":${frames.length},"sf":"$sfDir"}""")
     spark.stop()

@@ -47,7 +47,6 @@ object TextFns {
   /** SQL fragments (same semantics) for expr()-built pipelines. */
   def normTextSql(col: String): String =
     s"trim(regexp_replace(lower($col), '[^a-z0-9]+', ' '))"
-  def tokensSql(col: String): String = s"split(${normTextSql(col)}, ' ')"
 
   /** Word w-shingles (w=3) over a token-array column name; yields the
     * space-joined shingle strings (count = n-2 for n>=3 tokens; empty array
@@ -117,16 +116,4 @@ object TextFns {
   /** DuckDB twin of minhashSql (same integers). */
   def minhashDuck(hashArrCol: String, i: Int): String =
     s"list_min(list_transform($hashArrCol, h -> (${MinhashA(i)} * h + ${MinhashB(i)}) % $MinhashP))"
-
-  /** 32-bit SimHash over a token-hash-array column (hashes precomputed so
-    * each token is digested once, not 32 times): bit j set iff the majority
-    * of elements have bit j set (strict majority; tie → 0).
-    */
-  def simhash32Sql(hashArrCol: String): String =
-    s"""aggregate(
-       |  transform(sequence(0, 31), j ->
-       |    IF(2 * aggregate($hashArrCol, 0L, (a, h) -> a + (shiftright(h, j) & 1))
-       |         > size($hashArrCol),
-       |       shiftleft(CAST(1 AS BIGINT), j), 0L)),
-       |  0L, (a, x) -> a + x)""".stripMargin
 }

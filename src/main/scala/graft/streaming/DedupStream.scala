@@ -7,6 +7,16 @@ import org.apache.spark.sql.types.{StructField, StructType}
 import graft.model.LogEvent
 import graft.serde.JsonCodec
 
+/** Slim carrier for the frame path: raw payload forwarded verbatim, only
+  * the event time materialized (the dedup id is in the group key).
+  */
+case class SlimFrame(key: String, value: String, ts_us: Long)
+
+/** Group key: a dedup id with bucket −1, or, for a record with no id, a
+  * null id with a bucket ≥ 0, so the two kinds never share a key.
+  */
+case class DedupKey(id: String, bucket: Int)
+
 /** Exact windowed deduplication — the Spark-native re-implementation of the
   * reference's `DeduplicationTransformer` (SURVEY.md §2.4; reference
   * `KStreamDistinct.java:42-112`):
@@ -37,15 +47,13 @@ import graft.serde.JsonCodec
   * whereas Kafka Streams processes arbitrarily late records. Within the
   * watermark the two-sided probe is reproduced by comparing |t_stored − t|.
   */
-/** Slim carrier for the frame path: raw payload forwarded verbatim, only
-  * the dedup id and event time materialized.
-  */
-case class SlimFrame(key: String, value: String, id: String, ts_us: Long)
-
 object DedupStream {
 
   val DefaultWindowUs: Long = 10L * 60 * 1000000 // 10 min, reference :135
   val DefaultRetentionUs: Long = 10L * 60 * 1000000
+
+  /** Records with no id are spread over this many groups by payload hash. */
+  private val NullIdBuckets = 32
 
   /** Hand-pruned parse schema: only the dedup-id path. Catalyst's
     * OptimizeJsonExprs would prune `from_json(...).getField` chains
@@ -63,16 +71,18 @@ object DedupStream {
   /** Per-key, per-micro-batch transition function. Events in a batch are
     * processed in event-time order (the reference sees them in offset
     * order; for in-order streams these agree — out-of-order records within
-    * a batch are handled deterministically by the sort).
+    * a batch are handled deterministically by the sort). A group of
+    * records with no id passes through unchanged: it reads and writes no
+    * state and sets no timeout (reference `KStreamDistinct.java:71-72`).
     */
   private def transition(windowUs: Long, retentionUs: Long, streamTime: Boolean)(
-      id: String, rows: Iterator[SlimFrame],
+      key: DedupKey, rows: Iterator[SlimFrame],
       state: GroupState[Long]): Iterator[SlimFrame] = {
-    if (state.hasTimedOut) {
+    if (key.id == null) rows
+    else if (state.hasTimedOut) {
       state.remove()
       Iterator.empty
     } else {
-      val sorted = rows.toSeq.sortBy(_.ts_us)
       var last: Option[Long] = state.getOption
       // T2' stream-time axis: max timestamp observed so far for this key.
       // Scoped per key (the natural unit in a key-partitioned engine; the
@@ -81,7 +91,7 @@ object DedupStream {
       // in this mode (refreshed on every record), so it seeds the axis
       // across micro-batches.
       var maxSeen: Long = if (streamTime) last.getOrElse(Long.MinValue) else Long.MinValue
-      val out = sorted.iterator.filter { r =>
+      val out = rows.toSeq.sortBy(_.ts_us).filter { r =>
         // T2 (record time, reference KStreamDistinct.java:87) uses the
         // record's own timestamp; T2' (stream time, _example.java:65) uses
         // the max timestamp observed so far
@@ -90,14 +100,12 @@ object DedupStream {
         val isDup = last.exists(l => math.abs(t - l) <= windowUs / 2)
         last = Some(t) // store/refresh in both branches (:77, :80)
         !isDup
-      }.toVector
+      }
       last.foreach { l =>
         state.update(l)
-        if (state.getOption.isDefined) {
-          // expire retention past the newest stored timestamp (ms precision)
-          try state.setTimeoutTimestamp(l / 1000 + retentionUs / 1000)
-          catch { case _: UnsupportedOperationException => () } // batch mode
-        }
+        // expire retention past the newest stored timestamp (ms precision)
+        try state.setTimeoutTimestamp(l / 1000 + retentionUs / 1000)
+        catch { case _: UnsupportedOperationException => () } // batch mode
       }
       out.iterator
     }
@@ -106,9 +114,11 @@ object DedupStream {
   /** Frame-level dedup, streaming or batch (same code path; the state
     * machinery is inert on a batch DataFrame). The payload is forwarded
     * verbatim (the reference's dedup never transforms values), so only the
-    * dedup id is parsed out of the JSON and nothing is re-encoded. Null-id
-    * records bypass the stateful operator entirely (no shuffle for them
-    * beyond the union).
+    * dedup id is parsed out of the JSON and nothing is re-encoded. One
+    * linear plan: one scan, one parse, one shuffle, one stateful operator.
+    * Records with no id pass through it in groups of their own
+    * ([[DedupKey]]) with a null event time, so they neither advance the
+    * watermark nor are dropped as late.
     *
     * Input: a Kafka-shaped frame (`key`, `value`, `timestamp`); output the
     * same two columns, duplicates dropped.
@@ -127,28 +137,25 @@ object DedupStream {
                   mode: JsonCodec.Mode = JsonCodec.FailFast): DataFrame = {
     val spark = frames.sparkSession
     import spark.implicits._
-    val decoded = frames
+    val id = col("id")
+    frames
       .select(
         col("key").cast("string").as("key"),
         col("value").cast("string").as("value"),
         from_json(col("value").cast("string"), IdSchema,
           Map("mode" -> mode.sparkMode))
           .getField("exception").getField("exception_class").as("id"),
-        unix_micros(col("timestamp")).as("ts_us"),
         col("timestamp"))
-    val noId = decoded.filter(col("id").isNull)
-      .select(col("key"), col("value"))
-    val deduped = decoded.filter(col("id").isNotNull)
+      // a projection of its own: `id` is read three times here, parsed once
+      .select(col("key"), col("value"), id,
+        when(id.isNull, pmod(hash(col("value")), lit(NullIdBuckets))).otherwise(-1).as("bucket"),
+        unix_micros(col("timestamp")).as("ts_us"),
+        when(id.isNotNull, col("timestamp")).as("timestamp"))
       .withWatermark("timestamp", "10 minutes")
-      // keep `timestamp` physically present so the watermark column
-      // reaches the stateful operator (the typed view ignores it)
-      .select(col("key"), col("value"), col("id"), col("ts_us"), col("timestamp"))
-      .as[SlimFrame]
-      .groupByKey(_.id)
+      .groupBy(id, col("bucket")).as[DedupKey, SlimFrame]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         transition(windowUs, retentionUs, streamTime))
       .select(col("key"), col("value"))
-    deduped.unionByName(noId)
   }
 
   /** Tier-1 approximate dedup for arbitrary DataFrames: built-in

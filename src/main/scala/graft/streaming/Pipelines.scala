@@ -16,29 +16,28 @@ import graft.serde.JsonCodec
 object Pipelines {
 
   /** T1 (reference `KafkaStreamsApplication.java:92-114`): JSON-decode →
-    * keep level == "INFO" → JSON-encode. Stateless, shuffle-free,
-    * whole-stage-codegen'd end to end; `OptimizeJsonExprs` prunes the
-    * `from_json` to the fields actually consumed.
+    * keep level == "INFO" → JSON-encode. Stateless and shuffle-free. The
+    * one-element `explode` keeps the filter on the parse that `to_json`
+    * re-encodes: pushed below it, the filter would parse every record again.
     */
   def filterPipeline(frames: DataFrame, level: String = "INFO",
                      mode: JsonCodec.Mode = JsonCodec.FailFast): DataFrame =
     JsonCodec.encodeKafkaFrame(
       JsonCodec.decodeKafkaFrame(frames, LogEvent.schema, mode)
+        .select(col("key"), explode(array(col("event"))).as("event"))
         .filter(col("event.level") === level))
 
-  /** T2 (reference `KStreamDistinct.java:128-153`): JSON-decode → exact
-    * windowed dedup on exception_class (stateful, hash-partitioned by id)
-    * → JSON-encode. The duplicate-tombstone + null-filter of the reference
-    * collapses into "don't emit" (SURVEY.md §2.2 F2).
+  /** T2 (reference `KStreamDistinct.java:128-153`): parse the dedup id →
+    * exact windowed dedup on exception_class (stateful, hash-partitioned
+    * by id) → forward the payload verbatim. The duplicate-tombstone +
+    * null-filter of the reference collapses into "don't emit" (SURVEY.md
+    * §2.2 F2).
     */
   def dedupPipeline(frames: DataFrame,
                     windowUs: Long = DedupStream.DefaultWindowUs,
                     retentionUs: Long = DedupStream.DefaultRetentionUs,
                     mode: JsonCodec.Mode = JsonCodec.FailFast,
                     streamTime: Boolean = false): DataFrame =
-    // frame-level path: payloads forwarded verbatim, only the dedup id is
-    // parsed (single-field JSON prune). streamTime=true selects the T2'
-    // axis (reference KStreamDistinct_example.java:65).
     DedupStream.dedupFrames(frames, windowUs, retentionUs, streamTime, mode)
       .select(col("key").cast("binary").as("key"),
         col("value").cast("binary").as("value"))

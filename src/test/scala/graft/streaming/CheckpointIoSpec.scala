@@ -9,6 +9,7 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import graft.SparkSpec
 import graft.io.SpawnFreeLocalFs
 
@@ -130,5 +131,32 @@ class CheckpointIoSpec extends SparkSpec {
     assert(dedupAcross(StockSetup, Setup)._1 == uninterrupted)
     assert(dedupAcross(Setup, StockSetup)._1 == uninterrupted)
     assert(dedupAcross(StockSetup, Setup, StockSetup)._1 == uninterrupted)
+  }
+
+  test("a checkpoint of the two-scan T2 plan does not restart: its offset log records two sources") {
+    val s = spark
+    import s.implicits._
+    // Written by an earlier dedupPipeline, whose plan scanned its source
+    // twice (a union of the id and the no-id branch), from a parquet file
+    // source into a parquet sink on RocksDB: one data batch (E1@0, E2@1, a
+    // duplicate E1@2 and a record with no id) and one no-data batch.
+    // Hadoop's .crc files are left out, so the restart reads it unchecked.
+    val fixture = java.nio.file.Paths.get(getClass.getResource("/t2-two-scan-checkpoint").toURI)
+    val base = Files.createTempDirectory("graft_two_scan")
+    val ckpt = base.resolve("ckpt")
+    val files = Files.walk(fixture)
+    try files.iterator().asScala.foreach(f => Files.copy(f, ckpt.resolve(fixture.relativize(f).toString)))
+    finally files.close()
+    val src = base.resolve("src").toString
+    Seq(boom("E1", 3), boom("E3", 4)).toDF().coalesce(1).write.parquet(src)
+    withRocksDB {
+      val q = Pipelines.dedupPipeline(spark.readStream.schema(Seq.empty[Frame].toDF().schema)
+          .parquet(src))
+        .writeStream.format("parquet").option("path", base.resolve("out").toString)
+        .option("checkpointLocation", ckpt.toString).outputMode("append").start()
+      val e = intercept[StreamingQueryException](try q.processAllAvailable() finally q.stop())
+      assert(e.getMessage.contains(
+        "There are [2] sources in the checkpoint offsets and now there are [1] sources"), e.getMessage)
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import graft.model.LogEvent
 
 /** A keyed, timestamped log record — the reference's `KStream<String,
@@ -46,7 +47,17 @@ object DedupFrames {
   def dedupStreaming(spark: SparkSession, batches: Seq[Seq[LogRecord]],
                      windowUs: Long = DedupStream.DefaultWindowUs,
                      retentionUs: Long = DedupStream.DefaultRetentionUs,
-                     streamTime: Boolean = false): Seq[LogRecord] = {
+                     streamTime: Boolean = false): Seq[LogRecord] =
+    dedupStreamingProgress(spark, batches, windowUs, retentionUs, streamTime)._1
+
+  /** [[dedupStreaming]], also returning the progress of every micro-batch
+    * that read input.
+    */
+  def dedupStreamingProgress(spark: SparkSession, batches: Seq[Seq[LogRecord]],
+                             windowUs: Long = DedupStream.DefaultWindowUs,
+                             retentionUs: Long = DedupStream.DefaultRetentionUs,
+                             streamTime: Boolean = false
+                            ): (Seq[LogRecord], Seq[StreamingQueryProgress]) = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[LogRecord]
@@ -59,7 +70,8 @@ object DedupFrames {
         input.addData(tag(b, from))
         q.processAllAvailable()
       }
-      survivors(spark.table(qn), batches.flatten.toIndexedSeq)
+      (survivors(spark.table(qn), batches.flatten.toIndexedSeq),
+        q.recentProgress.filter(_.numInputRows > 0).toSeq)
     } finally q.stop()
   }
 }

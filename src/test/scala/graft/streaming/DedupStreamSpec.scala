@@ -59,6 +59,30 @@ class DedupStreamSpec extends SparkSpec {
     assert(got.count(_._1 == "A") == 1)
   }
 
+  test("a null-id record older than the watermark still passes through") {
+    // A@20min moves the watermark to 10 min: the new id B@0 is dropped as
+    // late, the null-id record at the same time is not
+    val got = runStreaming(Seq(Seq(rec("A", 20 * Min)), Seq(rec("B", 0), rec(null, 0))))
+    assert(got.toSet == Set(("A", Base + 20 * Min), (null, Base)), got)
+  }
+
+  test("a null-id record far ahead in event time does not advance the watermark") {
+    // had the null-id record at 60 min moved the watermark to 50 min, B@5
+    // would be dropped as late
+    val got = runStreaming(Seq(Seq(rec("A", 0), rec(null, 60 * Min)), Seq(rec("B", 5 * Min))))
+    assert(got.toSet == Set(("A", Base), (null, Base + 60 * Min), ("B", Base + 5 * Min)), got)
+  }
+
+  test("a batch of only null-id records writes no state") {
+    val (out, progress) = DedupFrames.dedupStreamingProgress(spark,
+      Seq(Seq(rec(null, 0), rec(null, 0), rec(null, 1000), rec(null, 3 * Min))))
+    assert(out.size == 4)
+    assert(progress.nonEmpty)
+    progress.map(_.stateOperators.head).foreach { op =>
+      assert(op.numRowsTotal == 0 && op.numRowsUpdated == 0, op.json)
+    }
+  }
+
   test("state persists across micro-batches") {
     val got = runStreaming(Seq(
       Seq(rec("A", 0)),

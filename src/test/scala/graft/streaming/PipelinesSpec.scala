@@ -1,7 +1,11 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.LogEvent
@@ -74,6 +78,48 @@ class PipelinesSpec extends SparkSpec {
       assert(vals.count(_.contains("RuntimeException")) == 1)
       assert(vals.count(_.contains("\"level\":\"INFO\"")) == 1)
     } finally q.stop()
+  }
+
+  /** Runs `pipeline` over one MemoryStream batch of `frames`; returns the
+    * batch's executed plan and its progress `numInputRows`. No-data
+    * batches are off, so the last execution is the data batch's.
+    */
+  private def oneBatch(pipeline: DataFrame => DataFrame, frames: Seq[Frame]): (SparkPlan, Long) = {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    SparkSpec.restoring(spark, Seq(noData)) {
+      spark.conf.set(noData, "false")
+      val input = MemoryStream[Frame]
+      val q = pipeline(input.toDF()).writeStream.format("memory")
+        .queryName(s"plan_${System.nanoTime()}").outputMode("append").start()
+      try {
+        input.addData(frames)
+        q.processAllAvailable()
+        (q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan,
+          q.lastProgress.numInputRows)
+      } finally q.stop()
+    }
+  }
+
+  private def jsonParses(plan: SparkPlan): Int =
+    plan.collect { case n => n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum }.sum
+
+  test("T1 and T2 read and parse each record once: one scan, one from_json, no union") {
+    def boom(id: String) =
+      s"""{"exception":{"exception_class":"$id","exception_message":"x","stacktrace":"s"},"version":1,"level":"ERROR"}"""
+    val at = new Timestamp(86400L * 1000L)
+    val frames = Seq(Frame("a", boom("E1"), at), Frame("b", boom("E1"), at),
+      Frame("c", info("h1"), at), Frame("d", error("h2"), at))
+    val (t2, t2Rows) = oneBatch(Pipelines.dedupPipeline(_), frames)
+    assert(t2.collect { case s: MicroBatchScanExec => s }.size == 1, t2)
+    assert(t2.collect { case u: UnionExec => u }.isEmpty, t2)
+    assert(jsonParses(t2) == 1, t2)
+    assert(t2Rows == frames.size)
+    val (t1, t1Rows) = oneBatch(Pipelines.filterPipeline(_), frames)
+    assert(jsonParses(t1) == 1, t1)
+    assert(t1Rows == frames.size)
   }
 
   test("checkpoint identity: restart resumes from the offset log, no reprocessing (SURVEY §2.5)") {
