@@ -308,9 +308,8 @@ object Bench {
       // (the round-2 hygiene fix); this extends the same logic to the
       // warmup→timed boundary inside one query. Warm barriers (cached
       // intermediates) are persistent references and survive the GC —
-      // the warm-cache protocol is unchanged. SPARK_GRAFT_BENCH_NOGC=1
-      // restores the old behavior for A/B.
-      if (!sys.env.get("SPARK_GRAFT_BENCH_NOGC").contains("1")) System.gc()
+      // the warm-cache protocol is unchanged.
+      System.gc()
       // 2. timed runs with spread-gated retry
       def timed3() = Seq(once(fn), once(fn), once(fn))
       var runs = timed3().sorted
@@ -381,12 +380,10 @@ object Bench {
     // descriptor below; it removes warmup-garbage accounting skew from
     // the timed medians, the r13 verdict's variance diagnosis.
     val jitGate = sys.env.get("SPARK_GRAFT_BENCH_JITGATE").contains("1")
-    val gcLevel = !sys.env.get("SPARK_GRAFT_BENCH_NOGC").contains("1")
     val runsDesc =
       if (fast && jitGate) "jit-settled warmups (<=4, settle when compile delta < 3s) + 1 cold-cache timed run"
       else if (fast) "1 warmup + 1 cold-cache timed run"
-      else if (gcLevel) "stability-gated warmup, gc level, median-of-3 (best-3-of-6 on spread)"
-      else "stability-gated warmup, median-of-3 (best-3-of-6 on spread)"
+      else "stability-gated warmup, gc level, median-of-3 (best-3-of-6 on spread)"
     if (wanted.isEmpty)
       runSplit(picked, sfDir, skipped,
         s"v4 fork-per-family-chunk, quadratic twins isolated; $runsDesc")

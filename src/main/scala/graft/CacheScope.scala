@@ -18,8 +18,9 @@ import org.apache.spark.sql.Dataset
   * `barrier(ds)` persists and registers; `release()` unpersists
   * everything registered — call it once the frames returned since the
   * last release have been fully consumed (written out / collected).
-  * Operators that can scope their own cache (eager loops like
-  * connected components) still unpersist locally and never register.
+  * Operators that can scope their own cache still unpersist locally;
+  * eager loops that checkpoint (connected components) register their
+  * checkpoints with `trackCheckpoints`.
   */
 object CacheScope {
   private val live = java.util.Collections.newSetFromMap(

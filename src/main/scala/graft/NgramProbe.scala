@@ -12,29 +12,23 @@ package graft
   * minutes instead of the hours (or disk DNFs) the joins themselves
   * cost in the saturated regime.
   *
-  * {{{ tools/runmain.sh graft.NgramProbe /tmp/zipf/150k }}}
+  * Mode `agg` instead runs each banded family's candidate join and
+  * per-pair aggregate (jaccard and containment over char-4-grams, the
+  * `dedup_lsh_recall` truth pass) and prints the aggregate's input rows
+  * (Σ matches) and its survivor count.
+  *
+  * {{{ tools/runmain.sh graft.NgramProbe /tmp/zipf/150k [agg] }}}
   */
 object NgramProbe {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: NgramProbe <corpusDir> [collapse|r14]")
+    require(args.length == 1 || (args.length == 2 && args(1) == "agg"),
+      "usage: NgramProbe <corpusDir> [agg]")
     val dir = args(0)
     val spark = DevSession()
-    if (args.length > 1 && args(1) == "collapse") {
-      // round-11 PPJoin+ A/B companion: verify-input sizes of the r10
-      // and r11 jaccard banded compositions (box-independent counts)
-      val s = operators.DedupOps.jaccardCollapseProbe(spark, dir)
-      println(s"[ngramprobe] $dir jaccard_collapse $s")
-    } else if (args.length > 1 && args(1) == "r14") {
-      // r14 evidence: recall-audit collapse + per-family size-filter cuts
-      val r = operators.DedupOps.recallCollapseProbe(spark, dir)
-      println(s"[ngramprobe] $dir recall_collapse $r")
-      operators.DedupOps.sizeBoundProbe(spark, dir).foreach { case (k, s) =>
-        println(s"[ngramprobe] $dir sizebound_$k $s")
-      }
-    } else {
-      val probes = operators.DedupOps.ngramProbes(spark, dir)
-      probes.foreach { case (name, s) => println(s"[ngramprobe] $dir $name $s") }
-    }
+    val (mode, probes) =
+      if (args.length == 2) ("agg_", operators.DedupOps.aggProbe(spark, dir))
+      else ("", operators.DedupOps.ngramProbes(spark, dir))
+    probes.foreach { case (name, s) => println(s"[ngramprobe] $dir $mode$name $s") }
     spark.stop()
   }
 }

@@ -10,16 +10,15 @@ package graft
   * Prints per-query wall seconds, row counts, and EQUAL=true/false
   * (sorted full-row comparison); exits 1 on mismatch.
   *
-  * Timing de-bias (r12 verdict #5): the informational walls used to be
-  * order-biased — query A ran first and absorbed the JVM's whole JIT
-  * cold start (the r12 artifact recorded banded@50k at 173 s here vs
-  * 60.6–66.6 s under the jitgated fresh-JVM harness). Both queries are
-  * now warmed once on a small corpus (`TWIN_WARMUP_SF`, default
-  * sf0.001) before either timed run: the warmup compiles the same
-  * codegen'd stages the timed plans execute, so neither query is
-  * charged the other's compilation. `TWIN_WARMUP=0` restores the old
-  * single-pass behavior. EQUAL/rows remain the evidence either way;
-  * the walls are informational.
+  * Timing de-bias (r12 verdict #5): query A used to run first and
+  * absorb the JVM's whole JIT cold start (the r12 artifact recorded
+  * banded@50k at 173 s here vs 60.6–66.6 s under the jitgated
+  * fresh-JVM harness). Both queries are warmed once on a small corpus
+  * (`TWIN_WARMUP_SF`, default sf0.001) before either
+  * timed run: the warmup compiles the same codegen'd stages the timed
+  * plans execute, so neither query is charged the other's compilation.
+  * EQUAL and the row counts are the evidence; the walls are
+  * informational.
   */
 object TwinCheck {
   def main(args: Array[String]): Unit = {
@@ -37,17 +36,15 @@ object TwinCheck {
       spark.catalog.clearCache(); CacheScope.release()
       (rows, secs)
     }
-    if (sys.env.getOrElse("TWIN_WARMUP", "1") != "0") {
-      val wsf = sys.env.getOrElse("TWIN_WARMUP_SF", "/root/testdata/sf0.001")
-      val t0 = System.nanoTime()
-      Seq(qa, qb).foreach { q =>
-        SparkEntry.queries(q)(spark, wsf)
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache(); CacheScope.release()
-      }
-      println(f"[twincheck] warmup: both queries once on $wsf " +
-        f"in ${(System.nanoTime() - t0) / 1e9}%.2f s (JIT de-bias)")
+    val wsf = sys.env.getOrElse("TWIN_WARMUP_SF", "/root/testdata/sf0.001")
+    val t0 = System.nanoTime()
+    Seq(qa, qb).foreach { q =>
+      SparkEntry.queries(q)(spark, wsf)
+        .write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache(); CacheScope.release()
     }
+    println(f"[twincheck] warmup: both queries once on $wsf " +
+      f"in ${(System.nanoTime() - t0) / 1e9}%.2f s (JIT de-bias)")
     val (ra, ta) = run(qa)
     val (rb, tb) = run(qb)
     println(f"[twincheck] $qa: ${ra.size} rows in $ta%.2f s")

@@ -44,10 +44,6 @@ object TextFns {
   /** Whitespace tokens of the normalized text. */
   def tokens(c: Column): Column = split(normText(c), " ")
 
-  /** SQL fragments (same semantics) for expr()-built pipelines. */
-  def normTextSql(col: String): String =
-    s"trim(regexp_replace(lower($col), '[^a-z0-9]+', ' '))"
-
   /** Word w-shingles (w=3) over a token-array column name; yields the
     * space-joined shingle strings (count = n-2 for n>=3 tokens; empty array
     * below 3 tokens — guarded because Spark's `sequence(1, negative)`

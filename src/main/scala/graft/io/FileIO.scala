@@ -28,19 +28,6 @@ object FileIO {
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  /** Streaming twin: same formats through `readStream` (file-arrival
-    * micro-batches). `maxFilesPerTrigger` is the backpressure knob — an
-    * unbounded first batch over a 100 TB backlog is a single giant
-    * micro-batch; bounding files-per-trigger keeps state commits and
-    * output latency steady during catch-up.
-    */
-  def readStreamParquet(spark: SparkSession, path: String, schema: StructType,
-                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(path)
-  }
-
   def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)

@@ -279,9 +279,8 @@ object DedupOps {
   }
 
   /** Shared sampled-docs / shingle-set / rarest-first-ranking passes of
-    * the recall audit's truth side — factored so the r14 collapse probe
-    * measures the LIVE plan rather than a re-implemented copy (the r11
-    * ADVICE precedent on [[jaccardCollapseProbe]]).
+    * the recall audit's truth side — factored so [[aggProbe]] measures
+    * the LIVE plan rather than a re-implemented copy.
     */
   private[graft] def lshRecallTables(spark: SparkSession, sfDir: String,
       sampleN: Int = 10000): (DataFrame, DataFrame, DataFrame) = {
@@ -300,70 +299,8 @@ object DedupOps {
     val posting = shs.select(col("doc_id"), col("sz"), explode(col("shset")).as("s"))
       .withColumn("gh", expr(h32Sql("s")))
       .select(col("doc_id"), col("sz"), col("gh"))
-    val dfreq = posting.groupBy(col("gh")).agg(count(lit(1)).as("df"))
-    // r13: ranking cached pre-partitioned on gh — the truth candidate
-    // equijoin's key — so the probe-vs-postings join plans zero
-    // exchanges at a pinned width (the jaccardGramTables rationale)
-    val ranked = posting.join(dfreq, Seq("gh"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("gh"))))
-      .select(col("doc_id"), col("sz"), col("gh"), col("rk"))
-      .repartition(Tables.nPart(spark), col("gh"))
-      .transform(CacheScope.barrier) // probe and index sides share one ranking pass
-    (docs, shs, ranked)
-  }
-
-  /** r14 evidence probe (VERDICT #2): verify-set and candidate-row sizes
-    * of the recall audit's truth pass, old composition (bare ⌊sz/2⌋+2
-    * prefix probe → distinct pairs, the r13 shape) vs the PPJoin+ spine
-    * — the box-independent collapse numbers behind the
-    * [[dedupLshRecall]] rewiring, on the LIVE plan.
-    */
-  private[graft] def recallCollapseProbe(spark: SparkSession,
-                                         sfDir: String): String = {
-    val (_, _, ranked) = lshRecallTables(spark, sfDir)
-    val probe = ranked.filter(col("rk") <= expr("sz div 2") + lit(2))
-    val bare = probe.as("p").join(ranked.as("q"),
-        col("p.gh") === col("q.gh") && col("p.doc_id") =!= col("q.doc_id"))
-      .select(least(col("p.doc_id"), col("q.doc_id")).as("a_id"),
-        greatest(col("p.doc_id"), col("q.doc_id")).as("b_id"))
-    val candRowsBefore = bare.count()
-    val verifyBefore = bare.distinct().count()
-    val a = recallSpine.pairAgg(ranked).transform(CacheScope.barrier)
-    val candRowsAfter = a.agg(sum(col("matches"))).head().getLong(0)
-    val verifyAfter = a.filter(recallSpine.survivorFilter).count()
-    spark.catalog.clearCache(); CacheScope.release()
-    f"verifyPairsBefore=$verifyBefore verifyPairsAfter=$verifyAfter " +
-      f"collapse=${verifyBefore.toDouble / math.max(verifyAfter, 1L)}%.1fx " +
-      f"candRowsBefore=$candRowsBefore candRowsAfterSizeFiltered=$candRowsAfter"
-  }
-
-  /** r14 evidence probe (VERDICT #3 / spine size filter): per banded
-    * family, the candidate-aggregate input (Σ matches) and survivor
-    * count WITH the pair-level size bound vs WITHOUT it — the measured
-    * half of the "length filter cuts the aggregate's input" claim.
-    */
-  private[graft] def sizeBoundProbe(spark: SparkSession,
-                                    sfDir: String): Seq[(String, String)] = {
-    def measure(spine: BandedSpine, ranked: DataFrame): String = {
-      val withB = spine.pairAgg(ranked).transform(CacheScope.barrier)
-      val rowsWith = withB.agg(sum(col("matches"))).head().getLong(0)
-      val survWith = withB.filter(spine.survivorFilter).count()
-      val noB = spine.copy(sizeBound = None).pairAgg(ranked)
-        .transform(CacheScope.barrier)
-      val rowsNo = noB.agg(sum(col("matches"))).head().getLong(0)
-      val survNo = noB.filter(spine.copy(sizeBound = None).survivorFilter).count()
-      f"aggInputNoSize=$rowsNo aggInputSized=$rowsWith " +
-        f"cut=${(1.0 - rowsWith.toDouble / math.max(rowsNo, 1L)) * 100}%.1f%% " +
-        f"survivorsNoSize=$survNo survivorsSized=$survWith"
-    }
-    val (_, jr) = jaccardGramTables(spark, sfDir)
-    val j = measure(jaccardSpine, jr)
-    spark.catalog.clearCache(); CacheScope.release()
-    val (_, cr) = containmentGramTables(spark, sfDir)
-    val c = measure(containmentSpine, cr)
-    spark.catalog.clearCache(); CacheScope.release()
-    Seq("jaccard_char4" -> j, "containment_char4" -> c)
+    // corpus-wide df: the audit has no blocking key
+    (docs, shs, rankedPostings(posting, Nil))
   }
 
   /** Oracle twin of [[dedupLshRecall]] INCLUDING the sampling cap: the
@@ -619,14 +556,19 @@ object DedupOps {
     // recomputed lineage) and TRUNCATES the logical plan — labels feeds
     // the round twice (own-label branch + propagation join), so without
     // truncation the plan tree doubles per round and the fixpoint dies in
-    // plan construction long before data size matters. The superseded
-    // round-RDDs are dropped by the ContextCleaner once unreferenced; in
-    // a long-lived 100 TB pipeline, reliable checkpoints to storage play
-    // this role.
-    var labels = edges.groupBy(col("src"))
+    // plan construction long before data size matters. Every round's
+    // checkpoint is registered with CacheScope, so the next release()
+    // drops all of them at once instead of leaving the superseded ones
+    // to the GC-driven ContextCleaner; in a long-lived 100 TB pipeline,
+    // reliable checkpoints to storage play this role.
+    def checkpointed(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(false)
+      CacheScope.trackCheckpoints(c)
+      c
+    }
+    var labels = checkpointed(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("md"))
-      .select(col("src").as("v"), least(col("src"), col("md")).as("cluster_id"))
-      .localCheckpoint(false)
+      .select(col("src").as("v"), least(col("src"), col("md")).as("cluster_id")))
     var converged = false
     var iter = 0
     // rounds needed = eccentricity of the component-min vertex (+1 to
@@ -651,13 +593,13 @@ object DedupOps {
       // diameter rounds on a chain, with jumping O(log d). Engaged late
       // because near-dup graphs converge in 2–3 one-hop rounds and the
       // extra self-join would be pure overhead there.
-      val next = (if (iter < 3) hop else {
+      val next = checkpointed(if (iter < 3) hop else {
         val map = hop.select(col("v").as("jv"), col("cluster_id").as("jc"))
         hop.join(map, col("cluster_id") === col("jv"), "left")
           .select(col("v"),
             coalesce(col("jc"), col("cluster_id")).as("cluster_id"), col("old"))
-      }).localCheckpoint(false) // lazy: the convergence count below is the
-                                // action that materializes this round
+      }) // lazy: the convergence count below is the action that
+         // materializes this round
       // coalesce: an EMPTY edge set (a corpus with no near-dup pairs at
       // all — legitimately reachable, e.g. phash clustering at tiny SF)
       // makes sum() null; treat as converged instead of NPE-ing
@@ -669,12 +611,9 @@ object DedupOps {
       iter += 1
     }
     edges.unpersist()
-    val out = labels.select(col("v").as("doc_id"), col("cluster_id"))
-    // the final label table's checkpoint blocks drop at the next
-    // CacheScope.release() rather than at an eventual GC — every CC
-    // result (memoized or direct) must be consumed within the scope
-    CacheScope.trackCheckpoints(out)
-    (out, iter)
+    // every CC result (memoized or direct) must be consumed before the
+    // next CacheScope.release(), which drops the rounds' checkpoints
+    (labels.select(col("v").as("doc_id"), col("cluster_id")), iter)
   }
 
   /** Ensemble duplicate clusters: union the TEXT near-dup edges
@@ -821,12 +760,6 @@ object DedupOps {
        |SELECT doc_id, lang, n_chars FROM documents
        |WHERE doc_id NOT IN (SELECT doc_id FROM ranked WHERE rk > 1)""".stripMargin
 
-  /** Exact character-4-gram Jaccard pairs within a (lang × length-bucket)
-    * block (quadratic — valid only inside bounded blocks; MinHash-LSH is
-    * the unbounded-scale path). Length-bucketing is the standard trick:
-    * near-dups have near-equal lengths, and it caps block size so the
-    * quadratic term stays bounded as the corpus grows.
-    */
   /** Runtime tripwire for the bounded-quadratic comparators (r13 verdict
     * #2 / ADVICE): the `broadcast(b)` hints in the `_pairs` twins ship a
     * full per-doc gram table, which is only safe under the documented
@@ -839,70 +772,30 @@ object DedupOps {
     * This check is a count over the parquet footprint (no data columns
     * read) — linear in file count, vanishing next to the n²/2 work the
     * tier performs, and it fails with the same actionable message as
-    * the dispatchers.
+    * the dispatchers. It always counts documents: a byte gate would pass
+    * a corpus of many tiny documents, which breaks the doc-count
+    * contract the message states.
     */
   private[graft] def requireBoundedCorpus(docs: DataFrame, what: String,
                                           bound: Long = 100000L): Unit = {
-    // Fast path (r14): when the corpus is a plain file scan, its
-    // file-index listing stats give an UPPER-bound-relevant byte size
-    // with ZERO jobs — the first guard run in each bench/verify JVM was
-    // otherwise a count job INSIDE the twins' timed region (measured
-    // +0.1–0.4 s per run on sub-second rows). The broadcast hazard the
-    // guard protects against is BYTES toward the driver (8 GB relation
-    // cap), and the gram build side scales with text bytes, so a byte
-    // gate is the more faithful proxy anyway (ADVICE r13: "gate the
-    // hint on an estimated build-side size"): `bound` docs at the
-    // 4 KiB/doc the tier contract was sized for → bound·4096 bytes of
-    // input, ~10× that after gram expansion — comfortably inside the
-    // cap. Above the byte gate (or for non-scan frames) fall back to
-    // the exact footer-metadata count; that path is the contract-
-    // violation regime, where the cost of counting is irrelevant next
-    // to the n²/2 work (or the throw) that follows.
-    val bytesOk = docs.queryExecution.analyzed.collectLeaves() match {
-      case Seq(l: org.apache.spark.sql.execution.datasources.LogicalRelation) =>
-        l.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.sizeInBytes <= bound * 4096L
-          case _ => false
-        }
-      case _ => false
-    }
-    if (!bytesOk) {
-      val n = docs.count()
-      if (n > bound) throw new IllegalStateException(
-        s"$what guard: $n documents exceed the bounded-quadratic tier " +
-          s"contract ($bound) — this comparator broadcasts the full per-doc " +
-          s"gram table and compares n²/2 pairs within blocks, which is only " +
-          s"bounded work on a bounded corpus. Use the banded prefix-filter " +
-          s"tier (exact) or the minhash-LSH tier (approximate) at scale.")
-    }
+    val n = docs.count()
+    if (n > bound) throw new IllegalStateException(
+      s"$what guard: $n documents exceed the bounded-quadratic tier " +
+        s"contract ($bound) — this comparator broadcasts the full per-doc " +
+        s"gram table and compares n²/2 pairs within blocks, which is only " +
+        s"bounded work on a bounded corpus. Use the banded prefix-filter " +
+        s"tier (exact) or the minhash-LSH tier (approximate) at scale.")
   }
 
+  /** Exact character-4-gram Jaccard pairs within a (lang × length-bucket)
+    * block (quadratic — valid only inside bounded blocks; MinHash-LSH is
+    * the unbounded-scale path). Length-bucketing is the standard trick:
+    * near-dups have near-equal lengths, and it caps block size so the
+    * quadratic term stays bounded as the corpus grows.
+    */
   def ngramJaccardPairs(spark: SparkSession, sfDir: String): DataFrame = {
     requireBoundedCorpus(Tables.documents(spark, sfDir), "ngram_jaccard_pairs")
-    val g = Tables.parallelized(Tables.documents(spark, sfDir))
-      .withColumn("norm", normText(col("text")))
-      .withColumn("lenb", expr("n_chars div 100")) // length-bucket blocking
-      .select(col("doc_id"), col("lang"), col("lenb"),
-        // grams hashed to longs, sorted+distinct → the codegen'd merge-pass
-        // jaccard_sorted needs one O(n+m) scan per pair, no hash builds
-        sort_array(array_distinct(
-          expr(s"transform(${charGramsSql("norm", 4)}, s -> ${h32Sql("s")})"))).as("gr"))
-      .transform(CacheScope.barrier) // gram-hash sets materialized once, not per pair
-    val a = g.select(col("doc_id").as("a_id"), col("lang"), col("lenb"), col("gr").as("ga"))
-    val b = g.select(col("doc_id").as("b_id"), col("lang"), col("lenb"), col("gr").as("gb"))
-    // r13: the bounded-quadratic comparator broadcasts its build side —
-    // blocks key on ≤ |langs|·|lenbs| values, so a shuffled join has at
-    // most that many non-empty partitions and AQE's byte-based coalescing
-    // collapsed the compute (2.4M merge passes) onto ONE task (guide
-    // §2.5: too few distinct key values). Broadcasting the (bounded by
-    // the tier contract) gram table lets the pair generation stream over
-    // the cached side's full partitioning instead. Same rows out.
-    a.join(broadcast(b), Seq("lang", "lenb"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("jacc", expr("jaccard_sorted(ga, gb)"))
-      .filter(col("jacc") >= 0.4)
-      .select(col("a_id"), col("b_id"), round(col("jacc"), 4).as("jacc"))
+    jaccardAllPairs(gramSets(spark, sfDir, jaccardSpine))
   }
 
   val ngramJaccardPairsSql: String =
@@ -941,69 +834,67 @@ object DedupOps {
     * id. Nothing single-task, nothing all-pairs (PlanSpec-asserted).
     */
   def ngramJaccardBanded(spark: SparkSession, sfDir: String): DataFrame = {
-    val (g, ranked) = jaccardGramTables(spark, sfDir)
-    // surface the regime this run is in (round-10; the jaccard mirror of
-    // the containment density probe): one aggregate over the cached
-    // ranking pass, printed not guarded — this row's tier is forced.
-    // Opt-in (round 11): the probe is diagnostics, not plan input, and
-    // running it inside the operator inflated the benched row relative
-    // to pre-r10 rounds; SPARK_GRAFT_PROBE=1 turns it back on.
-    if (probeLogEnabled) {
-      val m = jaccardMassProbe(g, ranked)
-      println(s"[graft] jaccard candidate-mass probe: $m tier=banded (forced " +
-        s"— use ngram_jaccard_auto for guarded tier selection)")
-    }
+    val (g, ranked) = bandedTables(spark, sfDir, jaccardSpine)
     jaccardBandedFrom(g, ranked)
   }
 
-  /** Diagnostic-probe logging in the FORCED banded tiers (the auto tiers
-    * always probe — there the probe is the dispatch input, not a log
-    * line). Off by default so the benched forced rows measure the
-    * operator, not the diagnostic (r10 ADVICE: r10 timings of
-    * `ngram_jaccard_banded` / `ngram_containment_banded` include one
-    * probe aggregate each).
+  /** The one gram-set builder of the char-gram and word-shingle tiers of
+    * both semantics: per doc the sorted distinct gram-hash set `gr` and
+    * its size `sz`, keyed by `doc_id` and the spine's block keys (so
+    * containment carries no `lenb`). `gramSql` builds the raw
+    * gram-string array (`norm` for char n-grams, `t` for word
+    * shingles). Grams are hashed to longs, sorted and distinct, so the
+    * codegen'd merge-pass comparators need one O(n+m) scan per pair and
+    * no hash builds. Docs with no grams (sz = 0: neither similarity is
+    * defined, and they can never appear in a posting) are dropped up
+    * front.
     */
-  private def probeLogEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_PROBE").contains("1")
-
-  /** Shared pre-candidate passes of the jaccard prefix-filter tier (the
-    * [[containmentGramTables]] shape with the length-bucket block the
-    * symmetric semantics allow): cached sorted gram table and the
-    * rarest-first per-doc ranking. `gramSql` builds the raw gram-string
-    * array (`norm` for char n-grams, `t` for word shingles) — the
-    * char-4-gram and word-3-shingle tiers share every downstream pass.
-    * Docs with no grams (sz = 0: jaccard undefined, and they can never
-    * appear in a posting) are dropped up front.
-    */
-  private def jaccardGramTables(spark: SparkSession, sfDir: String,
-      gramSql: String = charGramsSql("norm", 4)): (DataFrame, DataFrame) = {
-    val g = Tables.parallelized(Tables.documents(spark, sfDir))
+  private def gramSets(spark: SparkSession, sfDir: String, spine: BandedSpine,
+      gramSql: String = charGramsSql("norm", 4)): DataFrame =
+    Tables.parallelized(Tables.documents(spark, sfDir))
       .withColumn("norm", normText(col("text")))
       .withColumn("t", split(col("norm"), " "))
-      .withColumn("lenb", expr("n_chars div 100"))
-      .select(col("doc_id"), col("lang"), col("lenb"),
-        sort_array(array_distinct(
-          expr(s"transform($gramSql, s -> ${h32Sql("s")})"))).as("gr"))
+      .withColumn("lenb", expr("n_chars div 100")) // length-bucket blocking
+      .select(col("doc_id") +: spine.blockKeys.map(col) :+ sort_array(array_distinct(
+        expr(s"transform($gramSql, s -> ${h32Sql("s")})"))).as("gr"): _*)
       .withColumn("sz", size(col("gr")))
       .filter(col("sz") > 0)
       .transform(CacheScope.barrier) // postings, ranking, and confirm all reuse
-    val posting = g.select(col("doc_id"), col("lang"), col("lenb"), col("sz"),
-      explode(col("gr")).as("gh"))
-    val dfreq = posting.groupBy(col("lang"), col("gh")).agg(count(lit(1)).as("df"))
-    // r13: the ranking is CACHED PRE-PARTITIONED on (lang, gh) — a subset
-    // of every candidate equijoin's keys in both families, so the spine's
-    // self-join plans ZERO exchanges (guide §2.4: two ops keyed the same
-    // way share one exchange; here the cache pays it once in the barrier
-    // build). The explicit width also pins the join's parallelism where
-    // AQE's byte-based coalescing mis-sized the compute-dense candidate
-    // stage (Tables.nPart scaladoc; measured 14-of-32 tasks at sf0.1).
-    val ranked = posting.join(dfreq, Seq("lang", "gh"))
+
+  /** The one rarest-first ranking builder of every banded family: each
+    * posting row gains its gram's document frequency `df` (counted per
+    * `dfKeys :+ gh`) and its per-doc rank `rk` by (df, gh) — the COMMON
+    * order both the prefix condition and the positional filter depend
+    * on. r13: the ranking is CACHED PRE-PARTITIONED on `dfKeys :+ gh`, a
+    * subset of every candidate equijoin's keys, so the spine's self-join
+    * plans ZERO exchanges (guide §2.4: two ops keyed the same way share
+    * one exchange; here the cache pays it once in the barrier build).
+    * The explicit width also pins the join's parallelism where AQE's
+    * byte-based coalescing mis-sized the compute-dense candidate stage
+    * (Tables.nPart scaladoc; measured 14-of-32 tasks at sf0.1).
+    */
+  private def rankedPostings(posting: DataFrame, dfKeys: Seq[String]): DataFrame = {
+    val keys = dfKeys :+ "gh"
+    val dfreq = posting.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
+    posting.join(dfreq, keys)
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("gh"))))
-      .select(col("doc_id"), col("lang"), col("lenb"), col("sz"), col("gh"), col("rk"))
-      .repartition(Tables.nPart(spark), col("lang"), col("gh"))
+      .select((posting.columns.toSeq :+ "rk" :+ "df").map(col): _*)
+      .repartition(Tables.nPart(posting.sparkSession), keys.map(col): _*)
       .transform(CacheScope.barrier) // probe and index sides share one ranking pass
-    (g, ranked)
+  }
+
+  /** Pre-candidate passes of the jaccard and containment prefix-filter
+    * tiers: the cached gram sets and their rarest-first ranking, df
+    * counted within each language. The char-4-gram and word-3-shingle
+    * tiers differ only in `gramSql`.
+    */
+  private def bandedTables(spark: SparkSession, sfDir: String, spine: BandedSpine,
+      gramSql: String = charGramsSql("norm", 4)): (DataFrame, DataFrame) = {
+    val g = gramSets(spark, sfDir, spine, gramSql)
+    val posting = g.select(col("doc_id") +: spine.blockKeys.map(col) :+ col("sz") :+
+      explode(col("gr")).as("gh"): _*)
+    (g, rankedPostings(posting, Seq("lang")))
   }
 
   /** The shared PPJoin+ banded spine (round 12, factored from the
@@ -1024,7 +915,7 @@ object DedupOps {
     *   - '''Prefix''': a qualifying direction misses ≤ m of its grams
     *     from the other set, so its m+K-gram prefix shares ≥ min(K,
     *     sz−m) grams with it — the candidate equijoin (keyed on lang ×
-    *     `extraKeys` × gh, self-pairs excluded) emits every qualifying
+    *     `blockKeys` × gh, self-pairs excluded) emits every qualifying
     *     pair at least once. Jaccard instantiation: J(P,Q) ≥ 0.4 ⟹
     *     |P∩Q| ≥ 0.4·|P∪Q| ≥ 0.4·|P|, so m = ⌊3·sz/5⌋ and BOTH
     *     directions of a symmetric-J pair qualify. Containment
@@ -1086,11 +977,10 @@ object DedupOps {
       sizeBound: Option[(Column, Column) => Column] = None,
       directionalOr: Boolean = false) {
 
-    /** Membership in the ⌊missFloor(sz)⌋+slack rarest-gram probe prefix
-      * — also the mass probes' counting predicate.
+    /** Membership in the ⌊prefixFloor(sz)⌋+slack rarest-gram probe
+      * prefix — also the mass probes' counting predicate.
       */
-    def prefixCond(slackOverride: Int = slack): Column =
-      col("rk") <= prefixFloor("sz") + lit(slackOverride)
+    def prefixCond: Column = col("rk") <= prefixFloor("sz") + lit(slack)
 
     /** Narrow candidate equijoin → per-pair aggregate: (a_id, b_id,
       * matches, per-direction match counts + positional witnesses,
@@ -1098,12 +988,12 @@ object DedupOps {
       * direction/positional flags, no gram arrays) and this aggregate
       * is the only thing touching all candidate rows.
       */
-    def pairAgg(ranked: DataFrame, slackOverride: Int = slack): DataFrame = {
+    def pairAgg(ranked: DataFrame): DataFrame = {
       val conds = blockKeys.map(k => col(s"p.$k") === col(s"q.$k")) ++
         Seq(col("p.gh") === col("q.gh"),
           col("p.doc_id") =!= col("q.doc_id")) ++
         sizeBound.map(f => f(col("p.sz"), col("q.sz"))).toSeq
-      val joined = ranked.filter(prefixCond(slackOverride)).as("p")
+      val joined = ranked.filter(prefixCond).as("p")
         .join(ranked.as("q"), conds.reduce(_ && _))
       val posOk =
         (least(col("p.sz") - col("p.rk"), col("q.sz") - col("q.rk")) + lit(1) >=
@@ -1171,23 +1061,20 @@ object DedupOps {
         .select(col("a_id"), col("b_id"))
   }
 
-  /** Jaccard prefix slack K = 8 (ported round 11, the [[PrefixSlack]]
-    * companion) — recall and trade derivations on [[BandedSpine]].
-    */
-  private val JaccardPrefixSlack = 8
-
-  /** Containment/recall prefix slack K = 8 — recall derivation on
-    * [[BandedSpine]]; the measured K = 2 → 8 trade is round 10's:
-    * 22.85 M single-shared-gram candidate pairs on the 50 k-doc
-    * realistic-vocabulary corpus → the ≥K filter leaves ~0.1% of them,
-    * turning a >75 GB spill DNF into an in-memory pass.
+  /** Prefix slack K = 8 of every banded spine — recall derivation on
+    * [[BandedSpine]]; the measured K = 2 → 8 trade is round 10's
+    * (containment): 22.85 M single-shared-gram candidate pairs on the
+    * 50 k-doc realistic-vocabulary corpus → the ≥K filter leaves ~0.1%
+    * of them, turning a >75 GB spill DNF into an in-memory pass; round
+    * 11 measured the same trade for jaccard (A/B 2.07×).
     *
     * Declared BEFORE every spine that references it: object vals
     * initialize in declaration order, and a forward reference here is
     * an UNINITIALIZED read (slack 0 — a shorter prefix than the
     * recall derivation assumes). scalac's "Reference to uninitialized
-    * value" warning is the tripwire; [[graft.ContainmentGuardSpec]]
-    * pins the live spines' slack at runtime.
+    * value" warning is the tripwire, the `checkinit` build alias fails
+    * such a read at runtime, and [[graft.ContainmentGuardSpec]] pins
+    * the live spines' slack.
     */
   private val PrefixSlack = 8
 
@@ -1216,20 +1103,20 @@ object DedupOps {
     * The grams a doc's prefix loses between 0.6n and 0.43n are its
     * most FREQUENT prefix members (rank is rarest-first), i.e. the
     * longest posting lists, so the candidate-mass cut is superlinear
-    * in the prefix cut (measured at sf0.1, sizeBoundProbe: 35.73 M →
-    * 14.55 M candidate-aggregate rows, −59%; survivors 557,566 →
-    * 542,185 — a superset of the true pairs either way, the exact
-    * verify join fixes the output).
+    * in the prefix cut (measured at sf0.1 by the r14 size-bound probe:
+    * 35.73 M → 14.55 M candidate-aggregate rows, −59%; survivors
+    * 557,566 → 542,185 — a superset of the true pairs either way, the
+    * exact verify join fixes the output).
     */
   private[graft] val jaccardSpine = BandedSpine(
-    slack = JaccardPrefixSlack,
+    slack = PrefixSlack,
     prefixFloor = n => floor(lit(0.42863) * col(n)),
     missFloor = n => floor(lit(0.42863) * col(n)),
     blockKeys = Seq("lang", "lenb"),
     pairLowerBound = (szP, szQ) => lit(0.4 / 1.4) * (szP + szQ),
     // no sizeBound: J ≥ 0.4 does imply min ≥ 0.4·max, but the lenb
     // blocking already enforces near-equal sizes — measured 0.0% cut
-    // at sf0.1 (sizeBoundProbe), so the predicate would be pure
+    // at sf0.1 (r14 size-bound probe), so the predicate would be pure
     // per-row cost here. Combined (non-directional) count shape for
     // the same reason: the directional AND cut survivors only 1.5%
     // at sf0.1 while widening the aggregate — measured net-negative.
@@ -1253,11 +1140,16 @@ object DedupOps {
     *     ⟹ I ≥ t'/(1+t')·(|P|+|Q|);
     *   - sizeBound min ≥ 0.49995·max (I ≤ min and I ≥ t'·max).
     *
-    * 32-bit shingle-hash collisions only ADD candidate rows (a shared
-    * STRING shingle always collides by construction, and the exact
-    * string-set confirm rejects fakes), and the positional bound is an
-    * EXISTS witness, so collisions cannot lower recall. Slack K = 8 is
-    * the family's measured trade (see [[PrefixSlack]]).
+    * 32-bit shingle-hash collisions: every shared STRING shingle
+    * collides with itself by construction, and the exact string-set
+    * confirm rejects fake matches, so a collision can only cost recall
+    * by merging two of a doc's shared shingles into one posting row.
+    * Postings here are one row per distinct shingle string (`sz` is the
+    * string-set size), so none merge and the count floor holds as
+    * derived; a hash-distinct posting would lose one guaranteed prefix
+    * match per such collision, and K = 8 would keep the candidate
+    * witness through up to 7 of them per doc. Slack K = 8 is the
+    * family's measured trade (see [[PrefixSlack]]).
     */
   private[graft] val recallSpine = BandedSpine(
     slack = PrefixSlack,
@@ -1268,13 +1160,82 @@ object DedupOps {
     sizeBound = Some((szP, szQ) =>
       szQ >= lit(0.49995) * szP && szP >= lit(0.49995) * szQ))
 
-  private def jaccardBandedFrom(g: DataFrame, ranked: DataFrame): DataFrame =
-    jaccardSpine.survivors(ranked)
-      .join(g.select(col("doc_id").as("a_id"), col("gr").as("ga")), Seq("a_id"))
-      .join(g.select(col("doc_id").as("b_id"), col("gr").as("gb")), Seq("b_id"))
-      .withColumn("jacc", expr("jaccard_sorted(ga, gb)"))
+  /** Containment instantiation of [[BandedSpine]] (t = 0.8): integer
+    * ⌊sz/5⌋ prefix floor (no FP floor drift), asymmetric-direction
+    * positional bound, no extra blocking key (either side may be the
+    * qualifying direction, so length buckets don't apply).
+    */
+  private[graft] val containmentSpine = BandedSpine(
+    slack = PrefixSlack,
+    prefixFloor = n => expr(s"$n div 5"),
+    missFloor = n => floor(lit(0.20005) * col(n)),
+    blockKeys = Seq("lang"),
+    pairLowerBound = (szP, _) => lit(0.79995) * szP,
+    // a probe row witnesses direction P⊂Q, which needs |Q| ≥ |P∩Q| ≥
+    // 0.79995·|P| (spine size-filter note; same slop constant as the
+    // positional bound)
+    sizeBound = Some((szP, szQ) => szQ >= lit(0.79995) * szP),
+    // asymmetric semantics: per-direction floors, either direction
+    // suffices — measured 842k → 435k verify pairs at sf0.1
+    directionalOr = true)
+
+  /** One side of a pair comparison over a [[gramSets]] table: the id,
+    * `keys`, and the gram set and size renamed for `side` ("a" → a_id,
+    * ga, sza).
+    */
+  private def pairSide(g: DataFrame, side: String, keys: Seq[String] = Nil): DataFrame =
+    g.select(col("doc_id").as(s"${side}_id") +: keys.map(col) :+
+      col("gr").as(s"g$side") :+ col("sz").as(s"sz$side"): _*)
+
+  /** Survivor pairs of a spine with both gram sets fetched by id
+    * equijoin — the banded tiers' verify input.
+    */
+  private def spineCandidates(spine: BandedSpine, g: DataFrame,
+                              ranked: DataFrame): DataFrame =
+    spine.survivors(ranked)
+      .join(pairSide(g, "a"), Seq("a_id"))
+      .join(pairSide(g, "b"), Seq("b_id"))
+
+  /** The bounded-quadratic comparator input: every pair inside a block
+    * of `keys`. r13: the build side is broadcast — blocks key on few
+    * values (≤ |langs|·|lenbs|), so a shuffled join has at most that many
+    * non-empty partitions and AQE's byte-based coalescing collapsed the
+    * compute (2.4M merge passes) onto ONE task (guide §2.5: too few
+    * distinct key values). Broadcasting the gram table (bounded by the
+    * tier contract, [[requireBoundedCorpus]]) lets the pair generation
+    * stream over the cached side's full partitioning instead.
+    */
+  private def blockPairs(g: DataFrame, keys: Seq[String]): DataFrame =
+    pairSide(g, "a", keys).join(broadcast(pairSide(g, "b", keys)), keys)
+      .filter(col("a_id") < col("b_id"))
+
+  /** The jaccard comparator: the codegen'd `jaccard_sorted` merge on the
+    * hashed gram sets, J ≥ 0.4, rounded to 4 places.
+    */
+  private def jaccardConfirm(pairs: DataFrame): DataFrame =
+    pairs.withColumn("jacc", expr("jaccard_sorted(ga, gb)"))
       .filter(col("jacc") >= 0.4)
       .select(col("a_id"), col("b_id"), round(col("jacc"), 4).as("jacc"))
+
+  /** The merge-pass containment comparator: `intersect_count_sorted` →
+    * cont_a/cont_b rounded to 4 places → either direction ≥ 0.8.
+    */
+  private def containmentConfirm(pairs: DataFrame): DataFrame =
+    pairs.withColumn("ic", expr("intersect_count_sorted(ga, gb)").cast("double"))
+      .select(col("a_id"), col("b_id"),
+        round(col("ic") / col("sza"), 4).as("cont_a"),
+        round(col("ic") / col("szb"), 4).as("cont_b"))
+      .filter(greatest(col("cont_a"), col("cont_b")) >= 0.8)
+
+  /** The blocked all-pairs jaccard tier on a [[gramSets]] table —
+    * `ngram_jaccard_pairs`, `ngram_jaccard_shingles_pairs` and the
+    * quadratic branch of [[ngramJaccardAuto]].
+    */
+  private def jaccardAllPairs(g: DataFrame): DataFrame =
+    jaccardConfirm(blockPairs(g, jaccardSpine.blockKeys))
+
+  private def jaccardBandedFrom(g: DataFrame, ranked: DataFrame): DataFrame =
+    jaccardConfirm(spineCandidates(jaccardSpine, g, ranked))
 
   private[graft] final case class JaccardCandidateMass(nDocs: Long,
                                                        candRows: Double) {
@@ -1300,7 +1261,7 @@ object DedupOps {
                                       ranked: DataFrame): JaccardCandidateMass = {
     val byKey = ranked.groupBy(col("lang"), col("lenb"), col("gh"))
       .agg(count(lit(1)).cast("double").as("ic"),
-        sum(when(jaccardSpine.prefixCond(), 1L)
+        sum(when(jaccardSpine.prefixCond, 1L)
           .otherwise(0L)).cast("double").as("pc"))
     val r = byKey.agg(sum(col("pc") * col("ic"))).head()
     JaccardCandidateMass(g.count(), if (r.isNullAt(0)) 0.0 else r.getDouble(0))
@@ -1316,49 +1277,13 @@ object DedupOps {
     */
   private[graft] def jaccardMassProbe2(spark: SparkSession,
                                        sfDir: String): JaccardMassCheck = {
-    val (g, ranked) = jaccardGramTables(spark, sfDir)
+    val (g, ranked) = bandedTables(spark, sfDir, jaccardSpine)
     val m = jaccardMassProbe(g, ranked)
-    val probe = ranked.filter(jaccardSpine.prefixCond())
+    val probe = ranked.filter(jaccardSpine.prefixCond)
     val bare = probe.as("p").join(ranked.as("q"),
       col("p.lang") === col("q.lang") && col("p.lenb") === col("q.lenb") &&
         col("p.gh") === col("q.gh")).count()
     JaccardMassCheck(m.candRows, bare)
-  }
-
-  /** Round-11 measurement hook ([[graft.NgramProbe]] `collapse` mode):
-    * the deterministic half of the PPJoin+ before/after evidence for
-    * [[jaccardBandedFrom]]. Computes, on one corpus, the VERIFY-JOIN
-    * INPUT SIZE of both compositions — the number the wall-clock A/B
-    * rides on, box-independent:
-    *
-    *   - `before`: the r10 composition's verify input — distinct
-    *     (a, b) pairs from the slack-2 prefix whose equijoin has ≥ 1
-    *     row passing the per-row positional bound (the old plan
-    *     verified every such pair with two gram-array-carrying joins);
-    *   - `after`: pairs surviving the r11 pair-level filter — EXISTS
-    *     positional AND ≥ min(K, min_sz − ⌊3·min_sz/5⌋) prefix matches
-    *     from the slack-8 prefix;
-    *   - `candRows2` / `candRows8`: the narrow equijoin row counts at
-    *     the two prefix widths — the cost the +6 slack ADDS, shown next
-    *     to the verify rows it removes.
-    */
-  private[graft] def jaccardCollapseProbe(spark: SparkSession,
-                                          sfDir: String): String = {
-    val (_, ranked) = jaccardGramTables(spark, sfDir)
-    // both arms ride the LIVE spine (r11 ADVICE: a re-implemented copy
-    // here would silently drift from the plan it claims to measure)
-    val a2 = jaccardSpine.pairAgg(ranked, slackOverride = 2)
-      .transform(CacheScope.barrier)
-    val before = a2.filter(col("pos_ok") === 1).count()
-    val candRows2 = a2.agg(sum(col("matches"))).head().getLong(0)
-    spark.catalog.clearCache(); CacheScope.release()
-    val a8 = jaccardSpine.pairAgg(ranked).transform(CacheScope.barrier)
-    val after = a8.filter(jaccardSpine.survivorFilter).count()
-    val candRows8 = a8.agg(sum(col("matches"))).head().getLong(0)
-    spark.catalog.clearCache(); CacheScope.release()
-    f"verifyPairsBefore=$before verifyPairsAfter=$after " +
-      f"collapse=${before.toDouble / math.max(after, 1L)}%.1fx " +
-      f"candRowsSlack2=$candRows2 candRowsSlack8=$candRows8"
   }
 
   /** Tier decision from the mass probe — pure, unit-tested
@@ -1404,24 +1329,41 @@ object DedupOps {
     */
   private[graft] def ngramProbes(spark: SparkSession,
                                  sfDir: String): Seq[(String, String)] = {
-    val (jg, jranked) = jaccardGramTables(spark, sfDir)
-    val jm = jaccardMassProbe(jg, jranked)
-    spark.catalog.clearCache(); CacheScope.release()
-    val (jsg, jsranked) = jaccardGramTables(spark, sfDir,
-      graft.functions.TextFns.shingles3Sql("t"))
-    val jsm = jaccardMassProbe(jsg, jsranked)
-    spark.catalog.clearCache(); CacheScope.release()
-    val (cg, cranked) = containmentGramTables(spark, sfDir)
-    val cd = containmentDensityProbe(cg, cranked)
-    spark.catalog.clearCache(); CacheScope.release()
-    val (sg, sranked) = containmentGramTables(spark, sfDir,
-      graft.functions.TextFns.shingles3Sql("t"))
-    val sd = containmentDensityProbe(sg, sranked)
-    spark.catalog.clearCache(); CacheScope.release()
-    Seq("jaccard_char4" -> jm.toString,
-      "jaccard_shingle3" -> jsm.toString,
-      "containment_char4" -> cd.toString,
-      "containment_shingle3" -> sd.toString)
+    def probe(spine: BandedSpine, gramSql: String)(
+        f: (DataFrame, DataFrame) => Any): String = {
+      val (g, ranked) = bandedTables(spark, sfDir, spine, gramSql)
+      val s = f(g, ranked).toString
+      spark.catalog.clearCache(); CacheScope.release()
+      s
+    }
+    val char4 = charGramsSql("norm", 4)
+    Seq("jaccard_char4" -> probe(jaccardSpine, char4)(jaccardMassProbe),
+      "jaccard_shingle3" -> probe(jaccardSpine, shingles3Sql("t"))(jaccardMassProbe),
+      "containment_char4" -> probe(containmentSpine, char4)(containmentDensityProbe),
+      "containment_shingle3" ->
+        probe(containmentSpine, shingles3Sql("t"))(containmentDensityProbe))
+  }
+
+  /** Candidate-aggregate input (Σ `matches`: the candidate-join rows the
+    * per-pair aggregate consumes) and survivor count (the pairs that
+    * reach the verify join) of each banded family's LIVE plan on a
+    * corpus, for [[graft.NgramProbe]] `agg` — the numbers a change to
+    * the spine's candidate generation is judged by.
+    */
+  private[graft] def aggProbe(spark: SparkSession,
+                              sfDir: String): Seq[(String, String)] = {
+    def measure(spine: BandedSpine, ranked: DataFrame): String = {
+      val a = spine.pairAgg(ranked).transform(CacheScope.barrier)
+      val aggInput = a.agg(coalesce(sum(col("matches")), lit(0L))).head().getLong(0)
+      val survivors = a.filter(spine.survivorFilter).count()
+      spark.catalog.clearCache(); CacheScope.release()
+      s"aggInput=$aggInput survivors=$survivors"
+    }
+    Seq("jaccard_char4" ->
+        measure(jaccardSpine, bandedTables(spark, sfDir, jaccardSpine)._2),
+      "containment_char4" ->
+        measure(containmentSpine, bandedTables(spark, sfDir, containmentSpine)._2),
+      "lsh_recall" -> measure(recallSpine, lshRecallTables(spark, sfDir)._3))
   }
 
   /** Guarded jaccard: probes the banded tier's exact candidate mass on
@@ -1432,22 +1374,11 @@ object DedupOps {
     * gram table. The jaccard mirror of [[ngramContainmentAuto]].
     */
   def ngramJaccardAuto(spark: SparkSession, sfDir: String): DataFrame = {
-    val (g, ranked) = jaccardGramTables(spark, sfDir)
+    val (g, ranked) = bandedTables(spark, sfDir, jaccardSpine)
     val m = jaccardMassProbe(g, ranked)
     val tier = jaccardTier(m)
     println(s"[graft] jaccard candidate-mass probe: $m tier=$tier")
-    if (tier == "banded") jaccardBandedFrom(g, ranked)
-    else {
-      val a = g.select(col("doc_id").as("a_id"), col("lang"), col("lenb"),
-        col("gr").as("ga"))
-      val b = g.select(col("doc_id").as("b_id"), col("lang"), col("lenb"),
-        col("gr").as("gb"))
-      a.join(b, Seq("lang", "lenb"))
-        .filter(col("a_id") < col("b_id"))
-        .withColumn("jacc", expr("jaccard_sorted(ga, gb)"))
-        .filter(col("jacc") >= 0.4)
-        .select(col("a_id"), col("b_id"), round(col("jacc"), 4).as("jacc"))
-    }
+    if (tier == "banded") jaccardBandedFrom(g, ranked) else jaccardAllPairs(g)
   }
 
   /** Asymmetric containment pairs: C(A ⊂ B) = |A∩B| / |A| over the same
@@ -1574,82 +1505,12 @@ object DedupOps {
     *     O(|A|+|B|) per CANDIDATE, not per pair of documents.
     */
   def ngramContainmentBanded(spark: SparkSession, sfDir: String): DataFrame = {
-    val (g, ranked) = containmentGramTables(spark, sfDir)
-    // surface the regime this run is in (round-9 verdict): the probe is
-    // one aggregate over the already-cached ranking pass. Opt-in since
-    // round 11 (SPARK_GRAFT_PROBE=1) — diagnostics, not plan input, and
-    // it inflated the benched forced row (see [[probeLogEnabled]]).
-    if (probeLogEnabled) {
-      val d = containmentDensityProbe(g, ranked)
-      println(s"[graft] containment density probe: $d tier=banded (forced — " +
-        s"use ngram_containment_auto for guarded tier selection)")
-    }
+    val (g, ranked) = bandedTables(spark, sfDir, containmentSpine)
     containmentBandedFrom(g, ranked)
   }
 
-  /** Shared pre-candidate passes of the prefix-filter tier: the cached
-    * sorted gram table and the rarest-first per-doc gram ranking (with
-    * each gram's per-language document frequency retained for the
-    * density probe). `gramSql` builds the raw gram-string array from the
-    * available columns (`norm` for char n-grams, `t` for word shingles)
-    * — the char-4-gram and word-3-shingle tiers share every downstream
-    * pass.
-    */
-  private def containmentGramTables(spark: SparkSession, sfDir: String,
-      gramSql: String = charGramsSql("norm", 4)): (DataFrame, DataFrame) = {
-    val g = Tables.parallelized(Tables.documents(spark, sfDir))
-      .withColumn("norm", normText(col("text")))
-      .withColumn("t", split(col("norm"), " "))
-      .select(col("doc_id"), col("lang"),
-        sort_array(array_distinct(
-          expr(s"transform($gramSql, s -> ${h32Sql("s")})"))).as("gr"))
-      .withColumn("sz", size(col("gr")))
-      .filter(col("sz") > 0) // <3-token docs have no shingles: no containment defined
-      .transform(CacheScope.barrier) // gram sets materialized once: postings, prefix, confirm all reuse
-    val posting = g.select(col("doc_id"), col("lang"), col("sz"), explode(col("gr")).as("gh"))
-    val dfreq = posting.groupBy(col("lang"), col("gh")).agg(count(lit(1)).as("df"))
-    // rarest-first rank of every gram within its doc — the COMMON order
-    // (same per-lang df table) both the prefix condition and the
-    // positional filter below depend on. r13: cached pre-partitioned on
-    // the candidate equijoin's keys (see jaccardGramTables) — the spine's
-    // self-join plans zero exchanges at a pinned width.
-    val ranked = posting.join(dfreq, Seq("lang", "gh"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("gh"))))
-      .select(col("doc_id"), col("lang"), col("sz"), col("gh"), col("rk"), col("df"))
-      .repartition(Tables.nPart(spark), col("lang"), col("gh"))
-      .transform(CacheScope.barrier) // probe and index sides share one ranking pass
-    (g, ranked)
-  }
-
-  /** Containment instantiation of [[BandedSpine]] (t = 0.8): integer
-    * ⌊sz/5⌋ prefix floor (no FP floor drift), asymmetric-direction
-    * positional bound, no extra blocking key (either side may be the
-    * qualifying direction, so length buckets don't apply).
-    */
-  private[graft] val containmentSpine = BandedSpine(
-    slack = PrefixSlack,
-    prefixFloor = n => expr(s"$n div 5"),
-    missFloor = n => floor(lit(0.20005) * col(n)),
-    blockKeys = Seq("lang"),
-    pairLowerBound = (szP, _) => lit(0.79995) * szP,
-    // a probe row witnesses direction P⊂Q, which needs |Q| ≥ |P∩Q| ≥
-    // 0.79995·|P| (spine size-filter note; same slop constant as the
-    // positional bound)
-    sizeBound = Some((szP, szQ) => szQ >= lit(0.79995) * szP),
-    // asymmetric semantics: per-direction floors, either direction
-    // suffices — measured 842k → 435k verify pairs at sf0.1
-    directionalOr = true)
-
   private def containmentBandedFrom(g: DataFrame, ranked: DataFrame): DataFrame =
-    containmentSpine.survivors(ranked)
-      .join(g.select(col("doc_id").as("a_id"), col("gr").as("ga"), col("sz").as("sza")), Seq("a_id"))
-      .join(g.select(col("doc_id").as("b_id"), col("gr").as("gb"), col("sz").as("szb")), Seq("b_id"))
-      .withColumn("ic", expr("intersect_count_sorted(ga, gb)").cast("double"))
-      .select(col("a_id"), col("b_id"),
-        round(col("ic") / col("sza"), 4).as("cont_a"),
-        round(col("ic") / col("szb"), 4).as("cont_b"))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= 0.8)
+    containmentConfirm(spineCandidates(containmentSpine, g, ranked))
 
   /** Posting-density probe result for the containment family. `density`
     * is the fraction of the corpus the typical SELECTED prefix gram's
@@ -1688,7 +1549,7 @@ object DedupOps {
     */
   private[graft] def containmentDensityProbe(g: DataFrame,
                                              ranked: DataFrame): ContainmentDensity = {
-    val r = ranked.filter(containmentSpine.prefixCond())
+    val r = ranked.filter(containmentSpine.prefixCond)
       .agg(avg(col("df")), sum(col("df").cast("double"))).head()
     ContainmentDensity(g.count(),
       if (r.isNullAt(0)) 0.0 else r.getDouble(0),
@@ -1705,7 +1566,7 @@ object DedupOps {
     */
   private[graft] def containmentProbe2(spark: SparkSession,
                                        sfDir: String): ContainmentDensity = {
-    val (g, ranked) = containmentGramTables(spark, sfDir)
+    val (g, ranked) = bandedTables(spark, sfDir, containmentSpine)
     containmentDensityProbe(g, ranked)
   }
 
@@ -1769,7 +1630,7 @@ object DedupOps {
     * branch reuses the cached gram table.
     */
   def ngramContainmentAuto(spark: SparkSession, sfDir: String): DataFrame = {
-    val (g, ranked) = containmentGramTables(spark, sfDir)
+    val (g, ranked) = bandedTables(spark, sfDir, containmentSpine)
     val d = containmentDensityProbe(g, ranked)
     val tier = containmentTier(d)
     println(s"[graft] containment density probe: $d tier=$tier")
@@ -1798,13 +1659,13 @@ object DedupOps {
     * undefined); quadratic DuckDB twin [[ngramContainmentShinglesSql]].
     */
   def ngramContainmentShingles(spark: SparkSession, sfDir: String): DataFrame = {
-    val (g, ranked) = containmentGramTables(spark, sfDir, shingles3Sql("t"))
+    val (g, ranked) = bandedTables(spark, sfDir, containmentSpine, shingles3Sql("t"))
     containmentBandedFrom(g, ranked)
   }
 
   /** Jaccard over word 3-shingles — the OPEN-VOCABULARY exact jaccard
     * tier, and the symmetric twin of [[ngramContainmentShingles]] (same
-    * rationale, same shared banded plan via [[jaccardGramTables]]'s gram
+    * rationale, same shared banded plan via [[bandedTables]]' gram
     * parameter). The char-4-gram tier's low-threshold wall is candidate
     * MASS: at t = 0.4 the prefix spans 60% of each gram set, and in a
     * FINITE gram space mid-frequency grams make Σ prefix×posting ~n² on
@@ -1821,7 +1682,7 @@ object DedupOps {
     * [[ngramJaccardShinglesSql]].
     */
   def ngramJaccardShingles(spark: SparkSession, sfDir: String): DataFrame = {
-    val (g, ranked) = jaccardGramTables(spark, sfDir, shingles3Sql("t"))
+    val (g, ranked) = bandedTables(spark, sfDir, jaccardSpine, shingles3Sql("t"))
     jaccardBandedFrom(g, ranked)
   }
 
@@ -1874,16 +1735,7 @@ object DedupOps {
   def ngramJaccardShinglesPairs(spark: SparkSession, sfDir: String): DataFrame = {
     requireBoundedCorpus(Tables.documents(spark, sfDir),
       "ngram_jaccard_shingles_pairs")
-    val (g, _) = jaccardGramTables(spark, sfDir, shingles3Sql("t"))
-    val a = g.select(col("doc_id").as("a_id"), col("lang"), col("lenb"), col("gr").as("ga"))
-    val b = g.select(col("doc_id").as("b_id"), col("lang"), col("lenb"), col("gr").as("gb"))
-    // broadcast build side: same rationale as ngramJaccardPairs (r13) —
-    // block-key cardinality ≤ |langs|·|lenbs| starves a shuffled join
-    a.join(broadcast(b), Seq("lang", "lenb"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("jacc", expr("jaccard_sorted(ga, gb)"))
-      .filter(col("jacc") >= 0.4)
-      .select(col("a_id"), col("b_id"), round(col("jacc"), 4).as("jacc"))
+    jaccardAllPairs(gramSets(spark, sfDir, jaccardSpine, shingles3Sql("t")))
   }
 
   /** Quadratic (lang-blocked all-pairs) twin of
@@ -1898,18 +1750,8 @@ object DedupOps {
   def ngramContainmentShinglesPairs(spark: SparkSession, sfDir: String): DataFrame = {
     requireBoundedCorpus(Tables.documents(spark, sfDir),
       "ngram_containment_shingles_pairs")
-    val (g, _) = containmentGramTables(spark, sfDir, shingles3Sql("t"))
-    val a = g.select(col("doc_id").as("a_id"), col("lang"), col("gr").as("ga"), col("sz").as("sza"))
-    val b = g.select(col("doc_id").as("b_id"), col("lang"), col("gr").as("gb"), col("sz").as("szb"))
-    // broadcast build side: same rationale as ngramJaccardPairs (r13) —
-    // lang-only block key starves a shuffled join of parallelism
-    a.join(broadcast(b), Seq("lang"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("ic", expr("intersect_count_sorted(ga, gb)").cast("double"))
-      .select(col("a_id"), col("b_id"),
-        round(col("ic") / col("sza"), 4).as("cont_a"),
-        round(col("ic") / col("szb"), 4).as("cont_b"))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= 0.8)
+    containmentConfirm(blockPairs(
+      gramSets(spark, sfDir, containmentSpine, shingles3Sql("t")), containmentSpine.blockKeys))
   }
 
   /** Content-defined-chunking (CDC) dedup: split each normalized text at

@@ -58,13 +58,6 @@ object KafkaIO {
       .option("startingOffsets", startingOffsets) // reference auto.offset.reset=latest
       .load()
 
-  /** Batch twin of the source (same columns; for reprocessing). */
-  def batchSource(spark: SparkSession, bootstrap: String, topic: String): DataFrame =
-    spark.read.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topic)
-      .load()
-
   /** S3/S4: streaming sink to one topic. 1 s trigger mirrors the
     * reference's commit.interval.ms=1000; checkpointLocation carries both
     * consumer-group identity and state (SURVEY.md §2.5).

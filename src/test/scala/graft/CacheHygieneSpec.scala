@@ -3,10 +3,10 @@ package graft
 /** VERDICT r2 "what's wrong #1" as an executable contract: after running
   * every SparkEntry query and calling `CacheScope.release()`, NO cached
   * blocks may remain in the JVM. Operators either scope their own cache
-  * (connected components unpersists its edge table; its per-round
-  * localCheckpoint RDDs are freed by the ContextCleaner once
-  * unreferenced) or register barriers with CacheScope — there is no
-  * third, leaking category.
+  * (connected components unpersists its edge table) or register what
+  * they persist with CacheScope (barriers, and every per-round
+  * localCheckpoint RDD of connected components) — there is no third,
+  * leaking category.
   */
 class CacheHygieneSpec extends SparkSpec {
 
@@ -19,9 +19,9 @@ class CacheHygieneSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
       "expected live barriers before release (the test would be vacuous)")
     CacheScope.release()
-    // Dataset persists drop synchronously; localCheckpoint RDDs (the
-    // dedup_clusters rounds) are ContextCleaner-freed after GC — nudge
-    // with a bounded wait.
+    // Dataset persists and the registered localCheckpoint RDDs (the
+    // dedup_clusters rounds) drop synchronously; the bounded GC wait
+    // only covers blocks left to the ContextCleaner.
     def persisted = spark.sparkContext.getPersistentRDDs
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     while (persisted.nonEmpty && System.nanoTime() < deadline) {
@@ -30,6 +30,25 @@ class CacheHygieneSpec extends SparkSpec {
     }
     assert(persisted.isEmpty,
       s"leaked cached RDDs: ${persisted.values.map(_.toString).take(10).mkString("; ")}")
+  }
+
+  test("dedup_clusters: release() drops every round's checkpoint at once, no GC wait") {
+    // connected components checkpoints each label round; a superseded
+    // round that CacheScope does not know about stays persisted until the
+    // GC-driven ContextCleaner reaches it, so assert right after release()
+    val sf = "/root/testdata/sf0.001"
+    CacheScope.release() // no memoized dedup_clusters from an earlier test
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def checkpoints = spark.sparkContext.getPersistentRDDs.filter {
+      case (id, rdd) => !before(id) && rdd.isCheckpointed
+    }
+    SparkEntry.queries("dedup_clusters")(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    assert(checkpoints.size >= 2,
+      "expected several checkpointed CC rounds before release (the test would be vacuous)")
+    CacheScope.release()
+    assert(checkpoints.isEmpty,
+      s"round checkpoints survived release(): ${checkpoints.values.mkString("; ")}")
   }
 
   test("using CacheScope leaves the MapPartitionsRDD log level alone") {

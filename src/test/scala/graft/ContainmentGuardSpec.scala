@@ -141,4 +141,17 @@ class ContainmentGuardSpec extends SparkSpec {
     assert(e.getMessage.contains("bounded-quadratic tier"))
     assert(e.getMessage.contains("minhash-LSH"))
   }
+
+  test("quadratic-twin guard counts documents: many tiny docs exceed the bound") {
+    // 11 one-word docs are a few KB of parquet — far under any byte gate
+    // sized at 4 KiB per doc — but one doc over the 10-doc contract
+    import spark.implicits._
+    val dir = s"/tmp/graft_tiny_docs_spec_${System.nanoTime()}"
+    (0L until 11L).map(i => (i, s"w$i", "en", "synthetic", 2L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalStateException](
+      DedupOps.requireBoundedCorpus(Tables.documents(spark, dir), "spec", bound = 10L))
+    assert(e.getMessage.contains("11 documents"))
+  }
 }
