@@ -4,7 +4,7 @@ import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
-/** The local session every dev main (Bench, Profile, Verify, TwinCheck,
+/** The local session every dev main (Bench, Verify, TwinCheck,
   * PlanDump, the data generators, the streaming benches, the demo) starts
   * from, so they all measure under the same settings:
   *

@@ -846,8 +846,11 @@ object DedupOps {
     * shingles). Grams are hashed to longs, sorted and distinct, so the
     * codegen'd merge-pass comparators need one O(n+m) scan per pair and
     * no hash builds. Docs with no grams (sz = 0: neither similarity is
-    * defined, and they can never appear in a posting) are dropped up
-    * front.
+    * defined, and they can never appear in a posting) are dropped after
+    * the barrier: a filter on `sz` above it is pushed through
+    * `Tables.parallelized`'s round-robin repartition into the
+    * single-task scan, which then hashes every doc's grams a second
+    * time.
     */
   private def gramSets(spark: SparkSession, sfDir: String, spine: BandedSpine,
       gramSql: String = charGramsSql("norm", 4)): DataFrame =
@@ -858,8 +861,8 @@ object DedupOps {
       .select(col("doc_id") +: spine.blockKeys.map(col) :+ sort_array(array_distinct(
         expr(s"transform($gramSql, s -> ${h32Sql("s")})"))).as("gr"): _*)
       .withColumn("sz", size(col("gr")))
-      .filter(col("sz") > 0)
       .transform(CacheScope.barrier) // postings, ranking, and confirm all reuse
+      .filter(col("sz") > 0)
 
   /** The one rarest-first ranking builder of every banded family: each
     * posting row gains its gram's document frequency `df` (counted per

@@ -351,6 +351,35 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("gram-set build: the documents scan carries no gram hashing in its DataFilters") {
+    // gramSets filters sz > 0 above its barrier: below it, Catalyst pushes
+    // the filter through Tables.parallelized's round-robin repartition
+    // into the single-task scan, which then hashes every doc's grams once
+    // more. Barriers stay live here: the scan sits in the cached plan.
+    def scans(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        scans(m.relation.cachedPlan)
+    }.flatten
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try Seq("ngram_containment_banded", "ngram_jaccard_pairs").foreach { q =>
+      CacheScope.release()
+      spark.catalog.clearCache()
+      val all = scans(SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan)
+      assert(all.nonEmpty, s"$q: no file scan found")
+      all.foreach { s =>
+        val filters = s.dataFilters.map(_.sql)
+        assert(!filters.exists(_.contains("transform(")),
+          s"$q: gram hashing pushed into the scan: $filters")
+      }
+    } finally {
+      CacheScope.release()
+      spark.catalog.clearCache()
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+  }
+
   test("ngram_jaccard_banded: no single-task stage, no block-only self-join") {
     // same contract as the containment banded tier: candidate generation
     // must key on the gram hash, never degenerate to all-pairs within a
