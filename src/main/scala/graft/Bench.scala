@@ -4,7 +4,9 @@ import java.lang.management.ManagementFactory
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
@@ -35,13 +37,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     plus `cold_s`, the first warm-up's wall: an overhead-bound query
   *     (many jobs, low `busy_share`) reads differently from a
   *     compute-bound one.
-  *  4. **One JVM.** Bench measures every query in the JVM it runs in. A
-  *     single JVM running all ~196 queries measures accumulated wear as
-  *     much as the operators: late queries inherit a worn code cache and
-  *     heap (r7 measured `ngram_containment_pairs` at 6.84 s in-suite vs
-  *     0.54 s fresh-JVM, a 13× pure-wear artifact). Fresh-JVM numbers
-  *     come from `tools/sweep.sh`, which starts one JVM per query and
-  *     arm; `SPARK_GRAFT_BENCH_FAST=0` there sweeps the full protocol.
+  *  4. **Split JVMs for the full suite.** A single JVM running all
+  *     ~196 queries measures accumulated wear as much as the operators:
+  *     late queries inherit a worn code cache and heap (r7 measured
+  *     `ngram_containment_pairs` at 6.84 s in-suite vs 0.54 s fresh-JVM,
+  *     a 13× pure-wear artifact). A no-argument invocation therefore
+  *     forks one child JVM per family-sized chunk (≤ [[ChunkMax]]
+  *     queries) and merges the children's records. Explicit query-name
+  *     args (the dev loop, the children, tools/sweep.sh) never split;
+  *     `tools/sweep.sh` starts one JVM per query and arm.
   *
   * Each run forces the complete plan through the `noop` sink — a bare
   * `count()` would let Catalyst prune the projections being measured.
@@ -68,6 +72,17 @@ object Bench {
                         warmups: Int, gcMs: Long, jitMs: Long,
                         coldS: Double, run: Option[RunMetrics])
 
+  /** One query's entry in the artifact: median and minimum for the
+    * compact line, and its `variance` record. */
+  private final case class Row(med: Double, min: Double, record: String)
+
+  /** Max queries per child JVM. Small enough that wear can't accumulate
+    * to artifact level (r7's wear surfaced after ~150 queries; chunks of
+    * ~22 keep each JVM in its fresh regime), large enough that the
+    * per-JVM session boot (~10 s) stays a small fraction of the suite.
+    */
+  private val ChunkMax = 22
+
   private def f(d: Double): String =
     BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toString
   private def f3(d: Double): String =
@@ -86,17 +101,19 @@ object Bench {
   /** Render + write the artifact pair (compact stdout line, verbose
     * BENCH_local.json) from a full result set.
     *
-    * `protocol` makes the artifact self-describing: a protocol change
-    * between rounds is readable from the records alone. The chunk
-    * counters stay in the line at 0 since v5 (Bench no longer forks).
+    * `protocol` + the chunk-mode counters make the artifact
+    * self-describing: a protocol change between rounds is readable from
+    * the records alone, and `fallback_chunks > 0` flags medians that
+    * were measured in the worn parent JVM instead of a fresh child.
     */
-  private def emit(results: Seq[(String, Stat)], sfDir: String,
-                   skipped: Seq[String], protocol: String): Unit = {
-    val meta = "\"protocol\":\"" + protocol +
-      "\",\"forked_chunks\":0,\"fallback_chunks\":0"
+  private def emit(results: Seq[(String, Row)], sfDir: String,
+                   skipped: Seq[String], protocol: String,
+                   forkedChunks: Int, fallbackChunks: Int): Unit = {
+    val meta = "\"protocol\":\"" + protocol + "\",\"forked_chunks\":" +
+      forkedChunks + ",\"fallback_chunks\":" + fallbackChunks
     val qs = results.map { case (k, s) => "\"" + k + "\":" + f(s.med) }
       .mkString("{", ",", "}")
-    val vari = results.map { case (k, s) => "\"" + k + "\":" + record(s) }
+    val vari = results.map { case (k, s) => "\"" + k + "\":" + s.record }
       .mkString("{", ",", "}")
     val total = results.map(_._2.med).filter(_ >= 0).sum
     val skippedJson = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -221,7 +238,7 @@ object Bench {
 
   /** Measure `names` in this JVM, in name order. */
   private def measureAll(names: Seq[String], sfDir: String, fast: Boolean,
-                         jitGate: Boolean): Seq[(String, Stat)] = {
+                         jitGate: Boolean): Seq[(String, Row)] = {
     val spark = DevSession()
     names.sorted.map { name =>
       val s = try {
@@ -242,8 +259,57 @@ object Bench {
         // garbage now so its cost is not charged to the next query's runs.
         System.gc()
       }
-      name -> s
+      name -> Row(s.med, s.min, record(s))
     }
+  }
+
+  /** Fork one child JVM per chunk, in sequence, and merge the `variance`
+    * records of the BENCH_local.json each writes into a scratch
+    * directory. The bounded-quadratic coverage twins fork in chunks of
+    * their own (r12 verdict #4): they are the rows most exposed to a
+    * neighbour's heap wear (r12's driver record spread
+    * ngram_containment_pairs 0.53–16.2 s within one run), and their
+    * multi-GB churn is the worst wear a shipped tier could inherit. A
+    * child runs with this JVM's flags and classpath, inherits the env and
+    * gets explicit query names, so it never re-splits. A chunk whose
+    * child fails is measured in this JVM and counted as a fallback.
+    * Returns the rows and the forked and fallback chunk counts.
+    */
+  private def runSplit(names: Seq[String], sfDir: String, fast: Boolean,
+                       jitGate: Boolean): (Seq[(String, Row)], Int, Int) = {
+    val chunks = names.groupBy(n => (family(n), quadraticTwins(n)))
+      .toSeq.sortBy(_._1)
+      .flatMap { case (_, qs) => qs.sorted.grouped(ChunkMax) }
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
+      ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
+      Seq("-cp", sys.props("java.class.path"), "graft.Bench")
+    val dir = java.nio.file.Files.createTempDirectory("graft_bench_")
+    val out = dir.resolve("BENCH_local.json").toFile
+    val json = new ObjectMapper()
+      .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    val parts = chunks.zipWithIndex.map { case (chunk, i) =>
+      out.delete()
+      val ok = Try(new ProcessBuilder((cmd ++ chunk).asJava)
+        .directory(dir.toFile)
+        .redirectOutput(dir.resolve(s"out_$i.log").toFile)
+        .redirectError(dir.resolve(s"err_$i.log").toFile)
+        .start().waitFor() == 0).getOrElse(false)
+      val rows = if (!ok) Nil else Try(
+        json.readTree(out).get("variance").properties.asScala.toSeq.map { e =>
+          val v = e.getValue
+          e.getKey -> Row(v.get("med").asDouble, v.get("min").asDouble, v.toString)
+        }).getOrElse(Nil)
+      if (rows.map(_._1).toSet == chunk.toSet) (rows, true)
+      else {
+        System.err.println(s"[bench] chunk $i fork failed — in-process fallback")
+        (measureAll(chunk, sfDir, fast, jitGate), false)
+      }
+    }
+    val fellBack = parts.count(!_._2)
+    // the chunk logs are kept only to explain a fallback
+    if (fellBack > 0) System.err.println(s"[bench] chunk logs kept in $dir")
+    else org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    (parts.flatMap(_._1).sortBy(_._1), parts.size - fellBack, fellBack)
   }
 
   def main(args: Array[String]): Unit = {
@@ -256,8 +322,8 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // optional args = query-name subset (dev loop, sweep.sh); none = every
-    // query
+    // optional args = query-name subset (dev loop, child chunks,
+    // sweep.sh); none = every query, split across child JVMs
     val wanted = args.toSet
     val all = SparkEntry.queries.keys.toSeq.sorted
     val picked0 = if (wanted.isEmpty) all else all.filter(wanted)
@@ -269,18 +335,22 @@ object Bench {
     // protocol id v5: v1 = warm-cache single-JVM (rounds ≤6), v2 = r7's
     // cold-cache fast mode, v3 = r8–r12 cold-cache + fork-per-family-
     // chunk, v4 = r13+ v3 with the quadratic coverage twins isolated in
-    // their own chunks, v5 = one JVM for any query list, each run under a
-    // RunMetrics listener (fresh-JVM runs: tools/sweep.sh). Totals are
-    // comparable only within one protocol id; an explicit-list v4 run
-    // and a v5 run measure the same way. r14 adds a GC level at the
-    // warmup→timed boundary (see measure()) — disclosed in the runs
-    // descriptor below.
+    // their own chunks, v5 = v4 with each run under a RunMetrics listener
+    // and the median run's counters in the record. Totals are comparable
+    // only within one protocol id; v4 and v5 time the same way. r14 adds
+    // a GC level at the warmup→timed boundary (see measure()) — disclosed
+    // in the runs descriptor below.
     val runsDesc =
       if (fast && jitGate) "jit-settled warmups (<=4, settle when compile delta < 3s) + 1 cold-cache timed run"
       else if (fast) "1 warmup + 1 cold-cache timed run"
       else "stability-gated warmup, gc level, median-of-3 (best-3-of-6 on spread)"
-    emit(measureAll(picked, sfDir, fast, jitGate), sfDir, skipped,
-      s"v5 single-jvm, run metrics of the median run; $runsDesc")
+    if (wanted.isEmpty) {
+      val (rows, forked, fellBack) = runSplit(picked, sfDir, fast, jitGate)
+      emit(rows, sfDir, skipped, "v5 fork-per-family-chunk, quadratic twins " +
+        s"isolated, run metrics of the median run; $runsDesc", forked, fellBack)
+    } else emit(measureAll(picked, sfDir, fast, jitGate), sfDir, skipped,
+      s"v5 single-jvm explicit-list, run metrics of the median run; $runsDesc",
+      0, 0)
     SparkSession.getActiveSession.foreach(_.stop())
   }
 }

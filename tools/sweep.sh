@@ -1,13 +1,10 @@
 #!/bin/bash
 # Fresh-JVM sweep of graft.Bench: one JVM per (sample, corpus, query, arm)
-# in fast mode (1 warm-up + 1 cold-cache timed run; SPARK_GRAFT_BENCH_FAST=0
-# runs Bench's full protocol instead), merged into one JSON artifact whose
-# `variance` rows carry each run's Bench record (timings and run metrics).
-# This is the fresh-JVM path: graft.Bench itself measures in one JVM, and
-# a one-JVM sweep measures JVM wear as much as the operator at 10x data
-# (measured: ngram_containment_banded 154.8 s mid-sweep vs 40-54 s in a
-# fresh JVM on the same data), so every measurement starts from a clean
-# heap, code cache and cache manager. Each arm's classes are
+# in fast mode (1 warm-up + 1 cold-cache timed run), merged into one JSON
+# artifact. A one-JVM sweep measures JVM wear as much as the operator at
+# 10x data (measured: ngram_containment_banded 154.8 s mid-sweep vs
+# 40-54 s in a fresh JVM on the same data), so every measurement starts
+# from a clean heap, code cache and cache manager. Each arm's classes are
 # copied first, so a recompile during a long sweep cannot hand a
 # half-written class file to a later JVM.
 #
@@ -51,7 +48,6 @@ if [ -z "$OUT" ] || [ ${#CORPORA[@]} -eq 0 ]; then
   sed -n '/^# Usage:/,/^# A corpus label/p' "$0" >&2; exit 2
 fi
 [ ${#ARMS[@]} -gt 0 ] || ARMS=("head=$ROOT/target/scala-2.13/classes")
-FAST="${SPARK_GRAFT_BENCH_FAST:-1}"
 TMP=$(mktemp -d)
 trap 'rm -rf "$TMP"' EXIT
 for arm in "${ARMS[@]}"; do
@@ -61,7 +57,7 @@ FIRST="$TMP/classes_${ARMS[0]%%=*}"
 cd "$TMP"
 bench() { # $1 = classes dir, then Bench args
   local cls="$1"; shift
-  GRAFT_CLASSES="$cls" SPARK_GRAFT_BENCH_FAST="$FAST" \
+  GRAFT_CLASSES="$cls" SPARK_GRAFT_BENCH_FAST=1 \
     SPARK_GRAFT_BENCH_JITGATE="$JITGATE" SPARK_DRIVER_MEM="$MEM" \
     "$ROOT/tools/runmain.sh" graft.Bench "$@"
 }
@@ -106,9 +102,9 @@ EOF
     done
   done
 done
-python3 - parts.jsonl "$OUT" "$MEM" "$JITGATE" "$FAST" skipped.txt <<'EOF'
+python3 - parts.jsonl "$OUT" "$MEM" "$JITGATE" skipped.txt <<'EOF'
 import json, statistics, sys
-parts, out, mem, jitgate, fast, skipped = sys.argv[1:]
+parts, out, mem, jitgate, skipped = sys.argv[1:]
 rows = {}
 for line in open(parts):
     r = json.loads(line)
@@ -126,12 +122,10 @@ for row in rows.values():
     row["total"] = round(sum(v for v in row["queries"].values() if v >= 0), 3)
 warmup = ("warm-ups until the JIT compile delta < 3 s (max 4)" if jitgate == "1"
           else "1 warm-up")
-runs = (f"fast mode: {warmup} + 1 cold-cache timed run" if fast == "1"
-        else "full protocol: stability-gated warm-ups + median of 3 timed runs")
 result = {
     "metric": "sweep", "unit": "sec", "driver_mem": mem,
     "protocol": "fresh JVM per (sample, corpus, query, arm), arms alternating, "
-                f"frozen classes; {runs}",
+                f"frozen classes; fast mode: {warmup} + 1 cold-cache timed run",
     "skipped": [q.strip() for q in open(skipped) if q.strip()],
     "rows": list(rows.values())}
 json.dump(result, open(out, "w"), indent=1)
