@@ -22,14 +22,18 @@ final class RunMetrics(val cores: Int) extends SparkListener {
   var runMs, cpuNs, gcMs, shufRead, shufWrite, fetchWaitMs, spill = 0L
   /** task deserialization + result serialization, and shuffle-write time */
   var serdeMs, shufWriteNs = 0L
-  private val stageNames = mutable.HashMap.empty[Int, String]
+  private val stageNames = mutable.HashMap.empty[Int, (String, String)] // name, op
   private val stageRun = mutable.HashMap.empty[Int, (Long, Long)] // tasks, runMs
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
     stages += 1
-    stageNames(e.stageInfo.stageId) = e.stageInfo.name.takeWhile(_ != '\n').take(60)
+    // the call site names broadcast and subquery stages after the thread
+    // pool that ran them; the operation scope of the stage's last RDD
+    // names the plan node
+    val op = e.stageInfo.rddInfos.maxByOption(_.id).flatMap(_.scope).fold("")(_.name)
+    stageNames(e.stageInfo.stageId) = (e.stageInfo.name.takeWhile(_ != '\n').take(60), op)
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
@@ -56,11 +60,14 @@ final class RunMetrics(val cores: Int) extends SparkListener {
   }
 
   /** The 3 stages with the most executor run time, most first:
-    * (stage id, name, tasks, run ms).
+    * (stage id, name, tasks, run ms, operation scope).
     */
-  def topStages: Seq[(Int, String, Long, Long)] = synchronized {
-    stageRun.toSeq.sortBy { case (id, (_, run)) => (-run, id) }.take(3)
-      .map { case (id, (n, run)) => (id, stageNames.getOrElse(id, ""), n, run) }
+  def topStages: Seq[(Int, String, Long, Long, String)] = synchronized {
+    stageRun.toSeq.sortBy { case (id, (_, run)) => (-run, id) }.take(3).map {
+      case (id, (n, run)) =>
+        val (name, op) = stageNames.getOrElse(id, ("", ""))
+        (id, name, n, run, op)
+    }
   }
 
   /** The counters as JSON object members (no braces), in perfbench's
@@ -73,8 +80,8 @@ final class RunMetrics(val cores: Int) extends SparkListener {
       case c if c < ' ' => " "
       case c => c.toString
     }
-    val top = topStages.map { case (id, name, n, run) =>
-      s"""{"id":$id,"name":"${esc(name)}","tasks":$n,"run_ms":$run}"""
+    val top = topStages.map { case (id, name, n, run, op) =>
+      s"""{"id":$id,"name":"${esc(name)}","op":"${esc(op)}","tasks":$n,"run_ms":$run}"""
     }.mkString("[", ",", "]")
     Seq("jobs" -> jobs, "stages" -> stages, "tasks" -> tasks,
       "executor_run_ms" -> runMs, "executor_cpu_ms" -> cpuNs / 1000000L,

@@ -38,15 +38,6 @@ case class CharEntropyQ(child: Expression) extends UnaryExpression {
 }
 
 object CharEntropyQ {
-  /** Shared by interpreted eval and codegen (one static call — the loop
-    * is small enough that JIT inlines it; no Janino-side code to keep in
-    * sync with the interpreter). Named `compute`, NOT `eval`: a companion
-    * method whose name collides with any member of the case class (here
-    * `Expression.eval`) gets no static forwarder on the class file, so
-    * Janino would resolve `CharEntropyQ.eval(...)` to the instance method
-    * and the generated code would fail to compile — silently falling the
-    * whole stage back to interpreted eval.
-    */
   def compute(s: UTF8String): Long = {
     val bytes = s.getBytes
     val cnt = new Array[Int](128)

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Native Catalyst expression: Jaccard similarity of two SORTED, DISTINCT
   * long arrays via a single merge pass — O(n+m) with no per-call hash-set
@@ -21,47 +21,26 @@ case class JaccardSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "jaccard_sorted"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements(); val m = y.numElements()
-    var i = 0; var j = 0; var inter = 0
-    while (i < n && j < m) {
-      val xi = x.getLong(i); val yj = y.getLong(j)
-      if (xi == yj) { inter += 1; i += 1; j += 1 }
-      else if (xi < yj) i += 1
-      else j += 1
-    }
-    val union = n + m - inter
-    if (union == 0) 0.0 else inter.toDouble / union
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    JaccardSimilarity.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  // all locals are freshName'd: Java forbids shadowing an enclosing
-  // generated function's locals (a bare `int i` fails Janino compilation
-  // inside e.g. a WindowExec/HashAggregate body that already declares i,
-  // silently dropping the stage to interpreted fallback)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter"); val union = ctx.freshName("union")
-      val xi = ctx.freshName("xi"); val yj = ctx.freshName("yj")
-      s"""
-         |int $n = $a.numElements(); int $m = $b.numElements();
-         |int $i = 0; int $j = 0; int $inter = 0;
-         |while ($i < $n && $j < $m) {
-         |  long $xi = $a.getLong($i); long $yj = $b.getLong($j);
-         |  if ($xi == $yj) { $inter++; $i++; $j++; }
-         |  else if ($xi < $yj) { $i++; } else { $j++; }
-         |}
-         |int $union = $n + $m - $inter;
-         |${ev.value} = $union == 0 ? 0.0 : ((double) $inter) / $union;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.JaccardSimilarity.compute($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object JaccardSimilarity {
+  /** |A∩B| / |A∪B| from the [[IntersectCountSorted]] merge count; 0 when
+    * both sets are empty.
+    */
+  def compute(x: ArrayData, y: ArrayData): Double = {
+    val inter = IntersectCountSorted.compute(x, y)
+    val union = x.numElements().toLong + y.numElements() - inter
+    if (union == 0) 0.0 else inter.toDouble / union
+  }
 }
 
 /** The [[IntersectCountSorted]] merge pass over SORTED, DISTINCT STRING
@@ -79,12 +58,23 @@ case class JaccardSimilarity(left: Expression, right: Expression)
 case class IntersectCountSortedStr(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
   override def prettyName: String = "intersect_count_sorted_str"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntersectCountSortedStr.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.IntersectCountSortedStr.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object IntersectCountSortedStr {
+  def compute(x: ArrayData, y: ArrayData): Long = {
     val n = x.numElements(); val m = y.numElements()
     var i = 0; var j = 0; var inter = 0L
     while (i < n && j < m) {
@@ -95,27 +85,6 @@ case class IntersectCountSortedStr(left: Expression, right: Expression)
     }
     inter
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter"); val c = ctx.freshName("c")
-      s"""
-         |int $n = $a.numElements(); int $m = $b.numElements();
-         |int $i = 0; int $j = 0; long $inter = 0L;
-         |while ($i < $n && $j < $m) {
-         |  int $c = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-         |  if ($c == 0) { $inter++; $i++; $j++; }
-         |  else if ($c < 0) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $inter;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Popcount of the AND of two equal-length long-array bitmaps — exact
@@ -127,12 +96,22 @@ case class IntersectCountSortedStr(left: Expression, right: Expression)
 case class BitmapAndCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
   override def prettyName: String = "bitmap_and_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    BitmapAndCount.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.BitmapAndCount.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object BitmapAndCount {
+  def compute(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var i = 0; var c = 0L
     while (i < n) {
@@ -141,24 +120,6 @@ case class BitmapAndCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $c = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $c += java.lang.Long.bitCount($a.getLong($i) & $b.getLong($i));
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Same merge pass, returning the raw intersection COUNT — the numerator
@@ -169,12 +130,23 @@ case class BitmapAndCount(left: Expression, right: Expression)
 case class IntersectCountSorted(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
   override def prettyName: String = "intersect_count_sorted"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntersectCountSorted.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.IntersectCountSorted.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object IntersectCountSorted {
+  /** The one long-array merge loop; [[JaccardSimilarity]] counts with it. */
+  def compute(x: ArrayData, y: ArrayData): Long = {
     val n = x.numElements(); val m = y.numElements()
     var i = 0; var j = 0; var inter = 0L
     while (i < n && j < m) {
@@ -185,26 +157,4 @@ case class IntersectCountSorted(left: Expression, right: Expression)
     }
     inter
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val xi = ctx.freshName("xi"); val yj = ctx.freshName("yj")
-      s"""
-         |int $n = $a.numElements(); int $m = $b.numElements();
-         |int $i = 0; int $j = 0; long $inter = 0L;
-         |while ($i < $n && $j < $m) {
-         |  long $xi = $a.getLong($i); long $yj = $b.getLong($j);
-         |  if ($xi == $yj) { $inter++; $i++; $j++; }
-         |  else if ($xi < $yj) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $inter;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

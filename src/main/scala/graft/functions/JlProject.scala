@@ -71,11 +71,6 @@ object JlProject {
       out
     })
 
-  /** Named `compute`, not `eval`: an `eval` companion method collides
-    * with `Expression.eval`, which suppresses the static forwarder and
-    * makes the codegen call resolve to the instance method — Janino then
-    * fails and the stage silently falls back to interpreted eval.
-    */
   def compute(v: ArrayData, rpDims: Int): ArrayData = {
     val d = v.numElements()
     val sg = signs(rpDims, d)

@@ -12,6 +12,15 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, In
   * every entry at session build, and [[register]] adds them to a running
   * session ([[graft.Graft.init]], [[graft.Tables.table]] and the
   * DataFrame entry points that can be reached without `Tables`).
+  *
+  * Each kernel writes its algorithm once, as a static method on an
+  * object that both `nullSafeEval` and `doGenCode` call, so generated
+  * Java carries one call and no loop of its own. Name that method
+  * `compute`, never `eval`: a companion method whose name collides with
+  * a member of the case class (`Expression.eval`) gets no static
+  * forwarder, the generated call resolves to the instance method,
+  * Janino fails to compile it, and the stage silently falls back to
+  * interpreted eval ([[graft.CodegenKernelSpec]] compiles every kernel).
   */
 object Kernels {
 

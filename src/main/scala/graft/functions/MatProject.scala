@@ -65,9 +65,7 @@ case class MatProject(child: Expression, means: Seq[Double],
 
 object MatProject {
 
-  /** Named `compute`, not `eval` — see [[JlProject.compute]].
-    *
-    * Input contract enforced with a clear message (r14, ADVICE): the HOF
+  /** Input contract enforced with a clear message (r14, ADVICE): the HOF
     * form this kernel replaced null-propagated a short or null-holding
     * embedding row into silent null outputs via `element_at`; the raw
     * `getDouble(i)` here would instead read undefined bytes or throw an

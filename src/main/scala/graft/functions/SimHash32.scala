@@ -29,8 +29,17 @@ case class SimHash32(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash32"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = SimHash32.compute(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.SimHash32.compute($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHash32 {
+  def compute(x: ArrayData): Long = {
     val n = x.numElements()
     val cnt = new Array[Int](32)
     var i = 0
@@ -45,29 +54,4 @@ case class SimHash32(child: Expression) extends UnaryExpression {
     while (j < 32) { if (2 * cnt(j) > n) out |= 1L << j; j += 1 }
     out
   }
-
-  // loop vars freshName'd too: even `for (int i ...)` is a Janino
-  // redefinition error when the enclosing generated function declares i
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cnt = ctx.freshName("cnt")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val j2 = ctx.freshName("j2"); val h = ctx.freshName("h")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $cnt = new int[32];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $j = 0; $j < 32; $j++) { $cnt[$j] += (int) (($h >>> $j) & 1L); }
-         |}
-         |${ev.value} = 0L;
-         |for (int $j2 = 0; $j2 < 32; $j2++) {
-         |  if (2 * $cnt[$j2] > $n) ${ev.value} |= 1L << $j2;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

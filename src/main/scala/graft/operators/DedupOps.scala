@@ -1409,17 +1409,12 @@ object DedupOps {
   def ngramContainmentPairs(spark: SparkSession, sfDir: String): DataFrame = {
     requireBoundedCorpus(Tables.documents(spark, sfDir),
       "ngram_containment_pairs")
-    val g = Tables.documents(spark, sfDir)
-      .withColumn("norm", normText(col("text")))
-      .select(col("doc_id"), col("lang"),
-        array_distinct(
-          expr(s"transform(${charGramsSql("norm", 4)}, s -> ${h32Sql("s")})")).as("gr"))
-    containmentBitmapFrom(g)
+    containmentBitmapFrom(gramSets(spark, sfDir, containmentSpine))
   }
 
-  /** The bitmap comparator on a prebuilt (doc_id, lang, gr) gram table —
+  /** The bitmap comparator on a [[gramSets]] table (doc_id, lang, gr) —
     * shared by [[ngramContainmentPairs]] and the dense branch of
-    * [[ngramContainmentAuto]] (which reuses its probe's cached grams;
+    * [[ngramContainmentAuto]] (which reuses its probe's cached gram sets;
     * gram order within `gr` is irrelevant here — the bitmap OR is
     * order-independent). Both callers enforce the ≤ `allPairsBound`
     * tier contract before reaching the `broadcast(b)` below

@@ -53,28 +53,47 @@ class CodegenKernelSpec extends AnyFunSuite {
       s"$name: compiled codegen result $compiled != interpreted $expected")
   }
 
+  private def sArr(xs: String*): Literal =
+    Literal.create(xs, ArrayType(StringType, containsNull = false))
+
+  private val kernelCases: Seq[(String, Expression)] = Seq(
+    "char_entropy_q" -> CharEntropyQ(Literal("hello world entropy")),
+    "jl_project" -> JlProject(dArr(0.5, -1.25, 2.0, 3.5, -0.75, 1.0), 4),
+    "mat_project" -> MatProject(dArr(1.0, 2.0, 3.0), Seq(0.0, 0.0, 0.0), Seq(Seq(1.0, 0.0, 0.0))),
+    "simhash32" -> SimHash32(lArr(0x0f0f0f0fL, 0x12345678L, 0x0badf00dL)),
+    "winnow_fp" -> WinnowFingerprint(Literal("the quick brown fox jumps over the lazy dog")),
+    "cdc_chunks" -> CdcChunks(Literal(
+      "the quick brown fox jumps over the lazy dog and keeps on running past the fence")),
+    "cdc_chunks_short" -> CdcChunks(Literal("ab")),
+    "cdc_chunks_empty" -> CdcChunks(Literal("")),
+    "phash64" -> PHash64(Literal(
+      "pack my box with five dozen liquor jugs while the jay flew over the lazy dog")),
+    "phash64_short" -> PHash64(Literal("abc")),
+    "phash64_empty" -> PHash64(Literal("")),
+    "md5_h64" -> Md5Head64(Literal("the quick brown fox")),
+    "edit_within1_eq" -> EditWithin1(Literal("kitten"), Literal("kitten")),
+    "edit_within1_sub" -> EditWithin1(Literal("kitten"), Literal("mitten")),
+    "edit_within1_far" -> EditWithin1(Literal("kitten"), Literal("sitting")),
+    "cosine" -> CosineSimilarity(dArr(1.0, 2.0, 3.0), dArr(-1.0, 0.5, 2.0)),
+    "dot_product" -> DotProduct(dArr(1.0, 2.0, 3.0), dArr(-1.0, 0.5, 2.0, 9.0)),
+    "l2" -> L2Distance(dArr(1.0, 2.0, 3.0), dArr(0.0, 2.0, 5.0)),
+    "jaccard_sorted" -> JaccardSimilarity(lArr(1L, 3L, 5L, 9L), lArr(3L, 5L, 7L)),
+    "bitmap_and" -> BitmapAndCount(lArr(0xff00L, 0x0f0fL), lArr(0x0ff0L, 0xffffL)),
+    "intersect_sorted" -> IntersectCountSorted(lArr(1L, 2L, 8L), lArr(2L, 8L, 9L)),
+    "intersect_sorted_str" -> IntersectCountSortedStr(
+      sArr("apple", "kiwi", "pear", "é"), sArr("kiwi", "plum", "é")),
+    "z_value" -> ZValue(Seq(Literal(12L), Literal(45L), Literal(7L))))
+
   test("every native kernel compiles under codegen and matches interpreted eval") {
-    check("char_entropy_q", CharEntropyQ(Literal("hello world entropy")))
-    check("jl_project", JlProject(dArr(0.5, -1.25, 2.0, 3.5, -0.75, 1.0), 4))
-    check("simhash32", SimHash32(lArr(0x0f0f0f0fL, 0x12345678L, 0x0badf00dL)))
-    check("winnow_fp", WinnowFingerprint(Literal("the quick brown fox jumps over the lazy dog")))
-    check("cdc_chunks", CdcChunks(Literal(
-      "the quick brown fox jumps over the lazy dog and keeps on running past the fence")))
-    check("cdc_chunks_short", CdcChunks(Literal("ab")))
-    check("cdc_chunks_empty", CdcChunks(Literal("")))
-    check("phash64", PHash64(Literal(
-      "pack my box with five dozen liquor jugs while the jay flew over the lazy dog")))
-    check("phash64_short", PHash64(Literal("abc")))
-    check("phash64_empty", PHash64(Literal("")))
-    check("edit_within1_eq", EditWithin1(Literal("kitten"), Literal("kitten")))
-    check("edit_within1_sub", EditWithin1(Literal("kitten"), Literal("mitten")))
-    check("edit_within1_far", EditWithin1(Literal("kitten"), Literal("sitting")))
-    check("cosine", CosineSimilarity(dArr(1.0, 2.0, 3.0), dArr(-1.0, 0.5, 2.0)))
-    check("l2", L2Distance(dArr(1.0, 2.0, 3.0), dArr(0.0, 2.0, 5.0)))
-    check("jaccard_sorted", JaccardSimilarity(lArr(1L, 3L, 5L, 9L), lArr(3L, 5L, 7L)))
-    check("bitmap_and", BitmapAndCount(lArr(0xff00L, 0x0f0fL), lArr(0x0ff0L, 0xffffL)))
-    check("intersect_sorted", IntersectCountSorted(lArr(1L, 2L, 8L), lArr(2L, 8L, 9L)))
-    check("z_value", ZValue(Seq(Literal(12L), Literal(45L), Literal(7L))))
+    kernelCases.foreach { case (name, e) => check(name, e) }
+  }
+
+  test("every Kernels.All function has a compiled check") {
+    // bloom_might_contain is Spark's own BloomFilterMightContain
+    val checked: Set[Class[_]] = kernelCases.map(_._2.getClass).toSet
+    val missing = Kernels.All.filterNot(k =>
+      k.name == "bloom_might_contain" || checked(k.clazz)).map(_.name)
+    assert(missing.isEmpty, s"kernels without a compiled check: $missing")
   }
 
   test("null inputs stay null through the compiled path") {
@@ -90,9 +109,7 @@ class CodegenKernelSpec extends AnyFunSuite {
   test("mat_project rejects malformed embedding rows with a clear message (r14 ADVICE)") {
     val means = Seq(0.0, 0.0, 0.0)
     val mat = Seq(Seq(1.0, 0.0, 0.0))
-    // well-formed row projects
-    check("mat_project", MatProject(dArr(1.0, 2.0, 3.0), means, mat))
-    // short row: loud, named failure instead of undefined reads
+    // a well-formed row projects (kernelCases); a short row: loud, named failure instead of undefined reads
     val short = intercept[IllegalArgumentException](
       MatProject(dArr(1.0, 2.0), means, mat).eval(InternalRow.empty))
     assert(short.getMessage.contains("2 elements"))

@@ -362,8 +362,9 @@ class PlanSpec extends SparkSpec {
       case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
         scans(m.relation.cachedPlan)
     }.flatten
+    val qs = Seq("ngram_containment_banded", "ngram_jaccard_pairs", "ngram_containment_pairs")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try Seq("ngram_containment_banded", "ngram_jaccard_pairs").foreach { q =>
+    try qs.foreach { q =>
       CacheScope.release()
       spark.catalog.clearCache()
       val all = scans(SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan)

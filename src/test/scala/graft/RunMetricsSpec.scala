@@ -31,6 +31,22 @@ class RunMetricsSpec extends SparkSpec {
     }
   }
 
+  test("RunMetrics: every top stage of a broadcast join names its plan operation") {
+    // the broadcast side runs on an exchange thread, so its stage's call
+    // site names that pool's frame, not the plan
+    val small = spark.range(0, 100000, 1, 2)
+      .select((col("id") % 1000).as("k"), sha2(col("id").cast("string"), 256).as("h"))
+    val big = spark.range(0, 400000, 1, 4).select((col("id") % 1000).as("k"))
+    val m = RunMetrics.of(spark.sparkContext) {
+      big.join(broadcast(small), "k").write.format("noop").mode("overwrite").save()
+    }
+    val top = new ObjectMapper().readTree(s"{${m.json}}").get("top_stages")
+    assert(top.size >= 2, top)
+    (0 until top.size).foreach { i =>
+      assert(top.get(i).path("op").asText.nonEmpty, s"stage without op: $top")
+    }
+  }
+
   test("Bench record: run metrics of the median run and cold_s, add-only") {
     // a two-stage aggregate; Bench hands the query its corpus directory,
     // which this one does not read
@@ -49,7 +65,6 @@ class RunMetricsSpec extends SparkSpec {
     assert(rec.get("jobs").asLong == run.jobs && run.jobs >= 1 && run.tasks >= run.stages)
     val top = rec.get("top_stages")
     assert(top.isArray && top.size >= 1 && top.size <= 3, top)
-    assert(top.get(0).has("id") && top.get(0).has("name") &&
-      top.get(0).has("tasks") && top.get(0).has("run_ms"), top)
+    assert(Seq("id", "name", "op", "tasks", "run_ms").forall(top.get(0).has), top)
   }
 }

@@ -32,6 +32,9 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", s"/tmp/graft-warehouse-${System.nanoTime()}")
       .config("spark.ui.enabled", "false")
+      // a whole-stage compile error fails the test instead of running the
+      // stage interpreted while every assertion passes
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // streaming checkpoints as Graft.init sets them up
