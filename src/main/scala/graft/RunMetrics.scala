@@ -31,8 +31,9 @@ final class RunMetrics(val cores: Int) extends SparkListener {
     stages += 1
     // the call site names broadcast and subquery stages after the thread
     // pool that ran them; the operation scope of the stage's last RDD
-    // names the plan node
-    val op = e.stageInfo.rddInfos.maxByOption(_.id).flatMap(_.scope).fold("")(_.name)
+    // names the plan node, unless AQE's wrapper created that RDD
+    val op = e.stageInfo.rddInfos.sortBy(-_.id).flatMap(_.scope).map(_.name)
+      .find(_ != "AdaptiveSparkPlan").getOrElse("")
     stageNames(e.stageInfo.stageId) = (e.stageInfo.name.takeWhile(_ != '\n').take(60), op)
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{CacheScope, Tables}
@@ -32,20 +32,97 @@ object VectorOps {
   private def withVec(df: DataFrame): DataFrame =
     df.withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
 
-  /** Brute-force cosine top-5 neighbors for query vectors (vec_id < 10). */
-  def embKnn(spark: SparkSession, sfDir: String): DataFrame = {
+  /** (vec_id, v): the corpus in its double working form. */
+  private def vectors(spark: SparkSession, sfDir: String): DataFrame =
+    withVec(Tables.embeddings(spark, sfDir)).select(col("vec_id"), col("v"))
+
+  // ── the ANN stages every search below is assembled from ──
+
+  /** The query set of every search: the rows with vec_id < 10, keyed
+    * `q_id`, carrying `cols` (the vector, projection, sign bits or
+    * sub-vectors the search scores them by). */
+  private def queriesOf(df: DataFrame, cols: Column*): DataFrame =
+    df.filter(col("vec_id") < 10).select(col("vec_id").as("q_id") +: cols: _*)
+
+  /** (q_id, qv): the query vectors of the corpus `e` (vec_id, v). */
+  private def queries(e: DataFrame): DataFrame = queriesOf(e, col("v").as("qv"))
+
+  /** The first `k` rows of each `partitionCol` group in `orderCols` order,
+    * numbered from 1 in `rankName`: every top-k, nearest-pivot and
+    * candidate cut. A row number is never below 1, so a one-row cut is
+    * spelled `= 1`. */
+  private def rankWithin(partitionCol: String, orderCols: Seq[Column], k: Int,
+                         rankName: String)(df: DataFrame): DataFrame =
+    df.withColumn(rankName, row_number().over(
+        Window.partitionBy(col(partitionCol)).orderBy(orderCols: _*)))
+      .filter(if (k == 1) col(rankName) === 1 else col(rankName) <= k)
+
+  /** Every corpus row `n_id` scored into column `name` against the
+    * broadcast query set, each query's own row excluded. */
+  private def scoreAll(corpus: DataFrame, q: DataFrame, name: String,
+                       score: String): DataFrame =
+    corpus.join(broadcast(q), col("q_id") =!= col("n_id"))
+      .withColumn(name, expr(score))
+
+  /** (q_id, n_id): the `cand` best candidates of each query in `order`,
+    * ties to the lower n_id. */
+  private def shortlist(scored: DataFrame, order: Column, cand: Int,
+                        rankName: String): DataFrame =
+    scored.transform(rankWithin("q_id", Seq(order, col("n_id").asc), cand, rankName))
+      .select(col("q_id"), col("n_id"))
+
+  /** The final top-k of a search: (q_id, rank, n_id, `score` rounded to
+    * 6 decimals), the best `k` per query by descending `score`. */
+  private def topK(scored: DataFrame, score: String, k: Int): DataFrame =
+    scored.transform(rankWithin("q_id", Seq(col(score).desc, col("n_id").asc), k, "rank"))
+      .select(col("q_id"), col("rank"), col("n_id"), round(col(score), 6).as(score))
+
+  /** The exact re-rank that ends every compressed search: fetch the full
+    * vectors of the (q_id, n_id) candidates only (an id equijoin against
+    * `e`), score them by exact cosine against the queries `q` (q_id, qv)
+    * and keep the top `k`. */
+  private def rerankExact(cands: DataFrame, e: DataFrame, q: DataFrame,
+                          k: Int): DataFrame =
+    topK(cands.join(e.select(col("vec_id").as("n_id"), col("v").as("cv")), Seq("n_id"))
+      .join(broadcast(q), Seq("q_id"))
+      .withColumn("cos", expr("cosine_sim(qv, cv)")), "cos", k)
+
+  /** (vec_id, v, cell): every vector of `e` in the cell of its
+    * nearest pivot (p_id, pv) by cosine, ties to the lower p_id. */
+  private def assignCells(e: DataFrame, piv: DataFrame): DataFrame =
+    e.join(broadcast(piv), lit(true))
+      .withColumn("pcos", expr("cosine_sim(v, pv)"))
+      .transform(rankWithin("vec_id", Seq(col("pcos").desc, col("p_id").asc), 1, "rn"))
+      .select(col("vec_id"), col("v"), col("p_id").as("cell"))
+
+  /** (q_id, qv, cell): each query's `nprobe` nearest cells. */
+  private def probeCells(q: DataFrame, piv: DataFrame, nprobe: Int): DataFrame =
+    q.join(broadcast(piv), lit(true))
+      .withColumn("pcos", expr("cosine_sim(qv, pv)"))
+      .transform(rankWithin("q_id", Seq(col("pcos").desc, col("p_id").asc), nprobe, "rn"))
+      .select(col("q_id"), col("qv"), col("p_id").as("cell"))
+
+  /** Recall@5 of an approximate top-5 against brute force ([[embKnn]]):
+    * per query, the share of the exact neighbors that `approx` returns. */
+  private def recallAt5(spark: SparkSession, sfDir: String,
+                        approx: DataFrame): DataFrame =
+    embKnn(spark, sfDir).select(col("q_id"), col("n_id"))
+      .join(approx.select(col("q_id"), col("n_id"), lit(1L).as("hit")),
+        Seq("q_id", "n_id"), "left")
+      .groupBy(col("q_id"))
+      .agg(round(sum(coalesce(col("hit"), lit(0L))) / 5.0, 4).as("recall_at_5"))
+
+  /** The exact scan: every corpus vector `cv` scored into `name` against
+    * every query `qv`. */
+  private def exactScan(spark: SparkSession, sfDir: String, name: String,
+                        score: String): DataFrame = {
     val e = withVec(Tables.embeddings(spark, sfDir))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val c = e.select(col("vec_id").as("n_id"), col("v").as("cv"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("cos"), 6).as("cos"))
+    scoreAll(e.select(col("vec_id").as("n_id"), col("v").as("cv")), queries(e), name, score)
   }
+
+  /** Brute-force cosine top-5 neighbors for query vectors (vec_id < 10). */
+  def embKnn(spark: SparkSession, sfDir: String): DataFrame =
+    topK(exactScan(spark, sfDir, "cos", "cosine_sim(qv, cv)"), "cos", 5)
 
   val embKnnSql: String =
     s"""WITH s AS (
@@ -91,15 +168,19 @@ object VectorOps {
       .withColumn("bucket",
         if (planes == 0) lit(0L) else expr(bucketSql(planes)))
       .transform(CacheScope.barrier) // 384 digests/row computed once, not per join side
-    val a = e.select(col("vec_id").as("a_id"), col("v").as("av"), col("bucket"))
-    val b = e.select(col("vec_id").as("b_id"), col("v").as("bv"), col("bucket"))
-    a.join(b, Seq("bucket"))
+    bucketPairs(e.select(col("vec_id").as("a_id"), col("v").as("av"), col("bucket")), e)
+  }
+
+  /** The LSH join tail: probe rows `a` (a_id, av, bucket) against the
+    * bucketed corpus `e`, distinct pairs a_id < b_id verified by exact
+    * cosine ≥ 0.3. */
+  private def bucketPairs(a: DataFrame, e: DataFrame): DataFrame =
+    a.join(e.select(col("vec_id").as("b_id"), col("v").as("bv"), col("bucket")), Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("cos", expr("cosine_sim(av, bv)"))
       .filter(col("cos") >= 0.3)
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
       .distinct()
-  }
 
   val embNeardupLshSql: String =
     s"""WITH n AS (
@@ -180,15 +261,8 @@ object VectorOps {
       .transform(CacheScope.barrier) // sign-bit projections computed once
     val probeArr = (Seq("bucket") ++
       (0 until planes).map(p => s"bucket ^ ${1L << p}L")).mkString("array(", ", ", ")")
-    val a = e.select(col("vec_id").as("a_id"), col("v").as("av"),
-      explode(expr(probeArr)).as("bucket"))
-    val b = e.select(col("vec_id").as("b_id"), col("v").as("bv"), col("bucket"))
-    a.join(b, Seq("bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cos", expr("cosine_sim(av, bv)"))
-      .filter(col("cos") >= 0.3)
-      .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
-      .distinct()
+    bucketPairs(e.select(col("vec_id").as("a_id"), col("v").as("av"),
+      explode(expr(probeArr)).as("bucket")), e)
   }
 
   val embNeardupMultiprobeSql: String =
@@ -214,36 +288,21 @@ object VectorOps {
     * degenerates to exact brute force (asserted in AccuracySpec).
     */
   def embIvfKnn(spark: SparkSession, sfDir: String, cells: Int, nprobe: Int): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
-    val piv = e.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("p_id"), col("v").as("pv"))
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val cellAssign = e.join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(v, pv)"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("p_id").as("cell"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(qv, pv)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("qv"), col("p_id").as("cell"))
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    probes.join(cellAssign, Seq("cell"))
+    val e = vectors(spark, sfDir).transform(CacheScope.barrier)
+    ivfSearch(e, e.filter(col("vec_id") < cells)
+      .select(col("vec_id").as("p_id"), col("v").as("pv")), nprobe)
+  }
+
+  /** The IVF search of [[embIvfKnn]] and [[embIvfTrained]] over the
+    * pivots `piv` (p_id, pv): each query scores, by exact cosine, only
+    * the vectors of its `nprobe` nearest cells, and keeps the top 5. */
+  private def ivfSearch(e: DataFrame, piv: DataFrame, nprobe: Int): DataFrame =
+    probeCells(queries(e), piv, nprobe).join(assignCells(e, piv), Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("cos", expr("cosine_sim(qv, v)"))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 5)
+      .transform(rankWithin("q_id", Seq(col("cos").desc, col("vec_id").asc), 5, "rank"))
       .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
         round(col("cos"), 6).as("cos"))
-  }
 
   val embIvfKnnSql: String =
     s"""WITH n AS (
@@ -382,29 +441,13 @@ object VectorOps {
     */
   def embRpKnn(spark: SparkSession, sfDir: String,
                rpDims: Int = 32, cand: Int = 100, topK: Int = 5): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v"))
+    val e = vectors(spark, sfDir)
       .transform(CacheScope.barrier) // projection pass, queries, re-rank fetch
     val pr = e.select(col("vec_id"), expr(rpProjSql(rpDims)).as("proj"))
-    val qp = pr.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("proj").as("qproj"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("acos").desc, col("n_id").asc)
-    val cands = pr.select(col("vec_id").as("n_id"), col("proj"))
-      .join(broadcast(qp), col("q_id") =!= col("n_id"))
-      .withColumn("acos", expr("cosine_sim(qproj, proj)"))
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= cand)
-      .select(col("q_id"), col("n_id"))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    cands
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("cv")), Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("cos"), 6).as("cos"))
+    val cands = shortlist(scoreAll(pr.select(col("vec_id").as("n_id"), col("proj")),
+      queriesOf(pr, col("proj").as("qproj")), "acos", "cosine_sim(qproj, proj)"),
+      col("acos").desc, cand, "arank")
+    rerankExact(cands, e, queries(e), topK)
   }
 
   /** Shared CTE chain of the [[embRpKnn]] DuckDB twin (also reused by
@@ -454,14 +497,8 @@ object VectorOps {
     * projected-space candidates (default 100 — JL distortion); widening
     * `cand` or `rpDims` raises it.
     */
-  def embRpRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact = embKnn(spark, sfDir).select(col("q_id"), col("n_id"))
-    val rp = embRpKnn(spark, sfDir)
-      .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    exact.join(rp, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(round(sum(coalesce(col("hit"), lit(0L))) / 5.0, 4).as("recall_at_5"))
-  }
+  def embRpRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallAt5(spark, sfDir, embRpKnn(spark, sfDir))
 
   val embRpRecallSql: String =
     s"""WITH $embRpKnnCtes,
@@ -525,9 +562,12 @@ object VectorOps {
     (cent, assign)
   }
 
+  /** (p_id, pv): `cells` Lloyd-trained centroids over `e`, as IVF pivots. */
+  private def trainedPivots(e: DataFrame, cells: Int, iters: Int): DataFrame =
+    lloyd(e, cells, iters)._1.select(col("c_id").as("p_id"), col("cv").as("pv"))
+
   def embKmeans(spark: SparkSession, sfDir: String, k: Int, iters: Int): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
+    val e = vectors(spark, sfDir).transform(CacheScope.barrier)
     val (cent, assign) = lloyd(e, k, iters)
     val counts = assign.groupBy(col("c_id")).agg(count(lit(1)).as("n_members"))
     cent.join(counts, Seq("c_id"))
@@ -591,36 +631,10 @@ object VectorOps {
 
   def embIvfTrained(spark: SparkSession, sfDir: String,
                     cells: Int, iters: Int, nprobe: Int): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
-    val piv = lloyd(e, cells, iters)._1
-      .select(col("c_id").as("p_id"), col("cv").as("pv"))
+    val e = vectors(spark, sfDir).transform(CacheScope.barrier)
+    val piv = trainedPivots(e, cells, iters)
       .transform(CacheScope.barrier) // k rows; so the two broadcasts don't re-train
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val cellAssign = e.join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(v, pv)"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("p_id").as("cell"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(qv, pv)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("qv"), col("p_id").as("cell"))
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    probes.join(cellAssign, Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("cos", expr("cosine_sim(qv, v)"))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("vec_id").as("n_id"),
-        round(col("cos"), 6).as("cos"))
+    ivfSearch(e, piv, nprobe)
   }
 
   /** Mean-centering, the standard ANN preprocessing step (centered
@@ -633,8 +647,7 @@ object VectorOps {
     * the executors, like `embQuantize`.
     */
   def embCenter(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v"))
+    val e = vectors(spark, sfDir)
     val mean = e.select(posexplode(col("v")))
       .groupBy((col("pos") + 1).as("i"))
       .agg(round(avg(col("col")), 6).as("m"))
@@ -677,21 +690,12 @@ object VectorOps {
 
   def embSemdedup(spark: SparkSession, sfDir: String,
                   cells: Int, iters: Int, thr: Double): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
-    val piv = lloyd(e, cells, iters)._1
-      .select(col("c_id").as("p_id"), col("cv").as("pv"))
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val cellAssign = e.join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(v, pv)"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("p_id").as("cell"))
+    val e = vectors(spark, sfDir).transform(CacheScope.barrier)
+    val cellAssign = assignCells(e, trainedPivots(e, cells, iters))
       .transform(CacheScope.barrier) // cells assigned once, joined twice
-    val a = cellAssign.select(col("cell"), col("vec_id").as("keep_id"), col("v").as("av"))
-    val b = cellAssign.select(col("cell"), col("vec_id").as("drop_id"), col("v").as("bv"))
-    a.join(b, Seq("cell"))
+    cellAssign.select(col("cell"), col("vec_id").as("keep_id"), col("v").as("av"))
+      .join(cellAssign.select(col("cell"), col("vec_id").as("drop_id"), col("v").as("bv")),
+        Seq("cell"))
       .filter(col("keep_id") < col("drop_id"))
       .withColumn("cos", expr("cosine_sim(av, bv)"))
       .filter(col("cos") >= thr)
@@ -798,6 +802,35 @@ object VectorOps {
     cent
   }
 
+  /** The trained PQ structures over `e` (vec_id, v): the working form
+    * `sub`, the codebooks `cent` (s, c_id, cv) and the encoded corpus
+    * `codes` (vec_id, s, code). */
+  private final case class Pq(sub: DataFrame, cent: DataFrame, codes: DataFrame) {
+    /** (q_id, s, code, pd): each query's partial L2 distance to every
+      * codeword, the table an ADC scan broadcasts. */
+    def lut: DataFrame =
+      queriesOf(sub, col("s"), col("sv").as("qsv"))
+        .join(broadcast(cent), Seq("s"))
+        .select(col("q_id"), col("s"), col("c_id").as("code"),
+          expr(l2Sql("qsv", "cv")).as("pd"))
+  }
+
+  private def pqFit(e: DataFrame, m: Int, k: Int, iters: Int): Pq = {
+    val sub = pqSub(e, m)
+      .transform(CacheScope.barrier) // consumed per iteration + encode + queries
+    val cent = pqTrain(sub, k, iters)
+      .transform(CacheScope.barrier) // the encode pass and the LUT (or index write) read it
+    Pq(sub, cent, pqAssignTo(sub, cent).select(col("vec_id"), col("s"), col("c_id").as("code")))
+  }
+
+  /** Asymmetric distance of each (q_id, vec_id → n_id) pair: its summed
+    * partials `pd` are exact micro² integers (no round() anywhere), and
+    * the single /1e12 rescale to embedding units is one correctly-rounded
+    * IEEE division, identical in both engines. */
+  private def adc(scored: DataFrame): DataFrame =
+    scored.groupBy(col("q_id"), col("vec_id").as("n_id"))
+      .agg((sum(col("pd")) / lit(1e12)).as("adist"))
+
   /** DuckDB twin of the PQ chain: emits CTEs `{p}sub, {p}c0, {p}a1,
     * {p}c1, …, {p}codes, {p}lut` reading the surrounding query's `n`
     * CTE (vec_id, v). The prefix keeps the chain composable next to
@@ -870,33 +903,15 @@ object VectorOps {
 
   def embPq(spark: SparkSession, sfDir: String,
             m: Int, k: Int, iters: Int, topK: Int): DataFrame =
-    embPqOf(withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v")), m, k, iters, topK)
+    embPqOf(vectors(spark, sfDir), m, k, iters, topK)
 
   /** Core over any (vec_id, v: array<double>) frame. */
   def embPqOf(e: DataFrame, m: Int, k: Int, iters: Int, topK: Int): DataFrame = {
     graft.functions.Kernels.register(e.sparkSession)
-    val sub = pqSub(e, m)
-      .transform(CacheScope.barrier) // consumed per iteration + encode + queries
-    val cent = pqTrain(sub, k, iters)
-      .transform(CacheScope.barrier) // encode + LUT both read it
-    val codes = pqAssignTo(sub, cent).select(col("vec_id"), col("s"), col("c_id").as("code"))
-    // pd and its sum are exact micro² integers (no round() anywhere);
-    // the single /1e12 rescale to embedding units is one correctly-
-    // rounded IEEE division, identical in both engines
-    val lut = sub.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("s"), col("sv").as("qsv"))
-      .join(broadcast(cent), Seq("s"))
-      .select(col("q_id"), col("s"), col("c_id").as("code"),
-        expr(l2Sql("qsv", "cv")).as("pd"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adist").asc, col("n_id").asc)
-    codes.join(broadcast(lut), Seq("s", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg((sum(col("pd")) / lit(1e12)).as("adist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    val pq = pqFit(e, m, k, iters)
+    adc(pq.codes.join(broadcast(pq.lut), Seq("s", "code"))
+        .filter(col("vec_id") =!= col("q_id")))
+      .transform(rankWithin("q_id", Seq(col("adist").asc, col("n_id").asc), topK, "rank"))
       .select(col("q_id"), col("rank"), col("n_id"), col("adist"))
   }
 
@@ -944,72 +959,58 @@ object VectorOps {
     * the structure rebuild-free under corpus growth.
     */
   def embIvfPq(spark: SparkSession, sfDir: String): DataFrame =
-    embIvfPq(spark, sfDir, cells = 16, m = 16, k = 64, iters = 2,
-      nprobe = 2, cand = 30, topK = 5)
+    ivfPqSearch(spark, sfDir, Ivf)
 
   def embIvfPq(spark: SparkSession, sfDir: String, cells: Int, m: Int,
-               k: Int, iters: Int, nprobe: Int, cand: Int, topK: Int): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
-    val piv = lloyd(e, cells, iters)._1
-      .select(col("c_id").as("p_id"), col("cv").as("pv"))
-      .transform(CacheScope.barrier) // cell assign + probes both broadcast it
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val cellAssign = e.join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(v, pv)"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("p_id").as("cell"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val probes = q.join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(qv, pv)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("p_id").as("cell"))
-    val sub = pqSub(e, m).transform(CacheScope.barrier)
-    val cent = pqTrain(sub, k, iters).transform(CacheScope.barrier)
-    val codes = pqAssignTo(sub, cent)
-      .select(col("vec_id"), col("s"), col("c_id").as("code"))
-    val lut = sub.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("s"), col("sv").as("qsv"))
-      .join(broadcast(cent), Seq("s"))
-      .select(col("q_id"), col("s"), col("c_id").as("code"),
-        expr(l2Sql("qsv", "cv")).as("pd"))
+               k: Int, iters: Int, nprobe: Int, cand: Int, topK: Int): DataFrame =
+    ivfPqSearch(spark, sfDir, IvfGeometry(cells, m, k, iters, nprobe, cand, topK))
+
+  /** An IVF-PQ index geometry: `cells` coarse cells trained in `iters`
+    * Lloyd rounds, `m` PQ subspaces of `k` codewords, `nprobe` probed
+    * cells, `cand` ADC candidates re-ranked to the final `topK`. */
+  private final case class IvfGeometry(cells: Int, m: Int, k: Int, iters: Int,
+                                       nprobe: Int, cand: Int, topK: Int)
+
+  /** The one IVF-PQ geometry: [[embIvfPq]]'s default, the persisted index
+    * [[buildIvfIndex]] writes and [[embIvfQuery]] reads, and their twins. */
+  private val Ivf = IvfGeometry(cells = 16, m = 16, k = 64, iters = 2,
+    nprobe = 2, cand = 30, topK = 5)
+
+  /** The trained IVF-PQ structures over `e` (vec_id, v): the coarse
+    * pivots `piv` (p_id, pv), every vector's cell (vec_id, cell) and the
+    * PQ codebooks and codes. */
+  private final case class IvfPqModel(piv: DataFrame, cells: DataFrame, pq: Pq)
+
+  private def ivfPqModel(e: DataFrame, g: IvfGeometry): IvfPqModel = {
+    val piv = trainedPivots(e, g.cells, g.iters)
+      .transform(CacheScope.barrier) // cell assign + probes (or the index write) read it
+    IvfPqModel(piv, assignCells(e, piv).select(col("vec_id"), col("cell")),
+      pqFit(e, g.m, g.k, g.iters))
+  }
+
+  private def ivfPqSearch(spark: SparkSession, sfDir: String, g: IvfGeometry): DataFrame = {
+    val e = vectors(spark, sfDir).transform(CacheScope.barrier)
+    val model = ivfPqModel(e, g)
+    val q = queries(e)
+    val probes = probeCells(q, model.piv, g.nprobe).select(col("q_id"), col("cell"))
     // a vector lives in exactly one cell and a query probes nprobe
     // distinct cells, so the broadcast join yields each (q, n) at most
     // once — only probed cells' codes ever ride the ADC exchange
-    val pairs = cellAssign.join(broadcast(probes), Seq("cell"))
+    val pairs = model.cells.join(broadcast(probes), Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"))
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("adist").asc, col("n_id").asc)
-    val cands = pairs.join(codes, Seq("vec_id"))
-      .join(broadcast(lut), Seq("q_id", "s", "code"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg((sum(col("pd")) / lit(1e12)).as("adist"))
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= cand)
-      .select(col("q_id"), col("n_id"))
-    val wE = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    cands.join(e.select(col("vec_id").as("n_id"), col("v").as("cv")), Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("cos"), 6).as("cos"))
+    val cands = shortlist(adc(pairs.join(model.pq.codes, Seq("vec_id"))
+      .join(broadcast(model.pq.lut), Seq("q_id", "s", "code"))),
+      col("adist").asc, g.cand, "arank")
+    rerankExact(cands, e, q, g.topK)
   }
 
-  /** DuckDB twin of [[embIvfPq]] (cells=16, m=16, k=64, nprobe=2,
-    * cand=30, top-5) — the [[ivfCellProbeCtes]] coarse chain and the
-    * `p`-prefixed [[pqCtesDuck]] chain composed in one WITH. */
+  /** DuckDB twin of [[embIvfPq]] at the [[Ivf]] geometry — the
+    * [[ivfCellProbeCtes]] coarse chain and the `p`-prefixed
+    * [[pqCtesDuck]] chain composed in one WITH. */
   val embIvfPqSql: String =
     s"""WITH $ivfCellProbeCtes,
-       |${pqCtesDuck("p", m = 16, k = 64, iters = 2)},
+       |${pqCtesDuck("p", m = Ivf.m, k = Ivf.k, iters = Ivf.iters)},
        |cpairs AS (
        |  SELECT p.q_id, c.vec_id AS n_id
        |  FROM probes p JOIN cells c ON p.cell = c.cell AND p.q_id <> c.vec_id),
@@ -1024,7 +1025,7 @@ object VectorOps {
        |    SELECT q_id, n_id,
        |      row_number() OVER (PARTITION BY q_id ORDER BY adist ASC, n_id ASC) AS arank
        |    FROM adc)
-       |  WHERE arank <= 30)
+       |  WHERE arank <= ${Ivf.cand})
        |SELECT q_id, rank, n_id, round(cos, 6) AS cos FROM (
        |  SELECT cq.q_id, cq.n_id,
        |    list_sum(list_transform(range(1, ${dims + 1}), i -> q.v[i] * c.v[i]))
@@ -1035,9 +1036,12 @@ object VectorOps {
        |  FROM candq cq
        |  JOIN n q ON q.vec_id = cq.q_id
        |  JOIN n c ON c.vec_id = cq.n_id)
-       |WHERE rank <= 5""".stripMargin
+       |WHERE rank <= ${Ivf.topK}""".stripMargin
 
-  private val IvfParams = "cells=16|m=16|k=64|iters=2"
+  /** The index-directory and manifest tag of the [[Ivf]] geometry: the
+    * trained structures' parameters only, so a probe-side change keeps
+    * existing index directories valid. */
+  private val IvfParams = s"cells=${Ivf.cells}|m=${Ivf.m}|k=${Ivf.k}|iters=${Ivf.iters}"
 
   /** Content fingerprint of the embeddings corpus WITHOUT reading data:
     * name + length + modification time of every file under
@@ -1118,17 +1122,17 @@ object VectorOps {
       fail("corpus fingerprint mismatch — the corpus changed under the index")
     // r14: the two row-count probes are independent reads — issue them
     // concurrently (§2.6); same checks, one scheduling wave
-    val counts = inParallel(
-      () => spark.read.parquet(s"$dir/centroids.parquet").count(),
-      () => spark.read.parquet(s"$dir/codebooks.parquet").count())
-    val (nCentroids, nCodebooks) = (counts(0), counts(1))
-    if (nCentroids != num("rows_centroids"))
-      fail(s"centroids.parquet has $nCentroids rows, manifest says " +
-        s"${num("rows_centroids")}")
-    if (nCodebooks != num("rows_codebooks"))
-      fail(s"codebooks.parquet has $nCodebooks rows, manifest says " +
-        s"${num("rows_codebooks")}")
+    val names = Seq("centroids", "codebooks")
+    rowCounts(spark, dir, names: _*).zip(names).foreach { case (n, name) =>
+      if (n != num(s"rows_$name"))
+        fail(s"$name.parquet has $n rows, manifest says ${num(s"rows_$name")}")
+    }
   }
+
+  /** Row counts of the parquet artifacts `names` under `dir`, read
+    * concurrently. */
+  private def rowCounts(spark: SparkSession, dir: String, names: String*): Seq[Long] =
+    inParallel(names.map(n => () => spark.read.parquet(s"$dir/$n.parquet").count()): _*)
 
   /** Index-BUILD pass of the persisted IVF-PQ index (round-9 verdict #4:
     * real users build once and query many — the fused `emb_ivf_pq` row
@@ -1184,27 +1188,12 @@ object VectorOps {
 
   private def buildIvfIndex(spark: SparkSession, sfDir: String, dir: String,
                             overwrite: Boolean = false): Unit = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
+    val e = vectors(spark, sfDir).transform(CacheScope.barrier)
     // materialize the shared projection ONCE up front — the count is
     // needed for the manifest anyway, and a warm cache keeps the two
     // concurrent training chains below from racing the same scan
     val nVectors = e.count()
-    val piv = lloyd(e, 16, 2)._1
-      .select(col("c_id").as("p_id"), col("cv").as("pv"))
-      .transform(CacheScope.barrier)
-    val wCell = Window.partitionBy(col("vec_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val cellAssign = e.join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(v, pv)"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("p_id").as("cell"))
-    val sub = pqSub(e, 16).transform(CacheScope.barrier)
-    val cent = pqTrain(sub, 64, 2)
-      .transform(CacheScope.barrier) // written AND read by the encode pass
-    val codes = pqAssignTo(sub, cent)
-      .select(col("vec_id"), col("s"), col("c_id").as("code"))
+    val model = ivfPqModel(e, Ivf)
     // Build into a temp sibling and RENAME into place (round-11; r10
     // ADVICE): a reader can never observe a half-written index, and two
     // processes racing the same miss resolve by whoever renames first.
@@ -1223,18 +1212,18 @@ object VectorOps {
     inParallel(
       () => {
         spark.sparkContext.setJobDescription("ivf build: coarse centroids")
-        piv.write.mode("overwrite").parquet(s"$tmp/centroids.parquet")
+        model.piv.write.mode("overwrite").parquet(s"$tmp/centroids.parquet")
       },
       () => {
         spark.sparkContext.setJobDescription("ivf build: pq codebooks")
-        cent.select(col("s"), col("c_id"), col("cv"))
+        model.pq.cent.select(col("s"), col("c_id"), col("cv"))
           .write.mode("overwrite").parquet(s"$tmp/codebooks.parquet")
       })
     spark.sparkContext.setJobDescription("ivf build: encode + write codes")
     // one file per inverted list (cells are the unit a probe reads);
     // codes.parquet is written LAST among the parquet artifacts — its
     // _SUCCESS stays the completion marker [[ivfIndexExists]] checks
-    codes.join(cellAssign, Seq("vec_id"))
+    model.pq.codes.join(model.cells, Seq("vec_id"))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$tmp/codes.parquet")
@@ -1242,20 +1231,16 @@ object VectorOps {
     // manifest written from READ-BACKS of the temp artifacts (proving
     // each is loadable — the same checks as before, now issued
     // concurrently, §2.6), then the atomic publish
-    val rows = inParallel(
-      () => spark.read.parquet(s"$tmp/centroids.parquet").count(),
-      () => spark.read.parquet(s"$tmp/codebooks.parquet").count(),
-      () => spark.read.parquet(s"$tmp/codes.parquet").count())
-    val (rowsCentroids, rowsCodebooks, rowsCodes) = (rows(0), rows(1), rows(2))
+    val rows = rowCounts(spark, tmp.toString, "centroids", "codebooks", "codes")
     spark.sparkContext.setJobDescription(null)
     val manifest =
       s"""{"params": "$IvfParams",
          | "corpus": "$sfDir",
          | "corpus_fingerprint": "${corpusFingerprint(spark, sfDir)}",
          | "n_vectors": $nVectors,
-         | "rows_centroids": $rowsCentroids,
-         | "rows_codebooks": $rowsCodebooks,
-         | "rows_codes": $rowsCodes}""".stripMargin
+         | "rows_centroids": ${rows(0)},
+         | "rows_codebooks": ${rows(1)},
+         | "rows_codes": ${rows(2)}}""".stripMargin
     val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/manifest.json"), true)
     try out.write(manifest.getBytes("UTF-8")) finally out.close()
     fs.mkdirs(dst.getParent)
@@ -1291,45 +1276,26 @@ object VectorOps {
     verifyIvfManifest(spark, sfDir, dir)
     val piv = spark.read.parquet(s"$dir/centroids.parquet")
     val cent = spark.read.parquet(s"$dir/codebooks.parquet")
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val e = vectors(spark, sfDir)
+    val q = queries(e)
       .transform(CacheScope.barrier) // probes, LUT, and re-rank all reuse
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcos").desc, col("p_id").asc)
-    val probes = q.join(broadcast(piv), lit(true))
-      .withColumn("pcos", expr("cosine_sim(qv, pv)"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= 2)
-      .select(col("q_id"), col("p_id").as("cell"))
+    val probes = probeCells(q, piv, Ivf.nprobe).select(col("q_id"), col("cell"))
       .transform(CacheScope.barrier) // partition filter + ADC join share it
     val probedCells = probes.select(col("cell").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted.toIndexedSeq
     val codes = spark.read.parquet(s"$dir/codes.parquet")
       .filter(col("cell").isin(probedCells: _*))
-    val lut = pqSub(q.select(col("q_id").as("vec_id"), col("qv").as("v")), 16)
+    // Pq.lut's table, from the queries' own sub-vectors and the read-back
+    // codebooks: the query pass never loads the corpus sub-vectors
+    val lut = pqSub(q.select(col("q_id").as("vec_id"), col("qv").as("v")), Ivf.m)
       .join(broadcast(cent), Seq("s"))
       .select(col("vec_id").as("q_id"), col("s"), col("c_id").as("code"),
         expr(l2Sql("sv", "cv")).as("pd"))
-    val wA = Window.partitionBy(col("q_id"))
-      .orderBy(col("adist").asc, col("n_id").asc)
-    val cands = codes.join(broadcast(probes), Seq("cell"))
+    val cands = shortlist(adc(codes.join(broadcast(probes), Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
-      .join(broadcast(lut), Seq("q_id", "s", "code"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg((sum(col("pd")) / lit(1e12)).as("adist"))
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= 30)
-      .select(col("q_id"), col("n_id"))
-    val wE = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    cands.join(e.select(col("vec_id").as("n_id"), col("v").as("cv")), Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("cos"), 6).as("cos"))
+      .join(broadcast(lut), Seq("q_id", "s", "code"))),
+      col("adist").asc, Ivf.cand, "arank")
+    rerankExact(cands, e, q, Ivf.topK)
   }
 
   /** DuckDB twin of [[embIvfBuild]]'s returned stats: the same
@@ -1337,7 +1303,7 @@ object VectorOps {
     * vector counts and code checksums. */
   val embIvfBuildSql: String =
     s"""WITH $ivfCellProbeCtes,
-       |${pqCtesDuck("p", m = 16, k = 64, iters = 2)}
+       |${pqCtesDuck("p", m = Ivf.m, k = Ivf.k, iters = Ivf.iters)}
        |SELECT c.cell, count(DISTINCT co.vec_id) AS n_vectors,
        |  CAST(sum(co.code) AS BIGINT) AS code_sum
        |FROM pcodes co JOIN cells c ON co.vec_id = c.vec_id
@@ -1370,14 +1336,9 @@ object VectorOps {
     embSq8Knn(spark, sfDir, cand = 20, topK = 5)
 
   def embSq8Knn(spark: SparkSession, sfDir: String, cand: Int, topK: Int): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v"))
+    val e = vectors(spark, sfDir)
       .transform(CacheScope.barrier) // stats pass, code pass, queries, re-rank fetch
-    val stats = e.select(posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("pos")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-      .groupBy().agg(
-        expr("transform(sort_array(collect_list(struct(pos, mn))), z -> z.mn)").as("mns"),
-        expr("transform(sort_array(collect_list(struct(pos, mx))), z -> z.mx)").as("mxs"))
+    val stats = dimRange(e)
     val codes = e.crossJoin(broadcast(stats))
       .select(col("vec_id").as("n_id"),
         expr(s"""transform(sequence(1, $dims), i ->
@@ -1386,28 +1347,24 @@ object VectorOps {
                 |       CAST(floor((element_at(v, i) - element_at(mns, i)) /
                 |         (element_at(mxs, i) - element_at(mns, i)) * 256) AS BIGINT))))""".stripMargin)
           .as("code"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wA = Window.partitionBy(col("q_id")).orderBy(col("acos").desc, col("n_id").asc)
-    val cands = codes.crossJoin(broadcast(stats))
+    val q = queries(e)
+    val dec = codes.crossJoin(broadcast(stats))
       .withColumn("dec",
         expr(s"""transform(sequence(1, $dims), i ->
                 |  element_at(mns, i) + (element_at(code, i) + 0.5D) *
                 |    (element_at(mxs, i) - element_at(mns, i)) / 256)""".stripMargin))
-      .join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("acos", expr("cosine_sim(qv, dec)"))
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= cand)
-      .select(col("q_id"), col("n_id"))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    cands
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("cv")), Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("cos"), 6).as("cos"))
+    rerankExact(shortlist(scoreAll(dec, q, "acos", "cosine_sim(qv, dec)"),
+      col("acos").desc, cand, "arank"), e, q, topK)
   }
+
+  /** One row (mns, mxs): the per-dimension corpus minima and maxima, the
+    * fold-order-free range SQ8 and BQ quantize against. */
+  private def dimRange(e: DataFrame): DataFrame =
+    e.select(posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(col("pos")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+      .groupBy().agg(
+        expr("transform(sort_array(collect_list(struct(pos, mn))), z -> z.mn)").as("mns"),
+        expr("transform(sort_array(collect_list(struct(pos, mx))), z -> z.mx)").as("mxs"))
 
   /** DuckDB twin of [[embSq8Knn]] (cand=20, top-5). */
   val embSq8KnnSql: String =
@@ -1485,40 +1442,19 @@ object VectorOps {
     // one LONG holds exactly 64 sign bits; >64 dims needs an array<bigint>
     // packing (and the DuckDB twin's sign-bit branch assumes bit 63 = i 64)
     require(dims <= 64, s"BQ packs sign bits into one BIGINT; dims=$dims > 64")
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v"))
+    val e = vectors(spark, sfDir)
       .transform(CacheScope.barrier) // stats pass, bit pass, queries, re-rank fetch
-    val stats = e.select(posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("pos")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-      .groupBy().agg(
-        expr("transform(sort_array(collect_list(struct(pos, mn))), z -> z.mn)").as("mns"),
-        expr("transform(sort_array(collect_list(struct(pos, mx))), z -> z.mx)").as("mxs"))
-    val bits = e.crossJoin(broadcast(stats))
+    val bits = e.crossJoin(broadcast(dimRange(e)))
       .select(col("vec_id"),
         expr(s"""aggregate(sequence(1, $dims), CAST(0 AS BIGINT), (acc, i) ->
                 |  acc | IF(element_at(v, i) >
                 |             (element_at(mns, i) + element_at(mxs, i)) / 2,
                 |           shiftleft(CAST(1 AS BIGINT), i - 1), CAST(0 AS BIGINT)))""".stripMargin)
           .as("nb"))
-    val qb = bits.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("nb").as("qbits"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wH = Window.partitionBy(col("q_id")).orderBy(col("ham").asc, col("n_id").asc)
-    val cands = bits.select(col("vec_id").as("n_id"), col("nb"))
-      .join(broadcast(qb), col("q_id") =!= col("n_id"))
-      .withColumn("ham", expr("bit_count(qbits ^ nb)"))
-      .withColumn("hrank", row_number().over(wH))
-      .filter(col("hrank") <= cand)
-      .select(col("q_id"), col("n_id"))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    cands
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("cv")), Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("cos"), 6).as("cos"))
+    val cands = shortlist(scoreAll(bits.select(col("vec_id").as("n_id"), col("nb")),
+      queriesOf(bits, col("nb").as("qbits")), "ham", "bit_count(qbits ^ nb)"),
+      col("ham").asc, cand, "hrank")
+    rerankExact(cands, e, queries(e), topK)
   }
 
   /** Shared CTE chain for the BQ twins: midpoints → sign bits → Hamming
@@ -1576,14 +1512,8 @@ object VectorOps {
     * neighbor's Hamming distance put it outside the `cand` candidates
     * (sign-bit distortion); widening `cand` raises it.
     */
-  def embBqRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact = embKnn(spark, sfDir).select(col("q_id"), col("n_id"))
-    val bq = embBqKnn(spark, sfDir)
-      .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    exact.join(bq, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(round(sum(coalesce(col("hit"), lit(0L))) / 5.0, 4).as("recall_at_5"))
-  }
+  def embBqRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallAt5(spark, sfDir, embBqKnn(spark, sfDir))
 
   val embBqRecallSql: String =
     s"""WITH $embBqKnnCtes,
@@ -1602,10 +1532,6 @@ object VectorOps {
        |FROM exact e LEFT JOIN bq b ON e.q_id = b.q_id AND e.n_id = b.n_id
        |GROUP BY e.q_id""".stripMargin
 
-  /** Shared CTE chain for the trained-IVF oracle: kmeans rounds → pivots
-    * → cell assignment → query probes → ranked candidates. Reused by
-    * `embRecallSql`, whose exact side reuses the same `n` CTE.
-    */
   /** Trained coarse quantizer CTEs — `piv` (16 trained centroids),
     * `cells` (every vector's Voronoi cell), `probes` (queries × their
     * nprobe=2 nearest cells) — shared by the trained-IVF, IVF-recall,
@@ -1657,14 +1583,8 @@ object VectorOps {
     * true neighbor's cell wasn't probed — recall rises with nprobe
     * (AccuracySpec asserts the monotonicity for the LSH family).
     */
-  def embRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact = embKnn(spark, sfDir).select(col("q_id"), col("n_id"))
-    val ivf = embIvfTrained(spark, sfDir)
-      .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    exact.join(ivf, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(round(sum(coalesce(col("hit"), lit(0L))) / 5.0, 4).as("recall_at_5"))
-  }
+  def embRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallAt5(spark, sfDir, embIvfTrained(spark, sfDir))
 
   val embRecallSql: String =
     s"""WITH $ivfTrainedCtes,
@@ -1693,19 +1613,8 @@ object VectorOps {
     * exact tier is the oracle-able baseline those variants re-rank
     * against.
     */
-  def embMipsKnn(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val c = e.select(col("vec_id").as("n_id"), col("v").as("cv"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("dot").desc, col("n_id").asc)
-    c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("dot", expr("dot_product(qv, cv)"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("n_id"), round(col("dot"), 6).as("dot"))
-  }
+  def embMipsKnn(spark: SparkSession, sfDir: String): DataFrame =
+    topK(exactScan(spark, sfDir, "dot", "dot_product(qv, cv)"), "dot", 5)
 
   val embMipsKnnSql: String =
     s"""WITH s AS (
@@ -1737,16 +1646,10 @@ object VectorOps {
   def embRangeSearch(spark: SparkSession, sfDir: String): DataFrame =
     embRangeSearch(spark, sfDir, radius = 0.3)
 
-  def embRangeSearch(spark: SparkSession, sfDir: String, radius: Double): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val c = e.select(col("vec_id").as("n_id"), col("v").as("cv"))
-    c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
+  def embRangeSearch(spark: SparkSession, sfDir: String, radius: Double): DataFrame =
+    exactScan(spark, sfDir, "cos", "cosine_sim(qv, cv)")
       .filter(col("cos") >= radius)
       .select(col("q_id"), col("n_id"), round(col("cos"), 6).as("cos"))
-  }
 
   val embRangeSearchSql: String =
     s"""WITH s AS (
@@ -1781,16 +1684,14 @@ object VectorOps {
 
   def embOutlier(spark: SparkSession, sfDir: String,
                  k: Int, iters: Int, maxCos: Double): DataFrame = {
-    val e = withVec(Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("v")).transform(CacheScope.barrier)
+    val e = vectors(spark, sfDir).transform(CacheScope.barrier)
     val cent = lloyd(e, k, iters)._1
       .select(col("c_id"), col("cv")).transform(CacheScope.barrier)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("c_id").asc)
+    // assignCells' nearest-pivot pass, under this plan's own names (c_id, cv, cos)
     e.join(broadcast(cent), lit(true))
       .withColumn("cos", expr("cosine_sim(v, cv)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cos") < maxCos)
+      .transform(rankWithin("vec_id", Seq(col("cos").desc, col("c_id").asc), 1, "rn"))
+      .filter(col("cos") < maxCos)
       .select(col("vec_id"), col("c_id"), round(col("cos"), 6).as("cos"))
   }
 
@@ -1839,28 +1740,22 @@ object VectorOps {
     * shuffle-row count — the arithmetic is identical, fold-order-free
     * integers either way.
     */
-  private[graft] def covMomentsOf(emb: DataFrame): Array[Long] = {
-    val covAgg = udaf(new graft.functions.CovMoments(dims))
+  private[graft] def covMomentsOf(emb: DataFrame): Array[Long] =
+    covMoments(emb).head().getSeq[Long](0).toArray
+
+  private def covMoments(emb: DataFrame): DataFrame =
     emb.select(
         expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
           .as("vq"))
-      .agg(covAgg(col("vq")).as("b"))
-      .head().getSeq[Long](0).toArray
-  }
+      .agg(udaf(new graft.functions.CovMoments(dims)).apply(col("vq")).as("b"))
 
   private def triIndex(i: Int, j: Int): Int = // row-major upper triangle
     i * dims - i * (i - 1) / 2 + (j - i)
 
   /** The fit's physical plan, for PlanSpec's exchange-shape assertion. */
   private[graft] def covMomentsPlanForSpec(spark: SparkSession, sfDir: String)
-      : org.apache.spark.sql.execution.SparkPlan = {
-    val covAgg = udaf(new graft.functions.CovMoments(dims))
-    Tables.embeddings(spark, sfDir).select(
-        expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
-          .as("vq"))
-      .agg(covAgg(col("vq")).as("b"))
-      .queryExecution.executedPlan
-  }
+      : org.apache.spark.sql.execution.SparkPlan =
+    covMoments(Tables.embeddings(spark, sfDir)).queryExecution.executedPlan
 
   /** Core over any frame with an `embedding` array column — the OPQ
     * premise spec drives it with a deliberately correlated mix. The
@@ -2105,40 +2000,41 @@ object VectorOps {
     val (means, vals, vecs0) = pcaFitOf(emb)
     val sd = dims / m
     val order = opqAllocate(vals, m, sd)
-    val vecs = order.map(vecs0).toArray
-    def lit9(d: Double) = java.lang.Double.toString(d) + "D"
-    val mArr = means.map(lit9).mkString("array(", ", ", ")")
-    val wMat = vecs.map(_.map(lit9).mkString("array(", ", ", ")"))
-      .mkString("array(", ", ", ")")
     // r13: the d×d rotation runs as the codegen'd mat_project kernel —
     // the previous nested-HOF form evaluated d² interpreted lambdas per
     // row (the JlProject lesson); identical fold order, identical sums,
     // round(·, 6) stays outside the kernel
     emb.select(col("vec_id"), expr(
-      s"transform(mat_project(embedding, $mArr, $wMat), x -> round(x, 6))")
+      s"transform(${matProjectSql(means, order.map(vecs0))}, x -> round(x, 6))")
       .as("v"))
+  }
+
+  /** `mat_project(embedding, means, rows)` with the fitted model inlined
+    * as exact double literals. */
+  private def matProjectSql(means: Array[Double], rows: Seq[Array[Double]]): String = {
+    def doubles(xs: Array[Double]): String =
+      xs.map(d => java.lang.Double.toString(d) + "D").mkString("array(", ", ", ")")
+    s"mat_project(embedding, ${doubles(means)}, ${rows.map(doubles).mkString("array(", ", ", ")")})"
   }
 
   private def pcaApply(spark: SparkSession, sfDir: String, k: Int,
                        whiten: Boolean): DataFrame = {
     val (means, vals, vecs) = pcaFit(spark, sfDir)
-    def lit9(d: Double) = java.lang.Double.toString(d) + "D"
-    val mArr = means.map(lit9).mkString("array(", ", ", ")")
     // λ ≤ 0 (degenerate direction) → weight 0: whitening a no-variance
     // component would divide by zero for no information gain
-    val wMat = (0 until k).map { c =>
+    val rows = (0 until k).map { c =>
       val scale =
         if (!whiten) 1.0
         else if (vals(c) > 0) 1.0 / math.sqrt(vals(c))
         else 0.0
-      vecs(c).map(w => lit9(w * scale)).mkString("array(", ", ", ")")
-    }.mkString("array(", ", ", ")")
+      vecs(c).map(_ * scale)
+    }
     // r13: one mat_project kernel call per row (see opqRotateOf) — the
     // projection array is computed once and the k output columns are
     // element_at extracts; the per-column HOF form evaluated k·d
     // interpreted lambdas per row
     Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), expr(s"mat_project(embedding, $mArr, $wMat)").as("_p"))
+      .select(col("vec_id"), expr(matProjectSql(means, rows)).as("_p"))
       .select(col("vec_id") +:
         (0 until k).map(c => element_at(col("_p"), c + 1).as(s"p$c")): _*)
   }

@@ -1,6 +1,9 @@
 package graft.streaming
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
 
 /** The one RocksDB state store setup, for every stateful streaming
   * operator: the T2 dedup (`flatMapGroupsWithState`) as `DedupApp` and the
@@ -31,8 +34,25 @@ object StateStores {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   /** Session-wide, deliberate: every streaming query started after this
-    * call uses RocksDB state stores until the conf is changed back.
+    * call uses RocksDB state stores until the conf is changed back. It
+    * also closes the loaded stores when the context stops
+    * ([[CloseOnStop]]).
     */
-  def useRocksDB(spark: SparkSession): Unit =
+  def useRocksDB(spark: SparkSession): Unit = {
     RocksDBConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val sc = spark.sparkContext
+    hooked.synchronized { if (hooked.add(sc)) sc.addSparkListener(new CloseOnStop) }
+  }
+
+  private val hooked = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+
+  /** Closes every loaded state store provider and stops the store
+    * maintenance pool when the application ends. Spark itself never calls
+    * `StateStore.stop()`, so a stopped context leaves its RocksDB
+    * instances open and their maintenance running into JVM exit.
+    */
+  private[graft] final class CloseOnStop extends SparkListener {
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = StateStore.stop()
+  }
 }

@@ -47,6 +47,26 @@ class RunMetricsSpec extends SparkSpec {
     }
   }
 
+  test("RunMetrics: no top stage of an AQE query is named after AdaptiveSparkPlan") {
+    SparkSpec.restoring(spark, Seq("spark.sql.adaptive.enabled")) {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      // AQE materializes the cached frame in a stage whose last RDD it
+      // creates itself
+      val cached = spark.range(0, 200000, 1, 4)
+        .select((col("id") % 97).as("k"),
+          sha2(sha2(col("id").cast("string"), 512), 512).as("h"))
+        .persist()
+      try {
+        val m = RunMetrics.of(spark.sparkContext) {
+          cached.groupBy("k").count().write.format("noop").mode("overwrite").save()
+        }
+        val ops = m.topStages.map(_._5)
+        assert(ops.size >= 2 && ops.forall(op => op.nonEmpty && op != "AdaptiveSparkPlan"),
+          m.topStages)
+      } finally cached.unpersist()
+    }
+  }
+
   test("Bench record: run metrics of the median run and cold_s, add-only") {
     // a two-stage aggregate; Bench hands the query its corpus directory,
     // which this one does not read
