@@ -30,10 +30,10 @@ final class RunMetrics(val cores: Int) extends SparkListener {
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
     stages += 1
     // the call site names broadcast and subquery stages after the thread
-    // pool that ran them; the operation scope of the stage's last RDD
-    // names the plan node, unless AQE's wrapper created that RDD
+    // pool that ran them; the last RDD's scope names the plan node, unless
+    // AQE's wrapper or a Dataset-to-RDD conversion made that RDD
     val op = e.stageInfo.rddInfos.sortBy(-_.id).flatMap(_.scope).map(_.name)
-      .find(_ != "AdaptiveSparkPlan").getOrElse("")
+      .find(!Set("AdaptiveSparkPlan", "mapPartitions", "mapPartitionsInternal")(_)).getOrElse("")
     stageNames(e.stageInfo.stageId) = (e.stageInfo.name.takeWhile(_ != '\n').take(60), op)
   }
 

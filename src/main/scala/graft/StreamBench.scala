@@ -17,9 +17,6 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark: SparkSession = DevSession(
-      // skip watermark-only micro-batches: throughput runs don't need the
-      // extra empty batch per trigger
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
       // keep every batch's progress: the RocksDB commit sums cover the run
       "spark.sql.streaming.numRecentProgressUpdates" -> "100000")
     Graft.init(spark)

@@ -46,7 +46,6 @@ object StreamStateBench {
     val batches = sys.env.getOrElse("SPARK_GRAFT_STATE_BATCHES", "20").toInt
     val spreadUs = sys.env.getOrElse("SPARK_GRAFT_STATE_SPREAD_US", "0").toLong
     val spark: SparkSession = DevSession(
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
       // default 100 recentProgress entries would silently truncate the
       // p50/max stats when batches > 100 while the JSON claims the full
       // run (r8 ADVICE)

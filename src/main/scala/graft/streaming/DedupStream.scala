@@ -43,9 +43,11 @@ case class DedupKey(id: String, bucket: Int)
   * [[StateStores.useRocksDB]]).
   *
   * Watermark honesty (documented divergence, SURVEY.md §2.5): rows later
-  * than the watermark are dropped by Spark before reaching the operator,
-  * whereas Kafka Streams processes arbitrarily late records. Within the
-  * watermark the two-sided probe is reproduced by comparing |t_stored − t|.
+  * than the previous batch's watermark are dropped before the operator;
+  * Kafka Streams processes arbitrarily late records. A timeout only
+  * removes state, in the next data batch under [[StateStores.useRocksDB]]:
+  * a duplicate needs |t − t_stored| ≤ window/2 ≤ retention, and state
+  * removed earlier is over `retention` older than any record kept.
   */
 object DedupStream {
 
@@ -103,8 +105,10 @@ object DedupStream {
       }
       last.foreach { l =>
         state.update(l)
-        // expire retention past the newest stored timestamp (ms precision)
-        try state.setTimeoutTimestamp(l / 1000 + retentionUs / 1000)
+        // expire retention past the newest stored timestamp (ms precision),
+        // never before the watermark: the late filter lags it by one batch
+        val expiry = l / 1000 + retentionUs / 1000
+        try state.setTimeoutTimestamp(math.max(expiry, state.getCurrentWatermarkMs()))
         catch { case _: UnsupportedOperationException => () } // batch mode
       }
       out.iterator

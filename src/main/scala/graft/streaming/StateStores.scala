@@ -5,24 +5,23 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.state.StateStore
 
-/** The one RocksDB state store setup, for every stateful streaming
-  * operator: the T2 dedup (`flatMapGroupsWithState`) as `DedupApp` and the
-  * benchmarks deploy it, and the `transformWithState` operators, which
-  * require the RocksDB provider.
-  *
-  * Spark resolves these keys from the SESSION conf when a streaming query
-  * starts — there is no per-query writeStream option for them. Rather than
-  * each operator silently flipping the session conf as a hidden side
-  * effect of building its Dataset (which switches every OTHER streaming
-  * query in the session too), the caller opts in explicitly here, once,
-  * where the blast radius is visible: apps/benches call it at session
-  * setup; specs call it inside a save/restore wrapper that restores every
-  * key of [[RocksDBConf]].
+/** The one session setup for every stateful streaming operator: the T2
+  * dedup (`flatMapGroupsWithState`) as `DedupApp` and the benchmarks
+  * deploy it, and the `transformWithState` operators, which require the
+  * RocksDB provider. Spark reads these keys from the session when a query
+  * starts (none is kept in the offset log), so callers opt in here, once:
+  * apps/benches at session setup, specs inside a wrapper that restores
+  * every key of [[RocksDBConf]].
   *
   * Changelog checkpointing makes a batch commit write one changelog per
   * state partition and leaves snapshot uploads to Spark's background
-  * maintenance, instead of zipping and copying every partition's files on
-  * every batch. Checkpoints written with it on or off load either way.
+  * maintenance; checkpoints written with it on or off load either way.
+  *
+  * No no-data micro-batches: no batch runs only because the watermark
+  * moved, which matters only where a watermark is set. T2's expired state
+  * goes in the next data batch ([[DedupStream]]), and `StreamOps`' window
+  * aggregations and joins emit then instead of when the stream goes quiet.
+  * The `transformWithState` operators use `TimeMode.None`, no watermark.
   */
 object StateStores {
   val RocksDB: String =
@@ -31,7 +30,8 @@ object StateStores {
   /** Every session key [[useRocksDB]] sets, with its value. */
   val RocksDBConf: Seq[(String, String)] = Seq(
     "spark.sql.streaming.stateStore.providerClass" -> RocksDB,
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
   /** Session-wide, deliberate: every streaming query started after this
     * call uses RocksDB state stores until the conf is changed back. It

@@ -67,6 +67,22 @@ class RunMetricsSpec extends SparkSpec {
     }
   }
 
+  test("RunMetrics: a stage that ends in a Dataset-to-RDD conversion names its plan operation") {
+    SparkSpec.restoring(spark, Seq("spark.sql.adaptive.enabled")) {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val df = spark.range(0, 50000, 1, 4).select(sha2(col("id").cast("string"), 256).as("h"))
+      // `rdd` ends its stage in a `mapPartitions` RDD, `collect` in a
+      // `mapPartitionsInternal` one, both created outside the plan
+      val m = RunMetrics.of(spark.sparkContext) {
+        df.rdd.count()
+        df.collect()
+      }
+      val ops = m.topStages.map(_._5)
+      assert(ops.size == 2 && ops.forall(op => op.nonEmpty && !op.startsWith("mapPartitions")),
+        m.topStages)
+    }
+  }
+
   test("Bench record: run metrics of the median run and cold_s, add-only") {
     // a two-stage aggregate; Bench hands the query its corpus directory,
     // which this one does not read

@@ -22,6 +22,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Spark's switch for micro-batches that run only because the watermark
+    * moved; [[StateStores.useRocksDB]] turns them off.
+    */
+  val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

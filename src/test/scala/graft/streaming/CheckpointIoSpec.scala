@@ -9,7 +9,7 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import graft.SparkSpec
 import graft.io.SpawnFreeLocalFs
 
@@ -131,6 +131,67 @@ class CheckpointIoSpec extends SparkSpec {
     assert(dedupAcross(StockSetup, Setup)._1 == uninterrupted)
     assert(dedupAcross(Setup, StockSetup)._1 == uninterrupted)
     assert(dedupAcross(StockSetup, Setup, StockSetup)._1 == uninterrupted)
+  }
+
+  /** Spark's one-batch trigger (`Trigger.Once`, deprecated): it runs the
+    * next batch and stops, so no no-data batch follows a data batch.
+    */
+  private val OneBatch = Class.forName("org.apache.spark.sql.execution.streaming.OneTimeTrigger$")
+    .getField("MODULE$").get(null).asInstanceOf[Trigger]
+
+  test("restart under useRocksDB from a no-data-batch checkpoint: same output, expired state removed in the first data batch") {
+    val s = spark
+    import s.implicits._
+    val batches = Seq(
+      Seq(boom("E1", 0), boom("E2", 1), noId(2)),
+      Seq(boom("E1", 3), boom("E3", 4)),
+      // moves the next watermark to 20 min: E1, E2 and E3 expire
+      Seq(boom("E4", 30)),
+      // E1 re-emits and refreshes its state; E2 and E3 are removed
+      Seq(boom("E1", 31), boom("E5", 32)),
+      Seq(boom("E4", 33), boom("E2", 29)))
+    def start(base: String, trigger: Trigger = Trigger.ProcessingTime(0L)) =
+      Pipelines.dedupPipeline(spark.readStream.schema(Seq.empty[Frame].toDF().schema)
+          .parquet(s"$base/src"))
+        .writeStream.format("parquet").option("path", s"$base/out").trigger(trigger)
+        .option("checkpointLocation", s"$base/ckpt").outputMode("append").start()
+    def add(base: String, b: Seq[Frame]): Unit =
+      b.toDF().coalesce(1).write.mode("append").parquet(s"$base/src")
+    def output(base: String): Seq[String] =
+      spark.read.parquet(s"$base/out").select(col("key").cast("string")).as[String]
+        .collect().toSeq.sorted
+    def stateOps(q: StreamingQuery) =
+      q.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch"))
+        .map(p => (p.numInputRows, p.stateOperators.head))
+
+    def fresh(name: String): String =
+      Files.createDirectories(Files.createTempDirectory(name).resolve("src")).getParent.toString
+    val (whole, restarted) = (fresh("graft_nodata_whole"), fresh("graft_nodata_restart"))
+    withRocksDB {
+      val q = start(whole)
+      try batches.foreach { b => add(whole, b); q.processAllAvailable() } finally q.stop()
+
+      spark.conf.set(SparkSpec.NoDataBatches, "true")
+      val q1 = start(restarted)
+      try batches.take(2).foreach { b => add(restarted, b); q1.processAllAvailable() }
+      finally q1.stop()
+      assert(stateOps(q1).exists(_._1 == 0), "no no-data batch ran")
+      add(restarted, batches(2))
+      val q2 = start(restarted, OneBatch)
+      q2.awaitTermination()
+      // the data batch alone: E1, E2 and E3 are expired, not removed
+      assert(stateOps(q2).map { case (n, op) => (n, op.numRowsTotal, op.numRowsRemoved) } ==
+        Seq((1L, 4L, 0L)))
+
+      StateStores.useRocksDB(spark)
+      val q3 = start(restarted)
+      try batches.drop(3).foreach { b => add(restarted, b); q3.processAllAvailable() }
+      finally q3.stop()
+      assert(stateOps(q3).map { case (n, op) => (n, op.numRowsRemoved) } == Seq((2L, 2L), (2L, 0L)))
+    }
+    assert(output(whole) == Seq("E1@0", "E1@31", "E2@1", "E2@29", "E3@4", "E4@30", "E5@32",
+      "info@2").sorted)
+    assert(output(restarted) == output(whole))
   }
 
   test("a checkpoint of the two-scan T2 plan does not restart: its offset log records two sources") {

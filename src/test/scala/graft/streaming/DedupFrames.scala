@@ -51,7 +51,7 @@ object DedupFrames {
     dedupStreamingProgress(spark, batches, windowUs, retentionUs, streamTime)._1
 
   /** [[dedupStreaming]], also returning the progress of every micro-batch
-    * that read input.
+    * that ran, with or without input.
     */
   def dedupStreamingProgress(spark: SparkSession, batches: Seq[Seq[LogRecord]],
                              windowUs: Long = DedupStream.DefaultWindowUs,
@@ -71,7 +71,7 @@ object DedupFrames {
         q.processAllAvailable()
       }
       (survivors(spark.table(qn), batches.flatten.toIndexedSeq),
-        q.recentProgress.filter(_.numInputRows > 0).toSeq)
+        q.recentProgress.filter(_.durationMs.containsKey("addBatch")).toSeq)
     } finally q.stop()
   }
 }

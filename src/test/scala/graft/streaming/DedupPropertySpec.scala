@@ -18,10 +18,14 @@ class DedupPropertySpec extends SparkSpec {
   }
 
   private val WindowUs = DedupStream.DefaultWindowUs
+  private val RetentionUs = DedupStream.DefaultRetentionUs
+  private val Base = 86400L * 1000000 // past the epoch-0 initial watermark
+  private val Min = 60L * 1000000
 
   /** Direct transcription of DeduplicationTransformer for in-order input:
-    * one stored timestamp per id, refreshed on every record; emit iff no
-    * stored timestamp within ±window/2.
+    * one stored timestamp per id, refreshed on every record and live while
+    * the record is at most `retention` past it (perfbench's `t2Model`);
+    * emit iff no live stored timestamp within ±window/2.
     */
   private def referenceModel(events: Seq[LogRecord]): Seq[LogRecord] = {
     val store = scala.collection.mutable.Map[String, Long]()
@@ -29,8 +33,9 @@ class DedupPropertySpec extends SparkSpec {
       r.event.flatMap(_.exception).flatMap(_.exception_class) match {
         case None => true
         case Some(id) =>
-          val dup = store.get(id).exists(l => math.abs(r.event_time_us - l) <= WindowUs / 2)
-          store(id) = r.event_time_us
+          val t = r.event_time_us
+          val dup = store.get(id).exists(l => t - l <= RetentionUs && math.abs(t - l) <= WindowUs / 2)
+          store(id) = t
           !dup
       }
     }
@@ -66,20 +71,20 @@ class DedupPropertySpec extends SparkSpec {
 
   /** T2' transcription (reference `KStreamDistinct_example.java:65,94,97`):
     * the dedup axis is stream time — the max timestamp observed so far —
-    * compared against and stored in place of record time. Scope here is
-    * per key (the engine's unit of state partitioning; the reference's is
-    * the topic partition — documented divergence).
+    * compared against and stored in place of record time, with the same
+    * liveness as [[referenceModel]]. Scope here is per key (the engine's
+    * unit of state partitioning; the reference's is the topic partition —
+    * documented divergence).
     */
   private def referenceModelStreamTime(events: Seq[LogRecord]): Seq[LogRecord] = {
     val store = scala.collection.mutable.Map[String, Long]()
-    val streamT = scala.collection.mutable.Map[String, Long]()
     events.filter { r =>
       r.event.flatMap(_.exception).flatMap(_.exception_class) match {
         case None => true
         case Some(id) =>
-          val st = math.max(streamT.getOrElse(id, Long.MinValue), r.event_time_us)
-          streamT(id) = st
-          val dup = store.get(id).exists(l => math.abs(st - l) <= WindowUs / 2)
+          val live = store.get(id).filter(l => r.event_time_us - l <= RetentionUs)
+          val st = math.max(live.getOrElse(Long.MinValue), r.event_time_us)
+          val dup = live.exists(l => math.abs(st - l) <= WindowUs / 2)
           store(id) = st
           !dup
       }
@@ -87,8 +92,6 @@ class DedupPropertySpec extends SparkSpec {
   }
 
   test("streaming T2'/T2 match their reference models on seeded out-of-order multi-batch input") {
-    val Base = 86400L * 1000000 // past the epoch-0 initial watermark
-    val Min = 60L * 1000000
     val rnd = new scala.util.Random(42)
 
     // 6 seeded scenarios: 2-4 batches, each internally time-ordered, batch
@@ -137,6 +140,49 @@ class DedupPropertySpec extends SparkSpec {
     val hotExpect = referenceModel(hotKey.flatMap(_.sortBy(_.event_time_us)))
     assert(hotExpect.nonEmpty && hotExpect.size < hotKey.flatten.size,
       "the hot-key scenario must actually suppress")
+  }
+
+  test("T2/T2' on RocksDB: no-data batches on or off give the retention-aware model's output, with state evicted") {
+    val rnd = new scala.util.Random(2013)
+    // 2 seeded scenarios of 6 batches, each batch internally time-ordered.
+    // A batch starts up to 8 min before the running max (out of order, but
+    // never later than the 10-min watermark), or after a quiet gap of 21-30
+    // min: longer than retention plus the watermark delay, so every state
+    // stored before the gap expires at the next watermark.
+    val scenarios = (0 until 2).map { _ =>
+      var maxTs = Base
+      (0 until 6).map { b =>
+        var t =
+          if (b == 2 || rnd.nextInt(4) == 0) maxTs + 21 * Min + rnd.nextLong(9 * Min)
+          else math.max(Base, maxTs - 8 * Min + rnd.nextLong(11 * Min))
+        val batch = (0 until 1 + rnd.nextInt(8)).map { _ =>
+          t += rnd.nextLong(2 * Min)
+          rec(Option.when(rnd.nextInt(5) > 0)("ABCDEF"(rnd.nextInt(6)).toString), t)
+        }
+        maxTs = math.max(maxTs, t)
+        batch
+      }
+    }
+    val removed = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    scenarios.foreach { batches =>
+      val arrival = batches.flatMap(_.sortBy(_.event_time_us))
+      Seq(false, true).foreach { streamTime =>
+        val expect = (if (streamTime) referenceModelStreamTime(arrival) else referenceModel(arrival))
+          .map(idAndTime).sorted
+        Seq("true", "false").foreach { on =>
+          val (out, progress) = withRocksDB {
+            spark.conf.set(SparkSpec.NoDataBatches, on)
+            DedupFrames.dedupStreamingProgress(spark, batches, streamTime = streamTime)
+          }
+          assert(out.map(idAndTime).sorted == expect,
+            s"streamTime $streamTime, no-data batches $on: $batches")
+          // the eviction-only batches run exactly when they are on
+          assert(progress.exists(_.numInputRows == 0) == (on == "true"), progress.map(_.json))
+          removed(on) += progress.map(_.stateOperators.head.numRowsRemoved).sum
+        }
+      }
+    }
+    assert(removed("true") > 0 && removed("false") > 0, s"state rows removed: $removed")
   }
 
   test("batch dedup twin (EventOps.dedupWindowed) agrees on single-key in-order input") {

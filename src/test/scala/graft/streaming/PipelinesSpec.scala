@@ -88,9 +88,8 @@ class PipelinesSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
-    SparkSpec.restoring(spark, Seq(noData)) {
-      spark.conf.set(noData, "false")
+    SparkSpec.restoring(spark, Seq(SparkSpec.NoDataBatches)) {
+      spark.conf.set(SparkSpec.NoDataBatches, "false")
       val input = MemoryStream[Frame]
       val q = pipeline(input.toDF()).writeStream.format("memory")
         .queryName(s"plan_${System.nanoTime()}").outputMode("append").start()
