@@ -20,8 +20,9 @@ object StreamBench {
       // keep every batch's progress: the RocksDB commit sums cover the run
       "spark.sql.streaming.numRecentProgressUpdates" -> "100000")
     Graft.init(spark)
-    // the transformWithState pipelines (funnel, ab_seq monitor) need the
-    // RocksDB provider; deliberate session-wide opt-in (see StateStores)
+    // the transformWithState funnel needs the RocksDB provider, and the
+    // ab_seq monitor's streaming aggregation runs on it too; deliberate
+    // session-wide opt-in (see StateStores)
     graft.streaming.StateStores.useRocksDB(spark)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -82,7 +83,8 @@ object StreamBench {
       (ds: org.apache.spark.sql.Dataset[(Long, String)]) =>
         graft.streaming.SpanDedupStream.spanDedupStream(
           ds.toDF("doc_id", "text")), "append")
-    // Always-valid experiment monitor: five metric keys, O(1) state each
+    // Always-valid experiment monitor: the batch ev_ab_seq plan as a
+    // streaming aggregation, five metric keys, six longs of state each
     val abEvents = Tables.events(spark, sfDir)
       .selectExpr("event_type", "user_id", "value")
       .as[graft.streaming.AbEvent].collect()

@@ -241,9 +241,19 @@ object EventOps {
     * `collect_list` fold, whose per-group aggregation buffer lives
     * entirely in the heap. A null t(i-1) nulls the stage-i condition, so
     * min() skips the row and incompleteness propagates down the funnel.
+    *
+    * `gapUs` makes it a conversion-window funnel: stage i must also land
+    * within `gapUs` of stage i−1 (the "converted within 24 h" product
+    * metric), one more conjunct in the conditional min. Greedy
+    * first-anchor semantics — each stage anchors on the FIRST qualifying
+    * time of the previous stage, the standard analytics-tool definition
+    * and exactly what the min-join oracle computes; a later anchor that
+    * would rescue a missed window is deliberately not searched (that
+    * variant is a different, quadratic metric).
     */
   def funnelStages(df: DataFrame, userCol: String, tsCol: String,
-                   typeCol: String, stages: Seq[String]): DataFrame = {
+                   typeCol: String, stages: Seq[String],
+                   gapUs: Option[Long] = None): DataFrame = {
     require(stages.nonEmpty, "funnel needs at least one stage")
     val w = Window.partitionBy(col(userCol))
     val base = df.filter(col(typeCol).isin(stages: _*))
@@ -251,7 +261,11 @@ object EventOps {
     val staged = stages.zipWithIndex.foldLeft(base) { case (d, (st, i)) =>
       val cond =
         if (i == 0) col(typeCol) === lit(st)
-        else col(typeCol) === lit(st) && col("ts_us") > col(s"__t${i - 1}")
+        else {
+          val prev = col(s"__t${i - 1}")
+          val after = col(typeCol) === lit(st) && col("ts_us") > prev
+          gapUs.fold(after)(g => after && col("ts_us") <= prev + g)
+        }
       d.withColumn(s"__t$i", min(when(cond, col("ts_us"))).over(w))
     }
     // window columns are constant per user; the agg dedups to one row
@@ -268,42 +282,12 @@ object EventOps {
       .select(col("user_id"), col("t0").as("ta"), col("t1").as("tb"),
         col("t2").as("tc"))
 
-  /** Conversion-window funnel: stage i must land within `gapUs` of stage
-    * i−1 (the "converted within 24 h" product metric). Greedy
-    * first-anchor semantics — each stage anchors on the FIRST qualifying
-    * time of the previous stage, the standard analytics-tool definition
-    * and exactly what the min-join oracle computes; a later anchor that
-    * would rescue a missed window is deliberately not searched (that
-    * variant is a different, quadratic metric). Same single-exchange
-    * window plan as [[funnelStages]] — the bound is one more conjunct in
-    * the conditional min.
-    */
-  def funnelStagesBounded(df: DataFrame, userCol: String, tsCol: String,
-                          typeCol: String, stages: Seq[String],
-                          gapUs: Long): DataFrame = {
-    require(stages.nonEmpty, "funnel needs at least one stage")
-    val w = Window.partitionBy(col(userCol))
-    val base = df.filter(col(typeCol).isin(stages: _*))
-      .select(col(userCol), expr(s"$tsCol div 1000").as("ts_us"), col(typeCol))
-    val staged = stages.zipWithIndex.foldLeft(base) { case (d, (st, i)) =>
-      val cond =
-        if (i == 0) col(typeCol) === lit(st)
-        else col(typeCol) === lit(st) && col("ts_us") > col(s"__t${i - 1}") &&
-          col("ts_us") <= col(s"__t${i - 1}") + gapUs
-      d.withColumn(s"__t$i", min(when(cond, col("ts_us"))).over(w))
-    }
-    staged.groupBy(col(userCol))
-      .agg(min(col("__t0")).as("t0"),
-        stages.indices.drop(1).map(i => min(col(s"__t$i")).as(s"t$i")): _*)
-      .filter(col("t0").isNotNull)
-  }
-
   /** 24-hour conversion window over the view→click→purchase funnel. */
   val FunnelGapUs: Long = 86400000000L
 
   def evFunnelBounded(spark: SparkSession, sfDir: String): DataFrame =
-    funnelStagesBounded(Tables.events(spark, sfDir), "user_id", "ts",
-      "event_type", Seq("view", "click", "purchase"), FunnelGapUs)
+    funnelStages(Tables.events(spark, sfDir), "user_id", "ts", "event_type",
+      Seq("view", "click", "purchase"), Some(FunnelGapUs))
       .select(col("user_id"), col("t0").as("ta"), col("t1").as("tb"),
         col("t2").as("tc"))
 
@@ -716,34 +700,16 @@ object EventOps {
   def evAbStats(spark: SparkSession, sfDir: String): DataFrame =
     evAbStatsOf(Tables.events(spark, sfDir))
 
-  /** Core over any (event_type, user_id, value) frame — [[MergeOps]]
-    * pattern; the streaming twin's batch-equivalence spec drives it with
-    * in-memory frames.
+  /** Core over any (event_type, user_id, value) frame, batch or
+    * streaming: `graft.streaming.AbStatsStream` runs this plan as its
+    * streaming aggregation.
     */
-  def evAbStatsOf(events: DataFrame): DataFrame = {
-    val e = events
-      .select(col("event_type"),
-        (col("user_id") % 2).cast(IntegerType).as("variant"),
-        expr("CAST(round(value * 1000) AS BIGINT)").as("vq"))
-    e.groupBy(col("event_type"))
-      .agg(
-        sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("variant") === 0, col("vq")).otherwise(0L)).as("s_a"),
-        sum(when(col("variant") === 1, col("vq")).otherwise(0L)).as("s_b"),
-        sum(when(col("variant") === 0, col("vq") * col("vq")).otherwise(0L)).as("ss_a"),
-        sum(when(col("variant") === 1, col("vq") * col("vq")).otherwise(0L)).as("ss_b"))
-      .filter(col("n_a") > 1 && col("n_b") > 1)
+  def evAbStatsOf(events: DataFrame): DataFrame =
+    abMoments(events)
       .withColumn("ma", expr("CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE)"))
       .withColumn("mb", expr("CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE)"))
-      .withColumn("va", expr(
-        """(CAST(n_a AS DOUBLE) * CAST(ss_a AS DOUBLE)
-          |  - CAST(s_a AS DOUBLE) * CAST(s_a AS DOUBLE))
-          |/ (CAST(n_a AS DOUBLE) * CAST(n_a - 1 AS DOUBLE))""".stripMargin))
-      .withColumn("vb", expr(
-        """(CAST(n_b AS DOUBLE) * CAST(ss_b AS DOUBLE)
-          |  - CAST(s_b AS DOUBLE) * CAST(s_b AS DOUBLE))
-          |/ (CAST(n_b AS DOUBLE) * CAST(n_b - 1 AS DOUBLE))""".stripMargin))
+      .withColumn("va", expr(armVariance("a")))
+      .withColumn("vb", expr(armVariance("b")))
       .withColumn("sea", expr("va / CAST(n_a AS DOUBLE)"))
       .withColumn("seb", expr("vb / CAST(n_b AS DOUBLE)"))
       .withColumn("se2", col("sea") + col("seb"))
@@ -757,7 +723,45 @@ object EventOps {
           .as("welch_df"),
         expr("""CAST(n_a - n_b AS DOUBLE) * CAST(n_a - n_b AS DOUBLE)
                 |  / CAST(n_a + n_b AS DOUBLE)""".stripMargin).as("srm_chi2"))
+
+  /** The six exact per-arm moments of the A/B family, per event_type,
+    * over an (event_type, user_id, value) frame: `n`, `s` = Σvq and
+    * `ss` = Σvq² for arm A (`user_id % 2` = 0) and arm B (= 1) on the
+    * milli grid, then the rows with more than one observation per arm.
+    * A negative odd id reads −1 and falls in neither arm, as in the
+    * DuckDB twins. `extra` aggregates ride the same exchange. On a
+    * streaming frame this is the monitors' state: a streaming
+    * aggregation in Update mode emits the refreshed row of every key a
+    * micro-batch touches.
+    */
+  private def abMoments(events: DataFrame, extra: Column*): DataFrame = {
+    val moments = Seq(arm(0, lit(1L)).as("n_a"), arm(1, lit(1L)).as("n_b")) ++ extra ++
+      Seq(arm(0, col("vq")).as("s_a"), arm(1, col("vq")).as("s_b"),
+        arm(0, col("vq") * col("vq")).as("ss_a"), arm(1, col("vq") * col("vq")).as("ss_b"))
+    events
+      .select(col("event_type"),
+        (col("user_id") % 2).cast(IntegerType).as("variant"),
+        expr("CAST(round(value * 1000) AS BIGINT)").as("vq"))
+      .groupBy(col("event_type"))
+      .agg(moments.head, moments.tail: _*)
+      .filter(col("n_a") > 1 && col("n_b") > 1)
   }
+
+  /** Σ`e` over the rows of arm `v` (the `variant` column). */
+  private def arm(v: Int, e: Column): Column =
+    sum(when(col("variant") === v, e).otherwise(0L))
+
+  /** Sample variance of one arm's milli values from its exact moments. */
+  private def armVariance(a: String): String =
+    s"""(CAST(n_$a AS DOUBLE) * CAST(ss_$a AS DOUBLE) - CAST(s_$a AS DOUBLE) * CAST(s_$a AS DOUBLE))
+       |  / (CAST(n_$a AS DOUBLE) * CAST(n_$a - 1 AS DOUBLE))""".stripMargin
+
+  /** Welch se² = va/n_a + vb/n_b, the op order [[evAbStatsOf]] runs
+    * through its `sea`/`seb` columns.
+    */
+  private val welchSe2: String =
+    s"""${armVariance("a")} / CAST(n_a AS DOUBLE)
+       |+ ${armVariance("b")} / CAST(n_b AS DOUBLE)""".stripMargin
 
   val evAbStatsSql: String =
     """WITH q AS (
@@ -917,7 +921,7 @@ object EventOps {
     *
     * Scale shape: one (event_type, user) exchange folds both periods in a
     * single conditional pass (pre → X, post → Y), then one slim
-    * per-event_type exchange carries eleven exact BIGINT moments per arm
+    * per-event_type exchange carries six exact BIGINT moments per arm
     * — the [[evAbStats]] recipe with X⊗Y cross-moments added. Overflow
     * headroom: per-user period sums ≤ ~1e7 milli ⇒ Σx², Σxy ≤ ~1e17 per
     * group at sf1 — inside BIGINT. θ and the Welch t on the adjusted
@@ -940,14 +944,22 @@ object EventOps {
         expr(s"IF(ts div 1000 >= ${cutUs}L, CAST(round(value * 1000) AS BIGINT), 0L)").as("yq"))
       .groupBy(col("event_type"), col("user_id"), col("variant"))
       .agg(sum(col("xq")).as("x"), sum(col("yq")).as("y"))
-    def arm(v: Int, e: Column): Column = sum(when(col("variant") === v, e).otherwise(0L))
-    u.groupBy(col("event_type")).agg(
-        arm(0, lit(1L)).as("n_a"), arm(1, lit(1L)).as("n_b"),
-        arm(0, col("x")).as("sx_a"), arm(1, col("x")).as("sx_b"),
-        arm(0, col("y")).as("sy_a"), arm(1, col("y")).as("sy_b"),
-        arm(0, col("x") * col("x")).as("sxx_a"), arm(1, col("x") * col("x")).as("sxx_b"),
-        arm(0, col("y") * col("y")).as("syy_a"), arm(1, col("y") * col("y")).as("syy_b"),
-        arm(0, col("x") * col("y")).as("sxy_a"), arm(1, col("x") * col("y")).as("sxy_b"))
+    cupedReadout(u.groupBy(col("event_type")).agg(
+      arm(0, lit(1L)).as("n_a"), arm(1, lit(1L)).as("n_b"),
+      arm(0, col("x")).as("sx_a"), arm(1, col("x")).as("sx_b"),
+      arm(0, col("y")).as("sy_a"), arm(1, col("y")).as("sy_b"),
+      arm(0, col("x") * col("x")).as("sxx_a"), arm(1, col("x") * col("x")).as("sxx_b"),
+      arm(0, col("y") * col("y")).as("syy_a"), arm(1, col("y") * col("y")).as("syy_b"),
+      arm(0, col("x") * col("y")).as("sxy_a"), arm(1, col("x") * col("y")).as("sxy_b")))
+  }
+
+  /** The CUPED finalization over a per-event_type frame of the twelve
+    * exact per-arm sums (`n`, `sx`, `sy`, `sxx`, `syy`, `sxy`, each with
+    * `_a`/`_b`): [[evAbCupedOf]]'s aggregation, or the streaming
+    * monitor's per-user state (`graft.streaming.CupedStream`).
+    */
+  def cupedReadout(moments: DataFrame): DataFrame =
+    moments
       .filter(col("n_a") > 1 && col("n_b") > 1)
       .withColumn("n", expr("CAST(n_a + n_b AS DOUBLE)"))
       .withColumn("sx", expr("CAST(sx_a + sx_b AS DOUBLE)"))
@@ -990,7 +1002,6 @@ object EventOps {
         expr("ab / 1000.0").as("mean_b_adj"),
         expr("(aa - ab) / sqrt(se2)").as("t_cuped"),
         expr("thn * thn / (thd * syyd)").as("var_red"))
-  }
 
   val evAbCupedSql: String =
     """WITH q AS (
@@ -1076,32 +1087,16 @@ object EventOps {
   def evAbSeq(spark: SparkSession, sfDir: String): DataFrame =
     evAbSeqOf(Tables.events(spark, sfDir))
 
-  /** Core over any (event_type, user_id, value) frame — the streaming
-    * monitor's batch-equivalence spec drives it with in-memory frames.
+  /** Core over any (event_type, user_id, value) frame, batch or
+    * streaming: `graft.streaming.SeqTestStream` runs this plan as its
+    * streaming aggregation.
     */
   def evAbSeqOf(events: DataFrame): DataFrame = {
     val tau2 = "10000.0" // mixture prior τ = 100 milli = 0.1 metric units
-    val e = events
-      .select(col("event_type"),
-        (col("user_id") % 2).cast(IntegerType).as("variant"),
-        expr("CAST(round(value * 1000) AS BIGINT)").as("vq"))
-    e.groupBy(col("event_type"))
-      .agg(
-        sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("variant") === 0, col("vq")).otherwise(0L)).as("s_a"),
-        sum(when(col("variant") === 1, col("vq")).otherwise(0L)).as("s_b"),
-        sum(when(col("variant") === 0, col("vq") * col("vq")).otherwise(0L)).as("ss_a"),
-        sum(when(col("variant") === 1, col("vq") * col("vq")).otherwise(0L)).as("ss_b"))
-      .filter(col("n_a") > 1 && col("n_b") > 1)
+    abMoments(events)
       .withColumn("diff", expr(
         "CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE) - CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE)"))
-      .withColumn("se2", expr(
-        """(CAST(n_a AS DOUBLE) * CAST(ss_a AS DOUBLE) - CAST(s_a AS DOUBLE) * CAST(s_a AS DOUBLE))
-          |  / (CAST(n_a AS DOUBLE) * CAST(n_a - 1 AS DOUBLE)) / CAST(n_a AS DOUBLE)
-          |+ (CAST(n_b AS DOUBLE) * CAST(ss_b AS DOUBLE) - CAST(s_b AS DOUBLE) * CAST(s_b AS DOUBLE))
-          |  / (CAST(n_b AS DOUBLE) * CAST(n_b - 1 AS DOUBLE)) / CAST(n_b AS DOUBLE)"""
-          .stripMargin))
+      .withColumn("se2", expr(welchSe2))
       .filter(col("se2") > 0)
       .withColumn("lam", expr(
         s"sqrt(se2 / (se2 + $tau2)) * exp(diff * diff * $tau2 / (2.0 * se2 * (se2 + $tau2)))"))
@@ -1152,26 +1147,9 @@ object EventOps {
     */
   def evAbPower(spark: SparkSession, sfDir: String): DataFrame = {
     val zsum = "2.801585218113954" // 1.959963984540054 + 0.841621233572914
-    val e = Tables.events(spark, sfDir)
-      .select(col("event_type"),
-        (col("user_id") % 2).cast(IntegerType).as("variant"),
-        expr("CAST(round(value * 1000) AS BIGINT)").as("vq"))
-    e.groupBy(col("event_type"))
-      .agg(
-        sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
-        sum(col("vq")).as("s"),
-        sum(when(col("variant") === 0, col("vq")).otherwise(0L)).as("s_a"),
-        sum(when(col("variant") === 1, col("vq")).otherwise(0L)).as("s_b"),
-        sum(when(col("variant") === 0, col("vq") * col("vq")).otherwise(0L)).as("ss_a"),
-        sum(when(col("variant") === 1, col("vq") * col("vq")).otherwise(0L)).as("ss_b"))
-      .filter(col("n_a") > 1 && col("n_b") > 1)
-      .withColumn("se2", expr(
-        """(CAST(n_a AS DOUBLE) * CAST(ss_a AS DOUBLE) - CAST(s_a AS DOUBLE) * CAST(s_a AS DOUBLE))
-          |  / (CAST(n_a AS DOUBLE) * CAST(n_a - 1 AS DOUBLE)) / CAST(n_a AS DOUBLE)
-          |+ (CAST(n_b AS DOUBLE) * CAST(ss_b AS DOUBLE) - CAST(s_b AS DOUBLE) * CAST(s_b AS DOUBLE))
-          |  / (CAST(n_b AS DOUBLE) * CAST(n_b - 1 AS DOUBLE)) / CAST(n_b AS DOUBLE)"""
-          .stripMargin))
+    // its own Σvq: s_a + s_b would drop the values of negative odd ids
+    abMoments(Tables.events(spark, sfDir), sum(col("vq")).as("s"))
+      .withColumn("se2", expr(welchSe2))
       .filter(col("se2") > 0)
       .withColumn("mde_q", expr(s"$zsum * sqrt(se2)"))
       .select(col("event_type"), col("n_a"), col("n_b"),

@@ -466,15 +466,15 @@ object Relational {
     * operator codegen'd and ≤ |flags|·m partial rows shuffled.
     */
   def q18ApproxDistinct(spark: SparkSession, sfDir: String): DataFrame =
-    // r13: same sketch, same md5 base, same output — evaluated through
-    // the fused md5_h64 kernel with the rank derived per bucket from
-    // min(w) (the production profile's two-level shape; equivalence in
-    // [[Sketches.md5Hash]]). Was 1.95 s at sf0.1 on the hex-string
-    // conv/substring chain with a per-row length(bin(w)) rank.
+    q18Hll(spark, sfDir, Sketches.Md5)
+
+  /** q18's plan on either hash base (see [[Sketches.HashBase]]). */
+  private def q18Hll(spark: SparkSession, sfDir: String,
+                     base: Sketches.HashBase): DataFrame =
     Tables.lineitem(spark, sfDir)
-      .withColumn("_h", Sketches.md5Hash(col("l_partkey")))
-      .groupBy(col("l_returnflag"), Sketches.hllIdxFromMd5(col("_h")).as("_i"))
-      .agg(min(Sketches.hllRankSourceFromMd5(col("_h"))).as("_mw"),
+      .withColumn("_h", base.hash(col("l_partkey")))
+      .groupBy(col("l_returnflag"), base.idx(col("_h")).as("_i"))
+      .agg(min(base.rankSource(col("_h"))).as("_mw"),
         count(lit(1)).as("_cnt"))
       .groupBy(col("l_returnflag"))
       .agg(
@@ -505,17 +505,7 @@ object Relational {
     * driver-verified; AccuracySpec bounds this one at 2% of exact q9 too.
     */
   def q18ApproxDistinctProd(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.lineitem(spark, sfDir)
-      .withColumn("_h", Sketches.prodHash(col("l_partkey")))
-      .groupBy(col("l_returnflag"), Sketches.hllIdxFromHash(col("_h")).as("_i"))
-      .agg(min(Sketches.hllRankSourceFromHash(col("_h"))).as("_mw"),
-        count(lit(1)).as("_cnt"))
-      .groupBy(col("l_returnflag"))
-      .agg(
-        Sketches.hllEstimate(count(lit(1)),
-          sum(Sketches.hllContribution(
-            Sketches.hllRankOfMinSource(col("_mw"))))).as("approx_parts"),
-        sum(col("_cnt")).as("n_rows"))
+    q18Hll(spark, sfDir, Sketches.XxHash64)
 
   val q18ApproxDistinctProdSql: String =
     s"""WITH l1 AS (
@@ -892,26 +882,32 @@ object Relational {
     * scale concern.
     */
   def q21Approx(spark: SparkSession, sfDir: String): DataFrame =
-    // r13: same sketch, same md5 base, same output — the q21_approx_prod
-    // plan shape (raw hash carried through the generator so the
-    // per-bucket rank smear binds an attribute; rank from min(w)) with
-    // md5_h64 in place of xxhash64. Was 4.1 s at sf0.1 computing
-    // hex-string idx/rank per row inside the generator input.
+    q21Hll(spark, sfDir, Sketches.Md5)
+
+  /** q21's one-scan plan on either hash base. The struct carries the RAW
+    * hash, not idx/rank: the generator's output is a bound attribute, so
+    * the rank's bit-smear (whose expression tree references its input
+    * 2^6 times) duplicates only attribute refs. Computing idx/rank before
+    * the explode lets project-collapse inline the hash call into all 64
+    * smear leaves — measured 4× slower at sf0.1.
+    */
+  private def q21Hll(spark: SparkSession, sfDir: String,
+                     base: Sketches.HashBase): DataFrame =
     Tables.lineitem(spark, sfDir)
       .select(explode(array(
         struct(lit(0).as("tag"),
-          Sketches.md5Hash(col("l_orderkey")).as("h"),
+          base.hash(col("l_orderkey")).as("h"),
           col("l_shipdate").cast("date").as("sd"),
           col("l_quantity").as("qty"),
           col("l_extendedprice").as("price")),
         struct(lit(1).as("tag"),
-          Sketches.md5Hash(col("l_partkey")).as("h"),
+          base.hash(col("l_partkey")).as("h"),
           lit(null).cast("date").as("sd"),
           lit(null).cast("double").as("qty"),
           lit(null).cast("double").as("price")))).as("x"))
       .select(col("x.*"))
-      .groupBy(col("tag"), Sketches.hllIdxFromMd5(col("h")).as("idx"))
-      .agg(min(Sketches.hllRankSourceFromMd5(col("h"))).as("mw"),
+      .groupBy(col("tag"), base.idx(col("h")).as("idx"))
+      .agg(min(base.rankSource(col("h"))).as("mw"),
         count(col("sd")).as("cnt"),
         min(col("sd")).as("mn"), max(col("sd")).as("mx"),
         sum(col("qty")).as("sq"), sum(col("price")).as("sp"))
@@ -966,45 +962,7 @@ object Relational {
     * xxhash64 mirror; ≤2% of exact q21 in AccuracySpec.
     */
   def q21ApproxProd(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.lineitem(spark, sfDir)
-      // The struct carries the RAW hash, not idx/rank: the generator's
-      // output is a bound attribute, so the rank's bit-smear (whose
-      // expression tree references its input 2^6 times) duplicates only
-      // attribute refs. Computing idx/rank before the explode lets
-      // project-collapse inline the xxhash64 call into all 64 smear
-      // leaves — measured 4× slower at sf0.1.
-      .select(explode(array(
-        struct(lit(0).as("tag"),
-          Sketches.prodHash(col("l_orderkey")).as("h"),
-          col("l_shipdate").cast("date").as("sd"),
-          col("l_quantity").as("qty"),
-          col("l_extendedprice").as("price")),
-        struct(lit(1).as("tag"),
-          Sketches.prodHash(col("l_partkey")).as("h"),
-          lit(null).cast("date").as("sd"),
-          lit(null).cast("double").as("qty"),
-          lit(null).cast("double").as("price")))).as("x"))
-      .select(col("x.*"))
-      .groupBy(col("tag"), Sketches.hllIdxFromHash(col("h")).as("idx"))
-      .agg(min(Sketches.hllRankSourceFromHash(col("h"))).as("mw"),
-        count(col("sd")).as("cnt"),
-        min(col("sd")).as("mn"), max(col("sd")).as("mx"),
-        sum(col("qty")).as("sq"), sum(col("price")).as("sp"))
-      .withColumn("mr", Sketches.hllRankOfMinSource(col("mw")))
-      .agg(
-        sum(col("cnt")).as("n_rows"),
-        Sketches.hllEstimate(
-          count(when(col("tag") === 0, lit(1))),
-          sum(when(col("tag") === 0, Sketches.hllContribution(col("mr")))))
-          .as("n_orders"),
-        Sketches.hllEstimate(
-          count(when(col("tag") === 1, lit(1))),
-          sum(when(col("tag") === 1, Sketches.hllContribution(col("mr")))))
-          .as("n_parts"),
-        min(col("mn")).cast("string").as("min_ship"),
-        max(col("mx")).cast("string").as("max_ship"),
-        round(sum(col("sq")), 2).as("sum_qty"),
-        round(sum(col("sp")) / sum(col("cnt")), 4).as("avg_price"))
+    q21Hll(spark, sfDir, Sketches.XxHash64)
 
   val q21ApproxProdSql: String =
     s"""WITH x AS (

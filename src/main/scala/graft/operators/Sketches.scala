@@ -50,40 +50,45 @@ object Sketches {
     */
   private val WBits = 48
 
+  /** A hash base: one hash per row, and the two bit-disjoint draws the
+    * sketch takes from it — the bucket index and the 48-bit rank source.
+    * The rank derives per BUCKET from the aggregated minimum rank source
+    * via [[hllRankOfMinSource]] (max rank == rank of min w — bit length
+    * is monotone in w, and w = 0 maps to rank [[WBits]]+1), so the
+    * per-row work is the hash and two integer ops. Both bases share
+    * every later step ([[hllContribution]]/[[hllEstimate]]).
+    */
+  sealed abstract class HashBase {
+    def hash(value: Column): Column
+    def idx(h: Column): Column
+    def rankSource(h: Column): Column
+  }
+
   /** md5 hash base — the oracle-parity TWIN profile (r8): both engines
     * compute identical digests, so the driver hash-checks the sketch
-    * itself. Costlier per row than the production base below; kept as
-    * the documented cross-check, not the deployment path. The production
-    * profile ([[prodHash]]/q18_approx_prod/q21_approx_prod, r9) runs on
-    * one codegen'd xxhash64 per row AND is still driver-checked — its
-    * DuckDB twin mirrors xxhash64 bit-exactly ([[xxh64TableSql]]).
+    * itself. Costlier per row than [[XxHash64]]; kept as the documented
+    * cross-check, not the deployment path.
     *
     * Since r13 the md5 profile evaluates through the fused
     * [[graft.functions.Md5Head64]] kernel (one digest per row, no
     * hex-string/substring/conv chain) and derives bucket + rank source
     * from bit ranges of the head — the exact integers the old
     * `conv(substring(md5(...)))` forms produced (equivalence table on
-    * the kernel), so the DuckDB twins and every emitted value are
-    * unchanged. The rank now derives per BUCKET from the aggregated
-    * min rank source (max rank == rank of min w — bit length is
-    * monotone in w, and w = 0 maps to rank [[WBits]]+1 on both forms),
-    * the same two-level shape the production profile uses.
+    * the kernel), so the DuckDB twins ([[hllIdxSql]]/[[hllRankSql]]) and
+    * every emitted value are unchanged.
     */
-  def md5Hash(value: Column): Column =
-    call_function("md5_h64", value.cast("string"))
-
-  /** Bucket index from the md5 head: hex chars 1–4 (top 16 bits) mod m
-    * (16384 divides 65536 — exactly uniform).
-    */
-  def hllIdxFromMd5(h: Column): Column =
-    call_function("shiftrightunsigned", h, lit(48)) % M
-
-  /** 48-bit rank source from the md5 head: hex chars 5–16 (low 48 bits
-    * — bit-disjoint from the bucket index). Rank derives per bucket via
-    * [[hllRankOfMinSource]], exactly as the production profile.
-    */
-  def hllRankSourceFromMd5(h: Column): Column =
-    h.bitwiseAND(lit((1L << WBits) - 1))
+  case object Md5 extends HashBase {
+    def hash(value: Column): Column =
+      call_function("md5_h64", value.cast("string"))
+    /** Hex chars 1–4 (top 16 bits) mod m (16384 divides 65536 — exactly
+      * uniform).
+      */
+    def idx(h: Column): Column =
+      call_function("shiftrightunsigned", h, lit(48)) % M
+    /** Hex chars 5–16 (low 48 bits — bit-disjoint from the index). */
+    def rankSource(h: Column): Column =
+      h.bitwiseAND(lit((1L << WBits) - 1))
+  }
 
   /** Fixed-point harmonic contribution 2^(Scale−maxRank) of one bucket:
     * an unsigned right shift of 2^Scale, so rank > Scale floors to 0
@@ -107,42 +112,29 @@ object Sketches {
       .cast("long")
   }
 
-  // ——— Production hash base (r9): xxhash64. The md5 base above bought
-  // the r8 oracle graduations but costs ~5× the CPU of xxhash64 per row
-  // and inverted the approx tier's purpose (q18/q21_approx benched
-  // SLOWER than their exact twins — r8 verdict). The production profile
-  // computes ONE codegen'd xxhash64 per row and derives bucket + rank
-  // from disjoint bit ranges of it. It is STILL fully oracle-checkable:
-  // xxhash64 of an 8-byte long is five wrapping multiplies + rotates +
-  // xor-shifts, mirrored exactly in DuckDB HUGEINT arithmetic
-  // ([[xxh64TableSql]] — wrapping 64×64 multiplies split into 32×32
-  // products, verified bit-identical to Spark's XXH64.hashLong across
-  // the long range incl. negatives/extremes). Same estimate pipeline
-  // ([[hllContribution]]/[[hllEstimate]]) on both bases.
-
-  /** One production hash per row: Spark's codegen'd xxhash64 (seed 42)
-    * of the value as an 8-byte long. The cast pins the hashed byte
-    * layout to the one [[xxh64TableSql]] mirrors.
+  /** Production hash base (r9): xxhash64. The md5 base costs ~5× the
+    * CPU of xxhash64 per row and inverted the approx tier's purpose
+    * (q18/q21_approx benched SLOWER than their exact twins — r8
+    * verdict). This base computes ONE codegen'd xxhash64 (seed 42) of
+    * the value as an 8-byte long per row; the cast pins the hashed byte
+    * layout. It is STILL fully oracle-checkable: xxhash64 of an 8-byte
+    * long is five wrapping multiplies + rotates + xor-shifts, mirrored
+    * exactly in DuckDB HUGEINT arithmetic ([[xxh64TableSql]] — wrapping
+    * 64×64 multiplies split into 32×32 products, verified bit-identical
+    * to Spark's XXH64.hashLong across the long range incl.
+    * negatives/extremes).
     */
-  def prodHash(value: Column): Column = xxhash64(value.cast("long"))
-
-  /** Bucket index from the production hash: low P bits. The bitwise AND
-    * on the signed long equals the unsigned value mod m (m divides 2^64
-    * — exactly uniform, and bit-disjoint from the rank source).
-    */
-  def hllIdxFromHash(h: Column): Column =
-    h.bitwiseAND(lit((M - 1).toLong))
-
-  /** 48-bit rank source from the production hash: bits P..P+47
-    * (bit-disjoint from the bucket index). This is ALL the per-row rank
-    * work in the production profile — two integer ops; the actual rank
-    * is derived per BUCKET from the aggregated minimum (bit length is
-    * monotone in w, so max rank = WBits+1 − bitlen(min w)), moving the
-    * leading-zero count off the per-row hot path onto ≤ m bucket rows.
-    */
-  def hllRankSourceFromHash(h: Column): Column =
-    call_function("shiftrightunsigned", h, lit(P))
-      .bitwiseAND(lit((1L << WBits) - 1))
+  case object XxHash64 extends HashBase {
+    def hash(value: Column): Column = xxhash64(value.cast("long"))
+    /** Low P bits: the bitwise AND on the signed long equals the unsigned
+      * value mod m (m divides 2^64 — exactly uniform).
+      */
+    def idx(h: Column): Column = h.bitwiseAND(lit((M - 1).toLong))
+    /** Bits P..P+47 (bit-disjoint from the index). */
+    def rankSource(h: Column): Column =
+      call_function("shiftrightunsigned", h, lit(P))
+        .bitwiseAND(lit((1L << WBits) - 1))
+  }
 
   /** Bucket max-rank from min(rank source). Bit length computed as
     * bit-smear + popcount — pure integer codegen (the md5 path's

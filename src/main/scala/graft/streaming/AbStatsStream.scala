@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode}
-import org.apache.spark.sql.streaming.ValueState
+import org.apache.spark.sql.Dataset
+import graft.operators.EventOps
 
 /** One experiment observation on the stream. */
 case class AbEvent(event_type: String, user_id: Long, value: Double)
@@ -12,80 +11,21 @@ case class AbReadout(event_type: String, n_a: Long, n_b: Long,
                      mean_a: Double, mean_b: Double,
                      t_stat: Double, welch_df: Double, srm_chi2: Double)
 
-/** The six exact integer moments the readout is derived from. */
-private[streaming] case class AbMoments(na: Long, nb: Long, sa: Long, sb: Long,
-                                        ssa: Long, ssb: Long)
-
-/** Streaming A/B monitor — the streaming face of the batch `ev_ab_stats`:
-  * the same six BIGINT moments on the milli-value grid live as managed
-  * state per metric key, and every micro-batch that touches a key emits
-  * its refreshed Welch t / df / SRM χ² row (Update-mode semantics: the
-  * dashboard always shows the statistics of everything that has arrived).
+/** Streaming A/B monitor — the batch `ev_ab_stats` plan run as a
+  * streaming aggregation. Its state is the six exact BIGINT moments per
+  * metric key, and in Update mode every micro-batch that touches a key
+  * emits that key's refreshed Welch t / df / SRM χ² row (the dashboard
+  * always shows the statistics of everything that has arrived).
   *
-  * Because the moments are exact integers, streaming arrival order is
-  * IRRELEVANT to the state — after any prefix of the stream the readout
-  * equals the batch operator run on that prefix, bit for bit (the
-  * finalization below mirrors the batch column expressions op for op).
-  * State per key is six longs; the per-record update is O(1).
+  * Because the moments are exact integers and the finalization is the
+  * batch operator's own expressions, the readout after any prefix of the
+  * stream equals [[EventOps.evAbStatsOf]] on that prefix, bit for bit,
+  * whatever the arrival order and batch boundaries.
   */
-class AbStatsProcessor(ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[String, AbEvent, AbReadout] {
-  @transient private var st: ValueState[AbMoments] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[AbMoments]("moments",
-      Encoders.product[AbMoments], ttl)
-
-  override def handleInputRows(key: String, rows: Iterator[AbEvent],
-                               timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[AbReadout] = {
-    var m = if (st.exists()) st.get() else AbMoments(0L, 0L, 0L, 0L, 0L, 0L)
-    rows.foreach { e =>
-      val vq = AbStatsStream.milliQuantize(e.value)
-      if (e.user_id % 2 == 0)
-        m = m.copy(na = m.na + 1, sa = m.sa + vq, ssa = m.ssa + vq * vq)
-      else
-        m = m.copy(nb = m.nb + 1, sb = m.sb + vq, ssb = m.ssb + vq * vq)
-    }
-    st.update(m)
-    AbStatsStream.finalize(key, m).iterator
-  }
-}
-
 object AbStatsStream {
-
-  /** Spark `round(value * 1000)` twin: HALF_UP away from zero. */
-  def milliQuantize(v: Double): Long = {
-    val x = v * 1000.0
-    if (x >= 0) math.floor(x + 0.5).toLong else -math.floor(-x + 0.5).toLong
-  }
-
-  /** The batch operator's finalization, op-for-op (so doubles are
-    * bit-identical with `EventOps.evAbStatsOf` on the same moments);
-    * None when the batch row would be filtered (n ≤ 1 or zero variance).
-    */
-  def finalize(key: String, m: AbMoments): Option[AbReadout] = {
-    if (m.na <= 1 || m.nb <= 1) return None
-    val ma = m.sa.toDouble / m.na.toDouble
-    val mb = m.sb.toDouble / m.nb.toDouble
-    val va = (m.na.toDouble * m.ssa.toDouble - m.sa.toDouble * m.sa.toDouble) /
-      (m.na.toDouble * (m.na - 1).toDouble)
-    val vb = (m.nb.toDouble * m.ssb.toDouble - m.sb.toDouble * m.sb.toDouble) /
-      (m.nb.toDouble * (m.nb - 1).toDouble)
-    val sea = va / m.na.toDouble
-    val seb = vb / m.nb.toDouble
-    val se2 = sea + seb
-    if (!(se2 > 0)) return None
-    Some(AbReadout(key, m.na, m.nb, ma / 1000.0, mb / 1000.0,
-      (ma - mb) / math.sqrt(se2),
-      se2 * se2 / (sea * sea / (m.na - 1).toDouble + seb * seb / (m.nb - 1).toDouble),
-      (m.na - m.nb).toDouble * (m.na - m.nb).toDouble / (m.na + m.nb).toDouble))
-  }
-
   def readouts(ds: Dataset[AbEvent]): Dataset[AbReadout] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.event_type)
-      .transformWithState(new AbStatsProcessor(),
-        TimeMode.None(), OutputMode.Update())
+    EventOps.evAbStatsOf(ds.toDF()).as[AbReadout]
   }
 }

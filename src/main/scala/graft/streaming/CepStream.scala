@@ -70,8 +70,8 @@ class CepProcessor(ttl: TTLConfig = TTLConfig.NONE)
 object CepStream {
 
   /** CEP episodes over a stream of [[CepEvent]]s; emits a [[CepEpisode]]
-    * per match. Requires (and sets) the RocksDB state store provider,
-    * like [[FunnelStream]].
+    * per match. Requires the RocksDB state store provider, like
+    * [[FunnelStream]]; callers opt in with [[StateStores.useRocksDB]].
     */
   def cep(ds: Dataset[CepEvent]): Dataset[CepEpisode] = {
     val spark = ds.sparkSession

@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig}
-import org.apache.spark.sql.streaming.ValueState
-import org.apache.spark.sql.Encoders
+import graft.operators.EventOps
 
 /** A live always-valid readout row for one metric (the batch `ev_ab_seq`
   * row, 1e-6-rounded like it).
@@ -16,71 +14,17 @@ case class SeqReadout(event_type: String, n_a: Long, n_b: Long,
   * it per micro-batch (which is exactly "peeking after every batch") is
   * statistically legal, where streaming the fixed-n Welch t of
   * [[AbStatsStream]] invites the classic early-stopping false-positive
-  * inflation. Same six exact integer moments as state ([[AbMoments]] —
-  * order- and batch-boundary-free), finalized with the batch
-  * `ev_ab_seq` expressions op for op, so the streamed row after any
-  * prefix equals the batch operator on that prefix bit for bit.
+  * inflation. The batch `ev_ab_seq` plan runs as a streaming aggregation
+  * in Update mode: the same six exact integer moments as state (order-
+  * and batch-boundary-free) and the same finalization, so the streamed
+  * row after any prefix equals [[EventOps.evAbSeqOf]] on that prefix
+  * bit for bit. An overflowed likelihood ratio reads lambda = Infinity,
+  * p_seq = 0, as in the batch.
   */
-class SeqTestProcessor(tau2: Double = 10000.0, ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[String, AbEvent, SeqReadout] {
-  @transient private var st: ValueState[AbMoments] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[AbMoments]("moments",
-      Encoders.product[AbMoments], ttl)
-
-  override def handleInputRows(key: String, rows: Iterator[AbEvent],
-                               timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[SeqReadout] = {
-    var m = if (st.exists()) st.get() else AbMoments(0L, 0L, 0L, 0L, 0L, 0L)
-    rows.foreach { e =>
-      val vq = AbStatsStream.milliQuantize(e.value)
-      if (e.user_id % 2 == 0)
-        m = m.copy(na = m.na + 1, sa = m.sa + vq, ssa = m.ssa + vq * vq)
-      else
-        m = m.copy(nb = m.nb + 1, sb = m.sb + vq, ssb = m.ssb + vq * vq)
-    }
-    st.update(m)
-    SeqTestStream.finalize(key, m, tau2).iterator
-  }
-}
-
 object SeqTestStream {
-
-  /** Spark `round(x, 6)` twin (HALF_UP away from zero). Non-finite values
-    * pass through like Spark's `round` (and DuckDB's): on a persistent
-    * strong effect se2 shrinks ~1/n and the LR exponent eventually
-    * overflows lam to +Infinity — the batch twin then emits
-    * lambda=Infinity, p_seq=0, and `BigDecimal(Infinity)` would crash the
-    * monitor exactly at its most significant readout.
-    */
-  private def r6(x: Double): Double =
-    if (java.lang.Double.isFinite(x))
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    else x
-
-  /** The batch `ev_ab_seq` finalization, op-for-op; None when the batch
-    * row would be filtered (n ≤ 1 or zero variance).
-    */
-  def finalize(key: String, m: AbMoments, tau2: Double): Option[SeqReadout] = {
-    if (m.na <= 1 || m.nb <= 1) return None
-    val diff = m.sa.toDouble / m.na.toDouble - m.sb.toDouble / m.nb.toDouble
-    val se2 =
-      (m.na.toDouble * m.ssa.toDouble - m.sa.toDouble * m.sa.toDouble) /
-        (m.na.toDouble * (m.na - 1).toDouble) / m.na.toDouble +
-      (m.nb.toDouble * m.ssb.toDouble - m.sb.toDouble * m.sb.toDouble) /
-        (m.nb.toDouble * (m.nb - 1).toDouble) / m.nb.toDouble
-    if (!(se2 > 0)) return None
-    val lam = math.sqrt(se2 / (se2 + tau2)) *
-      math.exp(diff * diff * tau2 / (2.0 * se2 * (se2 + tau2)))
-    Some(SeqReadout(key, m.na, m.nb,
-      r6(diff / 1000.0), r6(lam), r6(math.min(1.0, 1.0 / lam))))
-  }
-
   def readouts(ds: Dataset[AbEvent]): Dataset[SeqReadout] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.event_type)
-      .transformWithState(new SeqTestProcessor(),
-        TimeMode.None(), OutputMode.Update())
+    EventOps.evAbSeqOf(ds.toDF()).as[SeqReadout]
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.{Dataset, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 import graft.operators.EventOps
@@ -56,12 +57,40 @@ class AbStatsStreamSpec extends SparkSpec {
     }
   }
 
-  test("milliQuantize mirrors Spark round(value*1000) incl. negatives") {
+  test("negative odd ids fall in neither arm in all three monitors, as in the batch") {
+    // user_id % 2 is -1 for users -3 and -5: the batch twins and their
+    // DuckDB oracles count those users in neither arm
     val s = spark
     import s.implicits._
-    val vals = Seq(1.2345, -1.2345, 0.0005, -0.0005, 2.5, -2.5, 99.999, -99.999, 0.0)
-    val sparkSide = vals.toDF("v")
-      .selectExpr("CAST(round(v * 1000) AS BIGINT)").as[Long].collect().toSeq
-    assert(vals.map(AbStatsStream.milliQuantize) == sparkSide)
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val r = new scala.util.Random(17)
+    val obs = for (u <- (0L until 40L) ++ Seq(-3L, -5L); i <- 0 until 4)
+      yield (u, math.floor(r.nextDouble() * 10000) / 100.0, i % 2 == 0)
+    def lastRow[I: Encoder](data: Seq[I], readouts: Dataset[I] => Dataset[_]): Row = {
+      val input = MemoryStream[I]
+      val qn = s"neg_${System.nanoTime()}"
+      val q = readouts(input.toDS())
+        .writeStream.format("memory").queryName(qn).outputMode("update").start()
+      try {
+        r.shuffle(data).grouped(60).foreach { b => input.addData(b); q.processAllAvailable() }
+        spark.table(qn).collect().last
+      } finally q.stop()
+    }
+    withRocksDB {
+      val ab = obs.map { case (u, v, _) => AbEvent("m", u, v) }
+      val stats = EventOps.evAbStatsOf(ab.toDF()).collect().toSeq
+      assert(stats.map(x => (x.getLong(1), x.getLong(2))) == Seq((80L, 80L)))
+      assert(Seq(lastRow(ab, AbStatsStream.readouts)) == stats)
+      assert(Seq(lastRow(ab, SeqTestStream.readouts)) ==
+        EventOps.evAbSeqOf(ab.toDF()).collect().toSeq)
+
+      val cutNs = 1705363200000000L * 1000L // the batch pre/post cutoff
+      val cuped = obs.map { case (u, v, pre) => CupedEvent("m", u, v, pre) }
+      val batch = EventOps.evAbCupedOf(cuped.map(e =>
+          (e.event_type, e.user_id, if (e.pre) cutNs - 1 else cutNs, e.value))
+        .toDF("event_type", "user_id", "ts", "value")).collect().toSeq
+      assert(batch.map(x => (x.getLong(1), x.getLong(2))) == Seq((20L, 20L)))
+      assert(Seq(lastRow(cuped, CupedStream.readouts)) == batch)
+    }
   }
 }

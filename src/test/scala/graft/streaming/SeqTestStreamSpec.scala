@@ -53,19 +53,30 @@ class SeqTestStreamSpec extends SparkSpec {
   }
 
   test("overflowed likelihood ratio emits Infinity/0, never throws") {
-    // a persistent strong effect shrinks se2 ~1/n until the LR exponent
-    // overflows to +Infinity — the monitor must emit the batch twin's
-    // (lambda=Infinity, p_seq=0) row, not crash in BigDecimal(Infinity)
-    val m = AbMoments(na = 100, nb = 100,
-      sa = 100L * 2000000L, sb = 100L * 1000L,
-      // tiny positive within-arm variance: one unit of spread per arm
-      ssa = 99L * 2000000L * 2000000L + 2000001L * 2000001L,
-      ssb = 99L * 1000L * 1000L + 1001L * 1001L)
-    val r = SeqTestStream.finalize("m", m, tau2 = 10000.0)
-    assert(r.nonEmpty)
-    assert(r.get.lambda.isPosInfinity, s"want Infinity, got ${r.get}")
-    assert(r.get.p_seq == 0.0, s"want p_seq 0, got ${r.get}")
-    assert(java.lang.Double.isFinite(r.get.diff))
+    // a persistent strong effect with one milli of spread per arm: diff
+    // = 9000 milli against se2 ≈ 0.005, so the LR exponent (≈ 8e9)
+    // overflows exp to +Infinity — the monitor must emit the batch row
+    // (lambda=Infinity, p_seq=0), not fail the query
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    withRocksDB {
+      val strong = (0L until 200L).map { u =>
+        AbEvent("m", u, (if (u % 2 == 0) 10.0 else 1.0) + (if (u % 4 < 2) 0.0 else 0.001))
+      }
+      val input = MemoryStream[AbEvent]
+      val qn = s"seq_inf_${System.nanoTime()}"
+      val q = SeqTestStream.readouts(input.toDS())
+        .writeStream.format("memory").queryName(qn).outputMode("update").start()
+      try {
+        strong.grouped(100).foreach { b => input.addData(b); q.processAllAvailable() }
+        val r = spark.table(qn).as[SeqReadout].collect().last
+        assert(r.lambda.isPosInfinity, s"want Infinity, got $r")
+        assert(r.p_seq == 0.0, s"want p_seq 0, got $r")
+        assert(r.diff == 9.0, s"want a finite diff of 9, got $r")
+        assert(EventOps.evAbSeqOf(strong.toDF()).as[SeqReadout].collect().toSeq == Seq(r))
+      } finally q.stop()
+    }
   }
 
   test("p_seq only tightens as evidence accumulates on a drifting metric") {
